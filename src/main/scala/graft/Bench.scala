@@ -282,7 +282,6 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val selected = only.fold(headlineQueries)(s => headlineQueries.filter(s))
-      .filter(SparkEntry.queries.contains)
 
     val inProcess = sys.env.contains("SPARK_GRAFT_FORKED") ||
       sys.env.get("SPARK_GRAFT_FORK").contains("0")

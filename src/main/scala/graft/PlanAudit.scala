@@ -35,8 +35,7 @@ object PlanAudit {
     def count(hay: String, needle: String): Int =
       needle.r.findAllIn(hay).length
 
-    val names = Bench.headlineQueries.filter(SparkEntry.queries.contains)
-    val rows = names.flatMap { name =>
+    val rows = Bench.headlineQueries.flatMap { name =>
       try {
         val plan = SparkEntry.queries(name)(spark, sfDir)
           .queryExecution.executedPlan.toString

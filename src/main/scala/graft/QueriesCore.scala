@@ -7,7 +7,8 @@ import graft.ops.Expressions._
 /** Core relational operator catalog: one runnable query per SURVEY.md §2
   * operator family (scans S, filters F, projections P, scalar ops X, joins J,
   * aggregations A, ordering O, plus window functions), each phrased over the
-  * harness tables with a DuckDB-equivalent oracle in [[QueriesCore.oracles]].
+  * harness tables and declared as a [[QuerySpec]] with its DuckDB-equivalent
+  * oracle.
   *
   * Oracle-parity conventions (applies to the whole catalog):
   *   - deterministic ORDER BY (with tie-breaks) on both sides;
@@ -20,8 +21,6 @@ import graft.ops.Expressions._
   */
 object QueriesCore {
   import Tables._
-
-  type Q = (SparkSession, String) => DataFrame
 
   /** Flagship: TPC-H-Q1-style pricing summary. Money sums go through
     * decimal(18,2)/(18,6) so partial-aggregation order can't perturb the
@@ -111,14 +110,47 @@ object QueriesCore {
       .agg(min(col("unit_cost")).as("ps_supplycost"),
         sum(col("l_quantity")).as("ps_availqty"))
 
-  val queries: Map[String, Q] = Map(
-    "q1_pricing_summary" -> (pricingSummary _),
-    "q3_shipping_priority" -> (shippingPriority _),
-    "q5_region_volume" -> (regionVolume _),
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("q1_pricing_summary", pricingSummary,
+      Some("""SELECT l_returnflag, l_linestatus,
+        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    AS sum_base_price,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
+        |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+        |    / COUNT(*), 4) AS avg_qty,
+        |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+        |    / COUNT(*), 4) AS avg_price,
+        |  COUNT(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+    QuerySpec("q3_shipping_priority", shippingPriority,
+      Some("""SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM customer, orders, lineitem
+        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
+        |  AND l_orderkey = o_orderkey
+        |  AND o_orderdate < TIMESTAMP '1995-03-15'
+        |  AND l_shipdate > TIMESTAMP '1995-03-15'
+        |GROUP BY o_orderkey, orderdate
+        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin)),
+    QuerySpec("q5_region_volume", regionVolume,
+      Some("""SELECT n_name,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM region, nation, supplier, lineitem
+        |WHERE r_name = 'ASIA' AND r_regionkey = n_regionkey
+        |  AND n_nationkey = s_nationkey AND l_suppkey = s_suppkey
+        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin)),
 
     // TPC-H Q6 shape: pure scan-side predicate work — all three range
     // filters reach the parquet scan (PushedFilters), one partial agg
-    "q6_revenue_delta" -> ((s, d) =>
+    QuerySpec("q6_revenue_delta", (s, d) =>
       lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1994-01-01") &&
           col("l_shipdate") < lit("1995-01-01") &&
@@ -126,11 +158,17 @@ object QueriesCore {
           col("l_quantity") < 24)
         .agg(round(sum((col("l_extendedprice") * col("l_discount"))
             .cast("decimal(18,6)")).cast("double"), 2).as("revenue"),
-          count(lit(1)).as("n"))),
+          count(lit(1)).as("n")),
+      Some("""SELECT ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
+        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
+        |  COUNT(*) AS n
+        |FROM lineitem
+        |WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-01-01'
+        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin)),
 
     // TPC-H Q14 shape: conditional aggregation — class share of revenue;
     // the (small) part dimension is broadcast
-    "q14_class_share" -> ((s, d) => {
+    QuerySpec("q14_class_share", (s, d) => {
       val disc = (col("l_extendedprice") * (lit(1) - col("l_discount")))
         .cast("decimal(18,6)")
       lineitem(s, d)
@@ -140,14 +178,22 @@ object QueriesCore {
           (sum(when(col("p_type") === "ECONOMY", disc)
             .otherwise(lit(0).cast("decimal(18,6)"))) * 100 / sum(disc))
             .cast("double"), 4).as("economy_share_pct"))
-    }),
+    },
+      Some("""SELECT ROUND(CAST(
+        |    SUM(CASE WHEN p_type = 'ECONOMY'
+        |        THEN CAST(l_extendedprice * (1 - l_discount)
+        |             AS DECIMAL(18,6))
+        |        ELSE CAST(0 AS DECIMAL(18,6)) END) * 100
+        |    / SUM(CAST(l_extendedprice * (1 - l_discount)
+        |          AS DECIMAL(18,6))) AS DOUBLE), 4) AS economy_share_pct
+        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin)),
 
     // TPC-H Q4 shape: existential semi-join between two fact tables —
     // orders LEFT SEMI lineitem on the order key with a cross-side
     // inequality residual (late shipment: shipped >90 days after the
     // order date). Both sides shuffle on the shared key once; the
     // residual evaluates in-task, and the priority census agg is tiny.
-    "q4_order_priority" -> ((s, d) => {
+    QuerySpec("q4_order_priority", (s, d) => {
       val o = orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-01-01") &&
           col("o_orderdate") < lit("1997-01-01"))
@@ -161,14 +207,22 @@ object QueriesCore {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("order_count"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS order_count
+        |FROM orders o
+        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |  AND EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_orderkey = o.o_orderkey
+        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // TPC-H Q10 shape: returned-item revenue by customer. Revenue is
     // aggregated down to custkey BEFORE touching the customer dimension,
     // so the dimension join sees one row per returning customer; customer
     // carries no broadcast hint (at crawl scale it is too big to force —
     // AQE sizes it), only the genuinely tiny nation dim is hinted.
-    "q10_returned_revenue" -> ((s, d) => {
+    QuerySpec("q10_returned_revenue", (s, d) => {
       val o = orders(s, d)
         .filter(col("o_orderdate") >= lit("1996-01-01") &&
           col("o_orderdate") < lit("1997-01-01"))
@@ -189,13 +243,23 @@ object QueriesCore {
           col("n_name").as("nation"), col("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey"))
         .limit(20)
-    }),
+    },
+      Some("""SELECT c_custkey, c_name, n_name AS nation,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM customer, orders, lineitem, nation
+        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
+        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
+        |GROUP BY c_custkey, c_name, n_name
+        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin)),
 
     // TPC-H Q18 shape: large-order detection — groupBy-HAVING over the
     // fact table shrinks to ~1% of orders (map-side combinable), and only
     // that survivor relation joins back to orders/customer (AQE picks
     // broadcast for it at any corpus size; no manual hints needed).
-    "q18_large_orders" -> ((s, d) => {
+    QuerySpec("q18_large_orders", (s, d) => {
       val big = lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(sum(col("l_quantity").cast("decimal(18,2)")).as("qsum"))
@@ -209,7 +273,18 @@ object QueriesCore {
           col("qsum").cast("double").as("total_qty"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey"))
         .limit(100)
-    }),
+    },
+      Some("""WITH big AS (
+        |  SELECT l_orderkey,
+        |         SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qsum
+        |  FROM lineitem GROUP BY l_orderkey
+        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
+        |SELECT c_name, c_custkey, o_orderkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_totalprice,
+        |  CAST(qsum AS DOUBLE) AS total_qty
+        |FROM big JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
 
     // TPC-H Q17 shape — correlated scalar subquery (per-part average
     // quantity threshold), phrased in SQL so Catalyst's decorrelation does
@@ -218,7 +293,7 @@ object QueriesCore {
     // aggregate-below-join shape and the absence of any nested-loop join).
     // At 100 TB the decorrelated form is the only viable one — the naive
     // interpretation re-reads lineitem once per outer row.
-    "q17_small_qty_revenue" -> ((s, d) => {
+    QuerySpec("q17_small_qty_revenue", (s, d) => {
       lineitem(s, d).createOrReplaceTempView("q17_lineitem")
       part(s, d).createOrReplaceTempView("q17_part")
       s.sql("""
@@ -229,14 +304,21 @@ object QueriesCore {
           AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
                             FROM q17_lineitem l2
                             WHERE l2.l_partkey = p_partkey)""")
-    }),
+    },
+      Some("""SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
+        |         AS DOUBLE) / 7.0, 2) AS avg_yearly
+        |FROM lineitem JOIN part ON p_partkey = l_partkey
+        |WHERE p_size <= 10
+        |  AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
+        |                    FROM lineitem l2
+        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin)),
 
     // TPC-H Q22 shape — scalar subquery (global average balance) + NOT
     // EXISTS anti join, in SQL for the decorrelation surface: the EXISTS
     // becomes a LEFT ANTI hash join on custkey with the totalprice filter
     // pushed below it, and the scalar average is computed once and
     // broadcast into the filter (PlansSpec locks both).
-    "q22_idle_rich_customers" -> ((s, d) => {
+    QuerySpec("q22_idle_rich_customers", (s, d) => {
       customer(s, d).createOrReplaceTempView("q22_customer")
       orders(s, d).createOrReplaceTempView("q22_orders")
       s.sql("""
@@ -250,7 +332,17 @@ object QueriesCore {
                           WHERE o.o_custkey = c.c_custkey
                             AND o.o_totalprice > 430000)
         GROUP BY c_mktsegment ORDER BY c_mktsegment""")
-    }),
+    },
+      Some("""SELECT c_mktsegment, COUNT(*) AS numcust,
+        |       ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2)))
+        |         AS DOUBLE), 2) AS totacctbal
+        |FROM customer c
+        |WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
+        |                   WHERE c_acctbal > 0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders o
+        |                  WHERE o.o_custkey = c.c_custkey
+        |                    AND o.o_totalprice > 430000)
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
     // TPC-H Q19 shape — a disjunction of brand/size/quantity branch
     // predicates over an equi-join: the optimizer must split the OR into
@@ -259,7 +351,7 @@ object QueriesCore {
     // join sees pre-filtered inputs instead of filtering after the fact —
     // at 100 TB the difference between scanning 3 brands and scanning the
     // whole part table. PlansSpec locks the pushed Or on the part scan.
-    "q19_disjunctive_revenue" -> ((s, d) => {
+    QuerySpec("q19_disjunctive_revenue", (s, d) => {
       val li = lineitem(s, d)
       val p = part(s, d)
       val branch1 = col("p_brand") === "Brand#12" &&
@@ -273,7 +365,17 @@ object QueriesCore {
         .agg(count(lit(1)).as("n_lines"),
           round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,6)")).cast("double"), 2).as("revenue"))
-    }),
+    },
+      Some("""SELECT COUNT(*) AS n_lines,
+        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
+        |       AND l_quantity BETWEEN 1 AND 11)
+        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
+        |       AND l_quantity BETWEEN 10 AND 20)
+        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
+        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin)),
 
     // TPC-H Q7 shape: volume shipping between a nation pair by year —
     // the fact joins shuffle on their keys (supplier⋈lineitem⋈orders⋈
@@ -281,7 +383,7 @@ object QueriesCore {
     // applies to the BROADCAST sides so the big joins see pre-filtered
     // dimensions (supplier/customer rows outside the two nations drop at
     // the map side, not after the 4-way join).
-    "q7_volume_shipping" -> ((s, d) => {
+    QuerySpec("q7_volume_shipping", (s, d) => {
       val n1 = broadcast(nation(s, d)
         .filter(col("n_name").isin("NATION_1", "NATION_2"))
         .select(col("n_nationkey").as("s_nk"), col("n_name").as("supp_nation")))
@@ -305,14 +407,30 @@ object QueriesCore {
         .agg(round(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast("decimal(18,6)")).cast("double"), 2).as("revenue"))
         .orderBy(col("supp_nation"), col("cust_nation"), col("l_year"))
-    }),
+    },
+      Some("""SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
+        |  CAST(YEAR(l_shipdate) AS BIGINT) AS l_year,
+        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
+        |FROM lineitem
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
+        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND n1.n_name IN ('NATION_1', 'NATION_2')
+        |  AND n2.n_name IN ('NATION_1', 'NATION_2')
+        |  AND n1.n_name <> n2.n_name
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin)),
 
     // TPC-H Q8 shape: national market share inside a region for one part
     // type — the classic conditional-share aggregate over a 6-way join.
     // Region/nation are broadcast; part is filtered to one type BEFORE
     // its join (scan-side predicate), so the lineitem⋈part join is the
     // first thing that shrinks the fact table.
-    "q8_market_share" -> ((s, d) => {
+    QuerySpec("q8_market_share", (s, d) => {
       val asiaNations = broadcast(nation(s, d)
         .join(broadcast(region(s, d).filter(col("r_name") === "ASIA")),
           col("n_regionkey") === col("r_regionkey"))
@@ -343,14 +461,33 @@ object QueriesCore {
             .otherwise(lit(0).cast("decimal(18,6)"))) * 100 / sum(vol))
           .cast("double"), 4).as("mkt_share_pct"))
         .orderBy(col("o_year"))
-    }),
+    },
+      Some("""SELECT CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
+        |  ROUND(CAST(SUM(CASE WHEN n2.n_name = 'NATION_7'
+        |        THEN CAST(l_extendedprice * (1 - l_discount)
+        |             AS DECIMAL(18,6))
+        |        ELSE CAST(0 AS DECIMAL(18,6)) END) * 100
+        |    / SUM(CAST(l_extendedprice * (1 - l_discount)
+        |          AS DECIMAL(18,6))) AS DOUBLE), 4) AS mkt_share_pct
+        |FROM lineitem
+        |JOIN part ON l_partkey = p_partkey
+        |JOIN orders ON l_orderkey = o_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
+        |JOIN region ON n1.n_regionkey = r_regionkey
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
+        |WHERE p_type = 'PROMO' AND r_name = 'ASIA'
+        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
+        |  AND o_orderdate < TIMESTAMP '1997-01-01'
+        |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // TPC-H Q13 shape: customer order-count distribution — a LEFT join
     // (customers with zero orders must survive) aggregated twice: first
     // per customer (map-side combinable on the join key), then the tiny
     // count-of-counts census. The priority exclusion plays Q13's comment
     // filter and is pushed to the orders scan.
-    "q13_custdist" -> ((s, d) => {
+    QuerySpec("q13_custdist", (s, d) => {
       val o = orders(s, d)
         .filter(col("o_orderpriority") =!= "1-URGENT")
         .select(col("o_custkey"), col("o_orderkey"))
@@ -361,7 +498,15 @@ object QueriesCore {
         .groupBy(col("c_count"))
         .agg(count(lit(1)).as("custdist"))
         .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
+    },
+      Some("""WITH per_cust AS (
+        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
+        |  FROM customer LEFT JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
+        |  GROUP BY c_custkey)
+        |SELECT c_count, COUNT(*) AS custdist
+        |FROM per_cust GROUP BY c_count
+        |ORDER BY custdist DESC, c_count DESC""".stripMargin)),
 
     // TPC-H Q15 shape: top revenue supplier(s) — the per-supplier revenue
     // view joined against its own MAX as a one-row broadcast (decimal
@@ -369,7 +514,7 @@ object QueriesCore {
     // aggregates the fact table down to |supplier| rows before anything
     // joins; the max is a second pass over that small relation, never
     // over lineitem.
-    "q15_top_supplier" -> ((s, d) => {
+    QuerySpec("q15_top_supplier", (s, d) => {
       val rev = lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1996-01-01") &&
           col("l_shipdate") < lit("1996-04-01"))
@@ -383,7 +528,20 @@ object QueriesCore {
         .select(col("s_suppkey"), col("s_name"),
           round(col("total_rev").cast("double"), 2).as("total_revenue"))
         .orderBy(col("s_suppkey"))
-    }),
+    },
+      Some("""WITH rev AS (
+        |  SELECT l_suppkey,
+        |         SUM(CAST(l_extendedprice * (1 - l_discount)
+        |             AS DECIMAL(18,6))) AS total_rev
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  GROUP BY l_suppkey)
+        |SELECT s_suppkey, s_name,
+        |       ROUND(CAST(total_rev AS DOUBLE), 2) AS total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
+        |ORDER BY s_suppkey""".stripMargin)),
 
     // TPC-H Q21 shape (adapted: lateness = shipped >60 days after the
     // order date, since this schema carries no commit/receipt dates):
@@ -394,7 +552,7 @@ object QueriesCore {
     // distinct suppliers and distinct LATE suppliers aggregate together
     // over the same l_orderkey shuffle, and the (n_late = 1 AND
     // n_supp ≥ 2) filter replays both subqueries from the census row.
-    "q21_waiting_suppliers" -> ((s, d) => {
+    QuerySpec("q21_waiting_suppliers", (s, d) => {
       val o = orders(s, d).filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), col("o_orderdate"))
       val lines = lineitem(s, d)
@@ -417,7 +575,22 @@ object QueriesCore {
         .agg(count(lit(1)).as("numwait"))
         .orderBy(col("numwait").desc, col("s_suppkey"))
         .limit(25)
-    }),
+    },
+      Some("""WITH late AS (
+        |  SELECT DISTINCT l_orderkey, l_suppkey
+        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |  WHERE o_orderstatus = 'F'
+        |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+        |SELECT s_suppkey, s_name, COUNT(*) AS numwait
+        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
+        |WHERE EXISTS (SELECT 1 FROM lineitem l2
+        |              WHERE l2.l_orderkey = l1.l_orderkey
+        |                AND l2.l_suppkey <> l1.l_suppkey)
+        |  AND NOT EXISTS (SELECT 1 FROM late l3
+        |                  WHERE l3.l_orderkey = l1.l_orderkey
+        |                    AND l3.l_suppkey <> l1.l_suppkey)
+        |GROUP BY s_suppkey, s_name
+        |ORDER BY numwait DESC, s_suppkey LIMIT 25""".stripMargin)),
 
     // TPC-H Q2 shape (adapted: this schema has no partsupp table, so the
     // part-supplier relation derives from lineitem — see [[partSupp]]):
@@ -430,7 +603,7 @@ object QueriesCore {
     // match is exact, no epsilon. At 100 TB the derived ps relation is ONE
     // map-side-combined aggregate of the fact table, and the dimension
     // chain (supplier⋈nation⋈region) broadcasts into both branches.
-    "q2_min_cost_supplier" -> ((s, d) => {
+    QuerySpec("q2_min_cost_supplier", (s, d) => {
       // the textbook form references ps from both the outer join and the
       // correlated subquery — persisting the (part, supp)-sized derived
       // relation makes that ONE fact scan + two cache reads instead of
@@ -458,7 +631,27 @@ object QueriesCore {
             JOIN q2_region r2 ON n2.n_regionkey = r2.r_regionkey
             WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')
         ORDER BY s_acctbal DESC, n_name, s_name, p_partkey LIMIT 100""")
-    }),
+    },
+      Some("""WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
+        |       ROUND(ps_supplycost, 2) AS min_cost
+        |FROM ps
+        |JOIN part ON p_partkey = ps_partkey
+        |JOIN supplier ON s_suppkey = ps_suppkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE p_size = 15 AND r_name = 'EUROPE'
+        |  AND ps_supplycost = (
+        |    SELECT MIN(ps2.ps_supplycost) FROM ps ps2
+        |    JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
+        |    JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
+        |    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
+        |    WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')
+        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
+        |LIMIT 100""".stripMargin)),
 
     // TPC-H Q9 shape: profit by supplier nation × order year over a
     // part-name filter. The derived ps cost relation joins the fact scan
@@ -466,7 +659,7 @@ object QueriesCore {
     // into BOTH the fact scan and (transitively) the ps aggregate, so
     // neither side carries non-matching parts to the shuffle. Money math
     // in decimal(18,6) — partial-agg order cannot perturb the sum.
-    "q9_product_profit" -> ((s, d) => {
+    QuerySpec("q9_product_profit", (s, d) => {
       val redParts = broadcast(part(s, d)
         .filter(col("p_name").like("red%")).select(col("p_partkey")))
       val ps = partSupp(s, d)
@@ -491,7 +684,24 @@ object QueriesCore {
           year(col("o_orderdate")).cast("long").as("o_year"))
         .agg(round(sum(profit).cast("double"), 2).as("sum_profit"))
         .orderBy(col("nation"), col("o_year"))
-    }),
+    },
+      Some("""WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT n_name AS nation,
+        |  CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
+        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    - ps_supplycost * l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2)
+        |    AS sum_profit
+        |FROM lineitem
+        |JOIN ps ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
+        |JOIN part ON p_partkey = l_partkey
+        |JOIN supplier ON s_suppkey = l_suppkey
+        |JOIN orders ON o_orderkey = l_orderkey
+        |JOIN nation ON s_nationkey = n_nationkey
+        |WHERE p_name LIKE 'red%'
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 
     // TPC-H Q11 shape: per-part inventory value within one region,
     // kept where the value exceeds a fixed fraction of the global total —
@@ -501,7 +711,7 @@ object QueriesCore {
     // value math stays in exact decimal INCLUDING the 0.001 fraction (a
     // decimal literal, not a double), so the boundary comparison is
     // bit-deterministic on both engines.
-    "q11_important_stock" -> ((s, d) => {
+    QuerySpec("q11_important_stock", (s, d) => {
       val asiaSupp = broadcast(supplier(s, d)
         .join(broadcast(nation(s, d)
           .select(col("n_nationkey"), col("n_regionkey"))),
@@ -527,7 +737,24 @@ object QueriesCore {
         .select(col("ps_partkey"),
           round(col("v").cast("double"), 2).as("value"))
         .orderBy(col("value").desc, col("ps_partkey"))
-    }),
+    },
+      Some("""WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost,
+        |         SUM(l_quantity) AS ps_availqty
+        |  FROM lineitem GROUP BY 1, 2),
+        |val AS (
+        |  SELECT ps_partkey,
+        |         SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(18,6)))
+        |           AS v
+        |  FROM ps JOIN supplier ON ps_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey
+        |  JOIN region ON n_regionkey = r_regionkey
+        |  WHERE r_name = 'ASIA'
+        |  GROUP BY ps_partkey)
+        |SELECT ps_partkey, ROUND(CAST(v AS DOUBLE), 2) AS value
+        |FROM val WHERE v > (SELECT SUM(v) * 0.001 FROM val)
+        |ORDER BY value DESC, ps_partkey""".stripMargin)),
 
     // TPC-H Q16 shape: distinct-supplier census per (brand, type, size)
     // excluding flagged suppliers — the NOT-IN is the non-null-key case,
@@ -535,7 +762,7 @@ object QueriesCore {
     // nested-loop fallback never fires; PlansSpec locks it). The
     // count-distinct shuffles on the small composite group key only after
     // the part filter broadcasts into the ps relation.
-    "q16_supplier_relationship" -> ((s, d) => {
+    QuerySpec("q16_supplier_relationship", (s, d) => {
       val flagged = broadcast(supplier(s, d)
         .filter(col("s_acctbal") < 0).select(col("s_suppkey")))
       val p = broadcast(part(s, d)
@@ -550,7 +777,20 @@ object QueriesCore {
         .agg(count_distinct(col("ps_suppkey")).as("supplier_cnt"))
         .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_type"),
           col("p_size"))
-    }),
+    },
+      Some("""WITH ps AS (
+        |  SELECT DISTINCT l_partkey AS ps_partkey,
+        |         l_suppkey AS ps_suppkey
+        |  FROM lineitem)
+        |SELECT p_brand, p_type, p_size,
+        |       COUNT(DISTINCT ps_suppkey) AS supplier_cnt
+        |FROM ps JOIN part ON p_partkey = ps_partkey
+        |WHERE p_brand <> 'Brand#3' AND p_type <> 'PROMO'
+        |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
+        |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
+        |                         WHERE s_acctbal < 0)
+        |GROUP BY 1, 2, 3
+        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin)),
 
     // TPC-H Q20 shape — nested IN subqueries with a correlated aggregate
     // threshold, in SQL for the decorrelation surface: the inner
@@ -559,7 +799,7 @@ object QueriesCore {
     // IN subqueries become semi joins (PlansSpec locks no surviving
     // subquery and no nested loop). Quantities are integral, so the
     // 2×SUM(double) threshold is exact on both engines.
-    "q20_potential_promotion" -> ((s, d) => {
+    QuerySpec("q20_potential_promotion", (s, d) => {
       partSupp(s, d).createOrReplaceTempView("q20_ps")
       part(s, d).createOrReplaceTempView("q20_part")
       supplier(s, d).createOrReplaceTempView("q20_supplier")
@@ -582,11 +822,30 @@ object QueriesCore {
                   AND l.l_shipdate >= TIMESTAMP '1996-01-01'
                   AND l.l_shipdate < TIMESTAMP '1997-01-01'))
         ORDER BY s_suppkey""")
-    }),
+    },
+      Some("""WITH ps AS (
+        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
+        |         SUM(l_quantity) AS ps_availqty
+        |  FROM lineitem GROUP BY 1, 2)
+        |SELECT s_suppkey, s_name FROM supplier
+        |JOIN nation ON s_nationkey = n_nationkey
+        |JOIN region ON n_regionkey = r_regionkey
+        |WHERE r_name = 'EUROPE'
+        |  AND s_suppkey IN (
+        |    SELECT ps_suppkey FROM ps
+        |    WHERE ps_partkey IN (SELECT p_partkey FROM part
+        |                         WHERE p_name LIKE 'red%')
+        |      AND ps_availqty > (
+        |        SELECT 2 * SUM(l.l_quantity) FROM lineitem l
+        |        WHERE l.l_partkey = ps_partkey
+        |          AND l.l_suppkey = ps_suppkey
+        |          AND l.l_shipdate >= TIMESTAMP '1996-01-01'
+        |          AND l.l_shipdate < TIMESTAMP '1997-01-01'))
+        |ORDER BY s_suppkey""".stripMargin)),
 
     // heavy-hitters sketch over an unbounded-domain column (approximate
     // lower-bound counts by construction → rows-only check)
-    "a4b_heavy_hitters" -> ((s, d) => {
+    QuerySpec("a4b_heavy_hitters", (s, d) => {
       val ev = events(s, d)
       val hh = ev
         .select(org.apache.spark.sql.functions.map_entries(
@@ -619,11 +878,13 @@ object QueriesCore {
 
     // ---- S: scans ---------------------------------------------------------
     // S2/S3 — projected scan: column pruning + predicate pushed to parquet.
-    "s2_scan_project" -> ((s, d) =>
+    QuerySpec("s2_scan_project", (s, d) =>
       lineitem(s, d)
         .filter(col("l_quantity") > 45)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
+      Some("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |WHERE l_quantity > 45 ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin)),
 
     // S5 — data-lake sink round trip: write events Hive-partitioned by
     // event date (Load.partitionedParquet, ts-clustered within partitions),
@@ -632,7 +893,7 @@ object QueriesCore {
     // the aggregate oracle-checked against the same filter on the source.
     // The min-date literal is one driver round-trip (the data-dependent
     // predicate decision, same pattern as P1's null-ratio pruning).
-    "s5_lake_roundtrip" -> ((s, d) => {
+    QuerySpec("s5_lake_roundtrip", (s, d) => {
       val tmp = Scratch.dir("lake")
       val ev = events(s, d)
         .withColumn("date", to_date(col("ts")).cast("string"))
@@ -643,14 +904,21 @@ object QueriesCore {
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("sum_value"))
         .withColumn("part_date", lit(minDate))
-    }),
+    },
+      Some("""WITH src AS (SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS date,
+        |                    value
+        |             FROM events),
+        |m AS (SELECT MIN(date) AS d FROM src)
+        |SELECT COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value,
+        |       MIN(m.d) AS part_date
+        |FROM src, m WHERE src.date = m.d""".stripMargin)),
 
     // S6 — ORC round trip: the same lake-sink contract as S5 on Spark's
     // second built-in columnar format (zero extra dependencies). Write
     // the projected event relation as ORC, read it back, aggregate — the
     // oracle recomputes from the parquet source, so the entry proves the
     // ORC path is lossless for the projected types end to end.
-    "s6_orc_roundtrip" -> ((s, d) => {
+    QuerySpec("s6_orc_roundtrip", (s, d) => {
       val tmp = Scratch.dir("orc")
       events(s, d)
         .select(col("event_id"), col("event_type"), col("value"))
@@ -660,7 +928,10 @@ object QueriesCore {
         .agg(count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("sum_value"))
         .orderBy(col("event_type"))
-    }),
+    },
+      Some("""SELECT event_type, COUNT(*) AS n,
+        |       ROUND(SUM(value), 2) AS sum_value
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // S7 — JSONL round trip: training corpora interchange as
     // newline-delimited JSON, so the sink/source pair must be lossless for
@@ -671,7 +942,7 @@ object QueriesCore {
     // parallelism at 100 TB is the same splittable-files story as
     // parquet (JSONL splits on line boundaries); schema comes from one
     // inference pass here, a user-supplied schema in production.
-    "s7_jsonl_roundtrip" -> ((s, d) => {
+    QuerySpec("s7_jsonl_roundtrip", (s, d) => {
       val tmp = Scratch.dir("jsonl")
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
@@ -682,7 +953,11 @@ object QueriesCore {
           sum(col("doc_id")).as("id_sum"),
           sum(length(col("text"))).as("chars"))
         .orderBy(col("lang"))
-    }),
+    },
+      Some("""SELECT lang, COUNT(*) AS n_docs,
+        |       CAST(SUM(doc_id) AS BIGINT) AS id_sum,
+        |       CAST(SUM(length(text)) AS BIGINT) AS chars
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // S8 — schema-evolution read: two shard generations of the same
     // table, the newer one carrying an extra column, merge under
@@ -691,7 +966,7 @@ object QueriesCore {
     // columns without rewriting history. The per-generation null
     // accounting is what the merged read must get right, and the oracle
     // recomputes it from the source with the same % 2 split.
-    "s8_schema_evolution" -> ((s, d) => {
+    QuerySpec("s8_schema_evolution", (s, d) => {
       val tmp = Scratch.dir("evolve")
       val p = part(s, d)
       p.filter(col("p_partkey") % 2 === 0)
@@ -708,7 +983,15 @@ object QueriesCore {
           round(sum(coalesce(col("p_retailprice"), lit(0.0))), 2)
             .as("price_sum"))
         .orderBy(col("gen"))
-    }),
+    },
+      Some(
+        """SELECT CAST(CASE WHEN p_partkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT)
+        |         AS gen,
+        |       COUNT(*) AS n,
+        |       COUNT(CASE WHEN p_partkey % 2 = 1 THEN 1 END) AS n_priced,
+        |       ROUND(SUM(CASE WHEN p_partkey % 2 = 1 THEN p_retailprice
+        |                      ELSE 0 END), 2) AS price_sum
+        |FROM part GROUP BY 1 ORDER BY gen""".stripMargin)),
 
     // S9 — CSV round trip: the reference's interchange format on the
     // write side too. Explicit read schema (the production pattern — no
@@ -717,7 +1000,7 @@ object QueriesCore {
     // header/quoting/typing survive the trip. This corpus needs no
     // multiLine quoting (no embedded newlines) — at scale that matters,
     // because multiLine CSV is unsplittable.
-    "s9_csv_roundtrip" -> ((s, d) => {
+    QuerySpec("s9_csv_roundtrip", (s, d) => {
       val tmp = Scratch.dir("csv")
       documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("text"))
@@ -730,7 +1013,11 @@ object QueriesCore {
           sum(col("doc_id")).as("id_sum"),
           sum(length(col("text"))).as("chars"))
         .orderBy(col("lang"))
-    }),
+    },
+      Some("""SELECT lang, COUNT(*) AS n_docs,
+        |       CAST(SUM(doc_id) AS BIGINT) AS id_sum,
+        |       CAST(SUM(length(text)) AS BIGINT) AS chars
+        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin)),
 
     // S10 — small-file compaction (the lakehouse OPTIMIZE): a 64-file
     // landing zone (the streaming-ingest pathology — every micro-batch a
@@ -742,7 +1029,7 @@ object QueriesCore {
     // SQL); the layout half — a strictly smaller file count and zero row
     // drift — is enforced in-query (a violated layout contract throws,
     // which the verify driver records as an err, never a silent green).
-    "s10_compaction" -> ((s, d) => {
+    QuerySpec("s10_compaction", (s, d) => {
       val tmp = Scratch.dir("compact")
       documents(s, d).repartition(64)
         .write.mode("overwrite").parquet(s"$tmp/small")
@@ -766,7 +1053,12 @@ object QueriesCore {
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // content half of the compaction contract: the rewritten relation is
+      // exactly the source table (the layout half — fewer files, zero row
+      // drift — is enforced in-query and cannot be expressed as SQL)
+      Some("""SELECT doc_id, text, lang, source, n_chars
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // J9 — join-driven dynamic partition pruning over the lake layout:
     // the fact side is the date-partitioned parquet from the S5 sink, the
@@ -775,7 +1067,7 @@ object QueriesCore {
     // DynamicPruningExpression into the fact scan (asserted in PlansSpec)
     // — at 100 TB the runtime-built date filter skips whole partitions
     // the dim never mentions, without any literal predicate in the query.
-    "j9_partition_pruned_join" -> ((s, d) => {
+    QuerySpec("j9_partition_pruned_join", (s, d) => {
       val tmp = Scratch.dir("dpp")
       val ev = events(s, d)
         .withColumn("date", to_date(col("ts")).cast("string"))
@@ -789,7 +1081,15 @@ object QueriesCore {
         .agg(count(lit(1)).as("n_events"),
           round(sum(col("value")), 2).as("sum_value"))
         .withColumn("cutoff_date", lit(cutoff))
-    }),
+    },
+      Some("""WITH src AS (SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS date,
+        |                    value
+        |             FROM events),
+        |dates AS (SELECT DISTINCT date FROM src ORDER BY date LIMIT 3),
+        |cut AS (SELECT MAX(date) AS c FROM dates)
+        |SELECT COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value,
+        |       MIN(cut.c) AS cutoff_date
+        |FROM src, cut WHERE src.date <= cut.c""".stripMargin)),
 
     // J10 — bucketed co-located join: both sides are written as
     // parquet tables bucketed (and sorted) on the join key, so the join
@@ -798,7 +1098,7 @@ object QueriesCore {
     // re-shuffling the corpus every query (PlansSpec asserts the bucketed
     // scan + exchange-free join). The unique table tag is driver-side
     // naming only; results are data-deterministic.
-    "j10_bucketed_join" -> ((s, d) => {
+    QuerySpec("j10_bucketed_join", (s, d) => {
       val tag = java.util.UUID.randomUUID.toString.replace("-", "")
         .take(8)
       val dir = Scratch.dir("buckets")
@@ -820,7 +1120,12 @@ object QueriesCore {
           sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,6)")).cast("double").as("revenue"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n,
+        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // J11 — runtime bloom-filter join: when the selective filter sits on
     // the CREATION side of a shuffle join, Catalyst's InjectRuntimeFilter
@@ -834,7 +1139,7 @@ object QueriesCore {
     // leak into other entries' plans. PlansSpec asserts the
     // bloom_filter_agg / might_contain pair; the oracle is the plain
     // join aggregate, so correctness is filter-transparent.
-    "j11_bloom_filter_join" -> ((s, d) => {
+    QuerySpec("j11_bloom_filter_join", (s, d) => {
       val s2 = s.newSession()
       s2.conf.set("spark.sql.session.timeZone", "UTC")
       s2.conf.set("spark.sql.shuffle.partitions",
@@ -854,75 +1159,103 @@ object QueriesCore {
           sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
             .cast("decimal(18,6)")).cast("double").as("revenue"))
         .orderBy(col("o_orderpriority"))
-    }),
+    },
+      Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
+        |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
+        |                     AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |WHERE o_totalprice > 450000
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // ---- F: filters -------------------------------------------------------
     // F1 — compound key-existence style predicate (challenge.py:55-58 shape).
-    "f1_key_existence" -> ((s, d) =>
+    QuerySpec("f1_key_existence", (s, d) =>
       events(s, d)
         .filter((col("event_type") === "click" || col("event_type") === "view")
           && col("props").isNotNull && col("user_id").isNotNull)
         .select(col("event_id"), col("event_type"), col("user_id"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id, event_type, user_id FROM events
+        |WHERE event_type IN ('click','view') AND props IS NOT NULL
+        |  AND user_id IS NOT NULL ORDER BY event_id""".stripMargin)),
 
     // F2 — string-equality filter then drop the filter column
     // (challenge.py:207: adult == "False").
-    "f2_equality_drop" -> ((s, d) =>
+    QuerySpec("f2_equality_drop", (s, d) =>
       orders(s, d)
         .filter(col("o_orderstatus") === "F")
         .drop("o_orderstatus")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      Some("""SELECT o_orderkey, o_custkey, o_totalprice FROM orders
+        |WHERE o_orderstatus = 'F' ORDER BY o_orderkey""".stripMargin)),
 
     // F3 — null filter (challenge.py:115 dropna analogue).
-    "f3_null_filter" -> ((s, d) =>
+    QuerySpec("f3_null_filter", (s, d) =>
       events(s, d)
         .filter(col("value").isNotNull && col("props").isNotNull)
         .select(col("event_id"), col("value"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id, value FROM events
+        |WHERE value IS NOT NULL AND props IS NOT NULL
+        |ORDER BY event_id""".stripMargin)),
 
     // F4 — compound range anti-filter (outlier drop, challenge.py:259-262).
-    "f4_range_antifilter" -> ((s, d) =>
+    QuerySpec("f4_range_antifilter", (s, d) =>
       lineitem(s, d)
         .filter(!(col("l_shipdate") > lit("1997-01-01")
           && col("l_discount") < lit(0.02)))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_discount"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_discount"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_discount")),
+      Some("""SELECT l_orderkey, l_linenumber, l_discount FROM lineitem
+        |WHERE NOT (l_shipdate > TIMESTAMP '1997-01-01' AND l_discount < 0.02)
+        |ORDER BY l_orderkey, l_linenumber, l_discount""".stripMargin)),
 
     // F5 — dedicated single-column notnull filter (DC:3010).
-    "f5_notnull_column" -> ((s, d) =>
+    QuerySpec("f5_notnull_column", (s, d) =>
       events(s, d)
         .filter(col("user_id").isNotNull)
         .select(col("event_id"), col("user_id"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id, user_id FROM events
+        |WHERE user_id IS NOT NULL ORDER BY event_id""".stripMargin)),
 
     // F6 — negated membership (DC:5300: ~isin(['True','False'])).
-    "f6_negated_membership" -> ((s, d) =>
+    QuerySpec("f6_negated_membership", (s, d) =>
       customer(s, d)
         .filter(!col("c_mktsegment").isin("BUILDING", "MACHINERY"))
         .select(col("c_custkey"), col("c_mktsegment"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      Some("""SELECT c_custkey, c_mktsegment FROM customer
+        |WHERE c_mktsegment NOT IN ('BUILDING','MACHINERY')
+        |ORDER BY c_custkey""".stripMargin)),
 
     // F7 — numeric threshold (DC:6197: box_office < 1e9).
-    "f7_threshold" -> ((s, d) =>
+    QuerySpec("f7_threshold", (s, d) =>
       orders(s, d)
         .filter(col("o_totalprice") < 5000.0)
         .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      Some("""SELECT o_orderkey, o_totalprice FROM orders
+        |WHERE o_totalprice < 5000.0 ORDER BY o_orderkey""".stripMargin)),
 
     // F8 — rows matching NEITHER regex (DC:4163: residual-set inspection).
-    "f8_regex_mask" -> ((s, d) =>
+    QuerySpec("f8_regex_mask", (s, d) =>
       part(s, d)
         .filter(!col("p_type").rlike("BRASS|COPPER")
           && !col("p_type").rlike("^ECONOMY"))
         .select(col("p_partkey"), col("p_type"))
-        .orderBy(col("p_partkey"))),
+        .orderBy(col("p_partkey")),
+      Some("""SELECT p_partkey, p_type FROM part
+        |WHERE NOT regexp_matches(p_type, 'BRASS|COPPER')
+        |  AND NOT regexp_matches(p_type, '^ECONOMY')
+        |ORDER BY p_partkey""".stripMargin)),
 
     // ---- P: projections / column surgery ----------------------------------
     // P1 — data-dependent column pruning: drop columns that are >=90% null
     // (challenge.py:110-111). Two-phase: driver-side null-ratio aggregate,
     // then a select of the surviving columns.
-    "p1_null_prune" -> ((s, d) => {
+    QuerySpec("p1_null_prune", (s, d) => {
       val df = events(s, d)
       val total = df.count()
       val nullCounts = df.select(df.columns.map(c =>
@@ -933,28 +1266,36 @@ object QueriesCore {
       df.select(kept.map(col).toSeq: _*)
         .withColumn("ts", date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
         .orderBy(col("event_id"))
-    }),
+    },
+      Some("""SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, user_id,
+        |       event_type, value, props
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // P2 — fixed-order projection (challenge.py:265-270).
-    "p2_projection" -> ((s, d) =>
+    QuerySpec("p2_projection", (s, d) =>
       part(s, d)
         .select(col("p_partkey"), col("p_name"), col("p_brand"),
           col("p_retailprice"))
-        .orderBy(col("p_partkey"))),
+        .orderBy(col("p_partkey")),
+      Some("""SELECT p_partkey, p_name, p_brand, p_retailprice FROM part
+        |ORDER BY p_partkey""".stripMargin)),
 
     // P4 — bulk rename to snake_case output names (challenge.py:273-288).
-    "p4_rename_bulk" -> ((s, d) =>
+    QuerySpec("p4_rename_bulk", (s, d) =>
       lineitem(s, d)
         .withColumnsRenamed(Map(
           "l_orderkey" -> "order_id", "l_linenumber" -> "line_no",
           "l_quantity" -> "qty", "l_extendedprice" -> "price"))
         .select(col("order_id"), col("line_no"), col("qty"), col("price"))
-        .orderBy(col("order_id"), col("line_no"), col("qty"), col("price"))),
+        .orderBy(col("order_id"), col("line_no"), col("qty"), col("price")),
+      Some("""SELECT l_orderkey AS order_id, l_linenumber AS line_no,
+        |       l_quantity AS qty, l_extendedprice AS price
+        |FROM lineitem ORDER BY order_id, line_no, qty, price""".stripMargin)),
 
     // P5 — synonym-column consolidation via coalesce (clean_movie,
     // challenge.py:61-98: 'Directed by' vs 'Director' merged per record).
     // Two sparse synonym columns are derived then coalesced.
-    "p5_synonym_coalesce" -> ((s, d) =>
+    QuerySpec("p5_synonym_coalesce", (s, d) =>
       events(s, d)
         .withColumn("v_click",
           when(col("event_type") === "click", col("value")))
@@ -962,30 +1303,39 @@ object QueriesCore {
           when(col("event_type") === "view", col("value")))
         .withColumn("merged_value", coalesce(col("v_click"), col("v_view")))
         .select(col("event_id"), col("merged_value"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id,
+        |  COALESCE(CASE WHEN event_type='click' THEN value END,
+        |           CASE WHEN event_type='view' THEN value END) AS merged_value
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // P6 — dedup on a key subset with a deterministic representative
     // (DC:3694 drop_duplicates('imdb_id'); min-row representative).
-    "p6_dedup_subset" -> ((s, d) =>
+    QuerySpec("p6_dedup_subset", (s, d) =>
       orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(min(col("o_orderkey")).as("first_orderkey"),
           count(lit(1)).as("n_orders"))
-        .orderBy(col("o_custkey"))),
+        .orderBy(col("o_custkey")),
+      Some("""SELECT o_custkey, MIN(o_orderkey) AS first_orderkey,
+        |       COUNT(*) AS n_orders
+        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
 
     // P6b — full-row distinct.
-    "p6b_distinct" -> ((s, d) =>
+    QuerySpec("p6b_distinct", (s, d) =>
       lineitem(s, d)
         .select(col("l_returnflag"), col("l_linestatus"))
         .distinct()
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
+        .orderBy(col("l_returnflag"), col("l_linestatus")),
+      Some("""SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // ---- X: scalar expression layer over constructed strings --------------
     // X6+X7 — money extraction + parse_dollars (challenge.py:125-157). Money
     // strings are constructed deterministically from integer columns, parsed
     // back by the expression layer; the oracle derives the expected value
     // arithmetically.
-    "x7_parse_dollars" -> ((s, d) => {
+    QuerySpec("x7_parse_dollars", (s, d) => {
       val withMoney = part(s, d).withColumn("money_str",
         when(col("p_partkey") % 3 === 0,
           format_string("$%d million", col("p_size")))
@@ -996,22 +1346,34 @@ object QueriesCore {
         .withColumn("parsed", parseDollars(col("money_str")))
         .select(col("p_partkey"), col("money_str"), col("parsed"))
         .orderBy(col("p_partkey"))
-    }),
+    },
+      Some("""SELECT p_partkey,
+        |  CASE WHEN p_partkey % 3 = 0 THEN printf('$%d million', p_size)
+        |       WHEN p_partkey % 3 = 1 THEN printf('$%d billion', p_size)
+        |       ELSE 'N/A' END AS money_str,
+        |  CASE WHEN p_partkey % 3 = 0 THEN p_size * 1e6
+        |       WHEN p_partkey % 3 = 1 THEN p_size * 1e9
+        |       ELSE NULL END AS parsed
+        |FROM part ORDER BY p_partkey""".stripMargin)),
 
     // X3+X4+X7 — range collapse + citation strip + extract + parse
     // ("$10–15 million[3]" → 15e6; challenge.py:119,167,169).
     // X1 — polymorphic list→string join (challenge.py:117): rejoin the
     // token array form of each document (array_join over split)
-    "x1_flatten_join" -> ((s, d) =>
+    QuerySpec("x1_flatten_join", (s, d) =>
       documents(s, d)
         .withColumn("joined", array_join(split(col("text"), " "), " "))
         .select(col("doc_id"), (length(col("joined")) -
           length(col("text"))).cast("long").as("len_delta"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      Some("""SELECT doc_id,
+        |  CAST(length(array_to_string(string_split(text, ' '), ' '))
+        |    - length(text) AS BIGINT) AS len_delta
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // X2 — regex capture extract (challenge.py:107): imdb-style id from a
     // synthesized link column; no-match → null like pandas NaN
-    "x2_regex_capture" -> ((s, d) =>
+    QuerySpec("x2_regex_capture", (s, d) =>
       orders(s, d)
         .withColumn("link",
           when(col("o_orderkey") % 3 =!= 0,
@@ -1025,9 +1387,15 @@ object QueriesCore {
             regexp_extract_all(col("link"), lit("(tt\\d{7})"), lit(1)),
             lit(1)))
         .select(col("o_orderkey"), col("imdb_id"))
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      Some("""SELECT o_orderkey,
+        |  CASE WHEN o_orderkey % 3 <> 0 THEN
+        |    regexp_extract(printf('https://www.imdb.com/title/tt%07d/',
+        |                          o_orderkey), '(tt\d{7})', 1)
+        |  END AS imdb_id
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
-    "x3_money_cleanup" -> ((s, d) => {
+    QuerySpec("x3_money_cleanup", (s, d) => {
       val raw = part(s, d).withColumn("raw_money",
         format_string("$%d–%d million[%d]",
           col("p_size"), col("p_size") + lit(5), col("p_partkey") % 9))
@@ -1036,11 +1404,13 @@ object QueriesCore {
         .withColumn("parsed", parseDollars(col("cleaned")))
         .select(col("p_partkey"), col("parsed"))
         .orderBy(col("p_partkey"))
-    }),
+    },
+      Some("""SELECT p_partkey, (p_size + 5) * 1e6 AS parsed
+        |FROM part ORDER BY p_partkey""".stripMargin)),
 
     // X8+X13 — four-shape date extraction + to_timestamp cascade
     // (challenge.py:182-189). Shapes constructed from o_orderdate.
-    "x13_date_cascade" -> ((s, d) => {
+    QuerySpec("x13_date_cascade", (s, d) => {
       val shaped = orders(s, d).withColumn("date_str",
         when(col("o_orderkey") % 4 === 0,
           date_format(col("o_orderdate"), "MMMM d, yyyy"))
@@ -1055,11 +1425,23 @@ object QueriesCore {
             "yyyy-MM-dd"))
         .select(col("o_orderkey"), col("date_str"), col("parsed_date"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      Some("""SELECT o_orderkey,
+        |  CASE WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%B %-d, %Y')
+        |       WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
+        |       WHEN o_orderkey % 4 = 2 THEN strftime(o_orderdate, '%B %Y')
+        |       ELSE strftime(o_orderdate, '%Y') END AS date_str,
+        |  CASE WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%Y-%m-%d')
+        |       WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
+        |       WHEN o_orderkey % 4 = 2
+        |         THEN strftime(date_trunc('month', o_orderdate), '%Y-%m-%d')
+        |       ELSE strftime(date_trunc('year', o_orderdate), '%Y-%m-%d')
+        |  END AS parsed_date
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // X9+X10 — running-time extraction (3 capture groups) + h/m arithmetic
     // (challenge.py:193-199).
-    "x9_running_time" -> ((s, d) => {
+    QuerySpec("x9_running_time", (s, d) => {
       val qty = col("l_quantity").cast("int")
       val shaped = lineitem(s, d).withColumn("time_str",
         when(col("l_linenumber") % 4 === 0,
@@ -1075,51 +1457,82 @@ object QueriesCore {
           col("minutes"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("time_str"),
           col("minutes"))
-    }),
+    },
+      Some("""SELECT l_orderkey, l_linenumber,
+        |  CASE WHEN l_linenumber % 4 = 0
+        |         THEN printf('%d minutes', CAST(l_quantity AS INT))
+        |       WHEN l_linenumber % 4 = 1
+        |         THEN printf('%d hours %d minutes',
+        |                     CAST(l_quantity AS INT) % 4,
+        |                     CAST(l_quantity AS INT))
+        |       WHEN l_linenumber % 4 = 2
+        |         THEN printf('%d h %d m', CAST(l_quantity AS INT) % 4,
+        |                     CAST(l_quantity AS INT))
+        |       ELSE 'unknown' END AS time_str,
+        |  CASE WHEN l_linenumber % 4 = 0 THEN CAST(l_quantity AS INT) * 1.0
+        |       WHEN l_linenumber % 4 IN (1, 2)
+        |         THEN (CAST(l_quantity AS INT) % 4) * 60.0
+        |              + CAST(l_quantity AS INT)
+        |       ELSE NULL END AS minutes
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, time_str, minutes""".stripMargin)),
 
     // X11 — coalesce-if-zero (fill_missing_kaggle_data, challenge.py:244-256):
     // take the fallback ONLY when the preferred value is exactly 0.
-    "x11_coalesce_if_zero" -> ((s, d) =>
+    QuerySpec("x11_coalesce_if_zero", (s, d) =>
       lineitem(s, d)
         .withColumn("merged_rate",
           coalesceIfZero(col("l_tax"), col("l_discount")))
         .select(col("l_orderkey"), col("l_linenumber"), col("merged_rate"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("merged_rate"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("merged_rate")),
+      Some("""SELECT l_orderkey, l_linenumber,
+        |  CASE WHEN l_tax = 0 THEN l_discount ELSE l_tax END AS merged_rate
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, merged_rate""".stripMargin)),
 
     // X12 — casts: numeric narrowing, string→number with coerce-to-null.
-    "x12_casts" -> ((s, d) =>
+    QuerySpec("x12_casts", (s, d) =>
       lineitem(s, d)
         .withColumn("qty_int", col("l_quantity").cast("long"))
         .withColumn("bad_num", expr("try_cast(l_returnflag AS double)"))
         .select(col("l_orderkey"), col("l_linenumber"), col("qty_int"),
           col("bad_num"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("qty_int"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("qty_int")),
+      Some("""SELECT l_orderkey, l_linenumber,
+        |  CAST(l_quantity AS BIGINT) AS qty_int,
+        |  TRY_CAST(l_returnflag AS DOUBLE) AS bad_num
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, qty_int""".stripMargin)),
 
     // X18 — semi-structured field access: extract + type a key from the
     // JSON props column (the S1 polymorphic-JSON domain applied at the
     // expression layer; get_json_object stays codegen'd and prunes to the
     // single needed key, no full from_json struct materialization).
-    "x18_json_extract" -> ((s, d) =>
+    QuerySpec("x18_json_extract", (s, d) =>
       events(s, d)
         .withColumn("k_val",
           get_json_object(col("props"), "$.k").cast("long"))
         .select(col("event_id"), col("k_val"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id,
+        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // X15 — epoch seconds → timestamp (challenge.py:219), emitted as string.
-    "x15_epoch_seconds" -> ((s, d) =>
+    QuerySpec("x15_epoch_seconds", (s, d) =>
       events(s, d)
         .withColumn("epoch_s", col("event_id") + lit(1700000000L))
         .withColumn("ts_str",
           date_format(timestamp_seconds(col("epoch_s")),
             "yyyy-MM-dd HH:mm:ss"))
         .select(col("event_id"), col("ts_str"))
-        .orderBy(col("event_id"))),
+        .orderBy(col("event_id")),
+      Some("""SELECT event_id,
+        |  strftime(make_timestamp((event_id + 1700000000) * 1000000),
+        |           '%Y-%m-%d %H:%M:%S') AS ts_str
+        |FROM events ORDER BY event_id""".stripMargin)),
 
     // ---- J: joins ----------------------------------------------------------
     // J1 — inner equi-join with suffix-style disambiguation
     // (challenge.py:225). Customer side broadcasts (small dim).
-    "j1_inner_join" -> ((s, d) => {
+    QuerySpec("j1_inner_join", (s, d) => {
       val o = orders(s, d)
       val c = customer(s, d)
         .withColumnRenamed("c_name", "name_customer")
@@ -1128,10 +1541,14 @@ object QueriesCore {
         .select(col("o_orderkey"), col("o_totalprice"),
           col("name_customer"), col("acctbal_customer"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      Some("""SELECT o_orderkey, o_totalprice, c_name AS name_customer,
+        |       c_acctbal AS acctbal_customer
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // J2 — left outer join + fillna(0) (challenge.py:299-302).
-    "j2_left_join_fill" -> ((s, d) => {
+    QuerySpec("j2_left_join_fill", (s, d) => {
       val agg = orders(s, d).groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("n_orders"),
           round(sum(col("o_totalprice")), 2).as("total_spent"))
@@ -1141,30 +1558,46 @@ object QueriesCore {
         .select(col("c_custkey"), col("c_name"), col("n_orders"),
           col("total_spent"))
         .orderBy(col("c_custkey"))
-    }),
+    },
+      Some("""SELECT c_custkey, c_name, COALESCE(n_orders, 0) AS n_orders,
+        |       COALESCE(total_spent, 0) AS total_spent
+        |FROM customer LEFT JOIN (
+        |  SELECT o_custkey, COUNT(*) AS n_orders,
+        |         ROUND(SUM(o_totalprice), 2) AS total_spent
+        |  FROM orders GROUP BY o_custkey) agg
+        |ON c_custkey = agg.o_custkey
+        |ORDER BY c_custkey""".stripMargin)),
 
     // J3 — left-semi (EXISTS).
-    "j3_semi_join" -> ((s, d) =>
+    QuerySpec("j3_semi_join", (s, d) =>
       customer(s, d)
         .join(orders(s, d).filter(col("o_totalprice") > 400000),
           col("c_custkey") === col("o_custkey"), "left_semi")
         .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      Some("""SELECT c_custkey, c_name FROM customer
+        |WHERE c_custkey IN
+        |  (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
+        |ORDER BY c_custkey""".stripMargin)),
 
     // J4 — left-anti (NOT EXISTS). The subtracted side is restricted to
     // big-ticket orders so the result is non-empty at every SF (every
     // customer has SOME order in the harness data — an unrestricted anti
     // join returns 0 rows and tests nothing).
-    "j4_anti_join" -> ((s, d) =>
+    QuerySpec("j4_anti_join", (s, d) =>
       customer(s, d)
         .join(orders(s, d).filter(col("o_totalprice") > 400000),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
-        .orderBy(col("c_custkey"))),
+        .orderBy(col("c_custkey")),
+      Some("""SELECT c_custkey, c_name FROM customer c
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o
+        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
+        |ORDER BY c_custkey""".stripMargin)),
 
     // engine extra: backward as-of join — each click gets the user's most
     // recent preceding view (funnel attribution shape)
-    "j5_asof_join" -> ((s, d) => {
+    QuerySpec("j5_asof_join", (s, d) => {
       val ev = events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
@@ -1180,14 +1613,28 @@ object QueriesCore {
             .as("view_ts"),
           col("view_value"))
         .orderBy(col("event_id"))
-    }),
+    },
+      Some("""WITH clicks AS (
+        |  SELECT event_id, user_id, ts::TIMESTAMP AS ts, value
+        |  FROM events WHERE event_type = 'click'),
+        |views AS (
+        |  SELECT user_id, ts::TIMESTAMP AS ts, MAX(value) AS view_value
+        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
+        |SELECT c.event_id, c.user_id,
+        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
+        |  c.value AS click_value,
+        |  strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS view_ts,
+        |  v.view_value
+        |FROM clicks c ASOF LEFT JOIN views v
+        |  ON c.user_id = v.user_id AND v.ts <= c.ts
+        |ORDER BY c.event_id""".stripMargin)),
 
     // engine extra: FORWARD as-of join (j5's mirror) — each click gets
     // the next view at-or-after it within 2 hours, the label-construction
     // join ("next conversion after this impression"). Same single-shuffle
     // union+window layout with the frame flipped; per-(user, ts) view
     // pre-aggregation keeps ties deterministic. LATERAL-replayed oracle.
-    "j12_forward_asof" -> ((s, d) => {
+    QuerySpec("j12_forward_asof", (s, d) => {
       val ev = events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
@@ -1203,10 +1650,26 @@ object QueriesCore {
             .as("next_view_ts"),
           col("view_value"))
         .orderBy(col("event_id"))
-    }),
+    },
+      Some("""WITH c AS (SELECT event_id, user_id, ts::TIMESTAMP AS ts, value
+        |           FROM events WHERE event_type = 'click'),
+        |v AS (SELECT user_id, ts::TIMESTAMP AS ts,
+        |        MAX(value) AS view_value
+        |      FROM events WHERE event_type = 'view' GROUP BY 1, 2)
+        |SELECT c.event_id, c.user_id,
+        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
+        |  c.value AS click_value,
+        |  strftime(m.ts, '%Y-%m-%d %H:%M:%S') AS next_view_ts,
+        |  m.view_value
+        |FROM c LEFT JOIN LATERAL (
+        |  SELECT v.ts, v.view_value FROM v
+        |  WHERE v.user_id = c.user_id AND v.ts >= c.ts
+        |    AND v.ts <= c.ts + INTERVAL '2 hours'
+        |  ORDER BY v.ts, v.view_value LIMIT 1) m ON TRUE
+        |ORDER BY event_id""".stripMargin)),
 
     // engine extra: interval/range join — events bucketed into value bands
-    "j6_range_join" -> ((s, d) => {
+    QuerySpec("j6_range_join", (s, d) => {
       import s.implicits._
       val bands = Seq(("low", 0.0, 8.0), ("mid", 8.0, 16.0),
         ("high", 16.0, 1e9)).toDF("band", "lo", "hi")
@@ -1215,13 +1678,19 @@ object QueriesCore {
         .agg(count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("sum_value"))
         .orderBy(col("band"))
-    }),
+    },
+      Some("""WITH bands(band, lo, hi) AS (
+        |  VALUES ('low', 0.0, 8.0), ('mid', 8.0, 16.0),
+        |         ('high', 16.0, 1e9))
+        |SELECT band, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
+        |FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
+        |GROUP BY band ORDER BY band""".stripMargin)),
 
     // engine extra: bucketed range join — the interval-set-scalable form
     // of j6: 1000 bands equi-joined on floor(value/width) buckets with a
     // containment residual; hash join only, no nested loop (PlansSpec's
     // global no-quadratic check covers it since it is NOT allow-listed)
-    "j6b_bucketed_range_join" -> ((s, d) => {
+    QuerySpec("j6b_bucketed_range_join", (s, d) => {
       val bands = s.range(1000).select(col("id").as("band"),
         (col("id") * lit(0.1)).as("lo"),
         ((col("id") + 1) * lit(0.1)).as("hi"))
@@ -1231,10 +1700,17 @@ object QueriesCore {
         .agg(count(lit(1)).as("n"),
           round(sum(col("value")), 2).as("sum_value"))
         .orderBy(col("band"))
-    }),
+    },
+      Some("""WITH bands AS (
+        |  SELECT unnest(generate_series(0, 999)) AS band),
+        |b AS (SELECT band, band * CAST(0.1 AS DOUBLE) AS lo,
+        |             (band + 1) * CAST(0.1 AS DOUBLE) AS hi FROM bands)
+        |SELECT band, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
+        |FROM events e JOIN b ON e.value >= b.lo AND e.value < b.hi
+        |GROUP BY band ORDER BY band""".stripMargin)),
 
     // engine extra: full outer join — unmatched sides surface with nulls
-    "j8_full_outer" -> ((s, d) => {
+    QuerySpec("j8_full_outer", (s, d) => {
       val c = customer(s, d).select(col("c_custkey"), col("c_name"))
       val topOrders = orders(s, d)
         .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
@@ -1242,10 +1718,15 @@ object QueriesCore {
         .select(coalesce(col("c_custkey"), col("o_custkey")).as("key"),
           col("c_name"), col("n_orders"))
         .orderBy(col("key"))
-    }),
+    },
+      Some("""WITH t AS (SELECT o_custkey, COUNT(*) AS n_orders
+        |           FROM orders GROUP BY o_custkey)
+        |SELECT COALESCE(c_custkey, o_custkey) AS key, c_name, n_orders
+        |FROM customer FULL OUTER JOIN t ON c_custkey = o_custkey
+        |ORDER BY key""".stripMargin)),
 
     // TPC-H Q12 shape: per-group conditional counts (priority classes)
-    "q12_priority_classes" -> ((s, d) =>
+    QuerySpec("q12_priority_classes", (s, d) =>
       orders(s, d)
         .groupBy(col("o_orderstatus"))
         .agg(
@@ -1253,11 +1734,18 @@ object QueriesCore {
             .otherwise(0)).as("high_line_count"),
           sum(when(!col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1)
             .otherwise(0)).as("low_line_count"))
-        .orderBy(col("o_orderstatus"))),
+        .orderBy(col("o_orderstatus")),
+      Some("""SELECT o_orderstatus,
+        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
+        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
+        |      THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
+        |FROM orders GROUP BY o_orderstatus
+        |ORDER BY o_orderstatus""".stripMargin)),
 
     // engine extra: salted join — salt spreads hot keys across reducers;
     // output is salt-invariant, so the oracle is the PLAIN join aggregate
-    "j7_salted_join" -> ((s, d) =>
+    QuerySpec("j7_salted_join", (s, d) =>
       graft.ops.Joins.saltedJoin(
           lineitem(s, d).select(col("l_orderkey"), col("l_extendedprice")),
           orders(s, d).select(col("o_orderkey").as("l_orderkey"),
@@ -1266,59 +1754,91 @@ object QueriesCore {
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_extendedprice")), 2).as("sum_price"))
-        .orderBy(col("o_orderpriority"))),
+        .orderBy(col("o_orderpriority")),
+      Some("""SELECT o_orderpriority, COUNT(*) AS n,
+        |  ROUND(SUM(l_extendedprice), 2) AS sum_price
+        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)),
 
     // engine extras: set operations over aligned projections
-    "set1_union" -> ((s, d) =>
+    QuerySpec("set1_union", (s, d) =>
       customer(s, d).select(col("c_custkey").as("key"))
         .union(orders(s, d).select(col("o_custkey").as("key")))
         .groupBy(col("key")).agg(count(lit(1)).as("n"))
-        .orderBy(col("key"))),
+        .orderBy(col("key")),
+      Some("""SELECT key, COUNT(*) AS n FROM (
+        |  SELECT c_custkey AS key FROM customer
+        |  UNION ALL SELECT o_custkey FROM orders)
+        |GROUP BY key ORDER BY key""".stripMargin)),
 
-    "set2_intersect" -> ((s, d) =>
+    QuerySpec("set2_intersect", (s, d) =>
       customer(s, d).select(col("c_custkey").as("key"))
         .intersect(orders(s, d).select(col("o_custkey").as("key")))
-        .orderBy(col("key"))),
+        .orderBy(col("key")),
+      Some("""SELECT c_custkey AS key FROM customer
+        |INTERSECT SELECT o_custkey FROM orders
+        |ORDER BY key""".stripMargin)),
 
     // subtracted side restricted (big-ticket orders) for the same
     // non-emptiness reason as j4
-    "set3_except" -> ((s, d) =>
+    QuerySpec("set3_except", (s, d) =>
       customer(s, d).select(col("c_custkey").as("key"))
         .except(orders(s, d).filter(col("o_totalprice") > 400000)
           .select(col("o_custkey").as("key")))
-        .orderBy(col("key"))),
+        .orderBy(col("key")),
+      Some("""SELECT c_custkey AS key FROM customer
+        |EXCEPT SELECT o_custkey FROM orders WHERE o_totalprice > 400000
+        |ORDER BY key""".stripMargin)),
 
     // ---- A: aggregations / reshaping --------------------------------------
     // A1 — multi-key group-by count (challenge.py:293 groupby count).
-    "a1_groupby_count" -> ((s, d) =>
+    QuerySpec("a1_groupby_count", (s, d) =>
       lineitem(s, d)
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(count(col("l_orderkey")).as("cnt"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))),
+        .orderBy(col("l_returnflag"), col("l_linestatus")),
+      Some("""SELECT l_returnflag, l_linestatus, COUNT(l_orderkey) AS cnt
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
     // A2 — group-by + pivot with explicit value list (challenge.py:293;
     // explicit values for deterministic columns, SURVEY H4).
-    "a2_pivot" -> ((s, d) =>
+    QuerySpec("a2_pivot", (s, d) =>
       orders(s, d)
         .groupBy(col("o_orderpriority"))
         .pivot("o_orderstatus", Seq("F", "O", "P"))
         .agg(count(lit(1)))
         .na.fill(0)
-        .orderBy(col("o_orderpriority"))),
+        .orderBy(col("o_orderpriority")),
+      Some("""SELECT o_orderpriority,
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS "F",
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS "O",
+        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
+        |FROM orders GROUP BY o_orderpriority
+        |ORDER BY o_orderpriority""".stripMargin)),
 
     // A3 — per-column null-count aggregate (challenge.py:110).
-    "a3_null_counts" -> ((s, d) => {
+    QuerySpec("a3_null_counts", (s, d) => {
       val df = events(s, d)
       df.select(df.columns.map(c =>
         sum(col(c).isNull.cast("long")).as(s"nulls_$c")).toSeq: _*)
-    }),
+    },
+      Some("""SELECT COUNT(*) - COUNT(event_id) AS nulls_event_id,
+        |       COUNT(*) - COUNT(ts) AS nulls_ts,
+        |       COUNT(*) - COUNT(user_id) AS nulls_user_id,
+        |       COUNT(*) - COUNT(event_type) AS nulls_event_type,
+        |       COUNT(*) - COUNT(value) AS nulls_value,
+        |       COUNT(*) - COUNT(props) AS nulls_props
+        |FROM events""".stripMargin)),
 
     // A4 — value_counts: frequency desc (DC:5123), tie-broken by value.
-    "a4_value_counts" -> ((s, d) =>
+    QuerySpec("a4_value_counts", (s, d) =>
       events(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("cnt").desc, col("event_type"))),
+        .orderBy(col("cnt").desc, col("event_type")),
+      Some("""SELECT event_type, COUNT(*) AS cnt FROM events
+        |GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin)),
 
     // A5 — describe(): count/mean/std/min/quartiles/max (DC:5613). Exact
     // percentile (not approx) for oracle parity. Memory note: exact
@@ -1326,7 +1846,7 @@ object QueriesCore {
     // group — bounded here (l_quantity has ~50 distinct values at any SF),
     // but O(distinct) at 100 TB on an unbounded-domain column; use the a5b
     // approx_percentile twin (fixed-size GK sketch) for those.
-    "a5_describe" -> ((s, d) =>
+    QuerySpec("a5_describe", (s, d) =>
       lineitem(s, d).agg(
         count(col("l_quantity")).as("cnt"),
         round(avg(col("l_quantity")), 4).as("mean"),
@@ -1335,7 +1855,16 @@ object QueriesCore {
         round(expr("percentile(l_quantity, 0.25)"), 4).as("p25"),
         round(expr("percentile(l_quantity, 0.5)"), 4).as("p50"),
         round(expr("percentile(l_quantity, 0.75)"), 4).as("p75"),
-        max(col("l_quantity")).as("max"))),
+        max(col("l_quantity")).as("max")),
+      Some("""SELECT COUNT(l_quantity) AS cnt,
+        |  ROUND(AVG(l_quantity), 4) AS mean,
+        |  ROUND(STDDEV(l_quantity), 4) AS std,
+        |  MIN(l_quantity) AS min,
+        |  ROUND(quantile_cont(l_quantity, 0.25), 4) AS p25,
+        |  ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50,
+        |  ROUND(quantile_cont(l_quantity, 0.75), 4) AS p75,
+        |  MAX(l_quantity) AS max
+        |FROM lineitem""".stripMargin)),
 
     // A5b — describe() at scale: approx_percentile (Greenwald-Khanna
     // sketch, fixed memory per group regardless of cardinality — the
@@ -1343,7 +1872,7 @@ object QueriesCore {
     // sketch is exact on the harness data, so the oracle compares against
     // DuckDB's discrete quantile (both pick actual data values, no
     // interpolation).
-    "a5b_describe_approx" -> ((s, d) =>
+    QuerySpec("a5b_describe_approx", (s, d) =>
       lineitem(s, d).agg(
         count(col("l_quantity")).as("cnt"),
         round(expr("approx_percentile(l_quantity, 0.25, 1000000)"), 4)
@@ -1351,29 +1880,41 @@ object QueriesCore {
         round(expr("approx_percentile(l_quantity, 0.5, 1000000)"), 4)
           .as("p50"),
         round(expr("approx_percentile(l_quantity, 0.75, 1000000)"), 4)
-          .as("p75"))),
+          .as("p75")),
+      Some("""SELECT COUNT(l_quantity) AS cnt,
+        |  ROUND(quantile_disc(l_quantity, 0.25), 4) AS p25,
+        |  ROUND(quantile_disc(l_quantity, 0.5), 4) AS p50,
+        |  ROUND(quantile_disc(l_quantity, 0.75), 4) AS p75
+        |FROM lineitem""".stripMargin)),
 
     // A6 — histogram: fixed-width binned counts (DC:5612).
-    "a6_histogram" -> ((s, d) =>
+    QuerySpec("a6_histogram", (s, d) =>
       lineitem(s, d)
         .groupBy(floor(col("l_quantity") / 5).as("bin"))
         .agg(count(lit(1)).as("cnt"))
-        .orderBy(col("bin"))),
+        .orderBy(col("bin")),
+      Some("""SELECT CAST(FLOOR(l_quantity / 5) AS BIGINT) AS bin,
+        |       COUNT(*) AS cnt
+        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin)),
 
     // A7 — distinct-cardinality scan per column (DC:7675; exact, the
     // reference's single-value-column hunt).
-    "a7_distinct_scan" -> ((s, d) =>
+    QuerySpec("a7_distinct_scan", (s, d) =>
       orders(s, d).agg(
         countDistinct(col("o_orderstatus")).as("nd_status"),
         countDistinct(col("o_orderpriority")).as("nd_priority"),
-        countDistinct(col("o_custkey")).as("nd_custkey"))),
+        countDistinct(col("o_custkey")).as("nd_custkey")),
+      Some("""SELECT COUNT(DISTINCT o_orderstatus) AS nd_status,
+        |       COUNT(DISTINCT o_orderpriority) AS nd_priority,
+        |       COUNT(DISTINCT o_custkey) AS nd_custkey
+        |FROM orders""".stripMargin)),
 
     // A7b — approx_count_distinct (HyperLogLog++, fixed sketch memory —
     // the 100 TB path for unbounded-cardinality columns where exact
     // countDistinct's per-group hash set cannot fit). Sketch estimates are
     // engine-specific → no cross-engine oracle (rows-only); the output is
     // self-checking against the exact count.
-    "a7b_approx_distinct" -> ((s, d) =>
+    QuerySpec("a7b_approx_distinct", (s, d) =>
       orders(s, d).agg(
           approx_count_distinct(col("o_custkey"), 0.02).as("approx_nd"),
           countDistinct(col("o_custkey")).as("exact_nd"))
@@ -1388,7 +1929,7 @@ object QueriesCore {
     // by engine); instead the entry carries an ENFORCED `equal` verdict
     // against the exact counts — union within 10%, intersection within
     // max(15%, 10 users) since differencing amplifies sketch noise.
-    "a17_hll_set_ops" -> ((s, d) => {
+    QuerySpec("a17_hll_set_ops", (s, d) => {
       val ev = events(s, d)
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"))
@@ -1422,7 +1963,7 @@ object QueriesCore {
     // undercounts and a mean overcount within the ε·N envelope
     // (ε = e/64, N = 10k at sf0.01 → slack is generous at any sf). Hash
     // internals are engine-specific → no DuckDB oracle (rows-only).
-    "a18_countmin" -> ((s, d) => {
+    QuerySpec("a18_countmin", (s, d) => {
       val depth = 4; val width = 64
       val ev = events(s, d).select(col("user_id"))
       val sk = graft.functions.CountMin.sketch(ev, "user_id", depth, width)
@@ -1447,41 +1988,53 @@ object QueriesCore {
     }),
 
     // A8 — cardinality checks (DC:67 len()).
-    "a8_counts" -> ((s, d) =>
+    QuerySpec("a8_counts", (s, d) =>
       lineitem(s, d).agg(count(lit(1)).as("lineitem_cnt"))
         .crossJoin(orders(s, d).agg(count(lit(1)).as("orders_cnt")))
-        .crossJoin(customer(s, d).agg(count(lit(1)).as("customer_cnt")))),
+        .crossJoin(customer(s, d).agg(count(lit(1)).as("customer_cnt"))),
+      Some("""SELECT (SELECT COUNT(*) FROM lineitem) AS lineitem_cnt,
+        |       (SELECT COUNT(*) FROM orders) AS orders_cnt,
+        |       (SELECT COUNT(*) FROM customer) AS customer_cnt""".stripMargin)),
 
     // ---- O: ordering / limits / sampling ----------------------------------
     // O1 — head(5) made deterministic with a sort key.
-    "o1_head" -> ((s, d) =>
+    QuerySpec("o1_head", (s, d) =>
       orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_orderkey")).limit(5)),
+        .orderBy(col("o_orderkey")).limit(5),
+      Some("""SELECT o_orderkey, o_totalprice FROM orders
+        |ORDER BY o_orderkey LIMIT 5""".stripMargin)),
 
     // O1b — tail(5): last 5 by key, presented ascending (a global sort-desc
     // limit — the distributed analogue of pandas tail).
-    "o1b_tail" -> ((s, d) =>
+    QuerySpec("o1b_tail", (s, d) =>
       orders(s, d)
         .select(col("o_orderkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey").desc).limit(5)
-        .orderBy(col("o_orderkey"))),
+        .orderBy(col("o_orderkey")),
+      Some("""SELECT o_orderkey, o_totalprice FROM (
+        |  SELECT o_orderkey, o_totalprice FROM orders
+        |  ORDER BY o_orderkey DESC LIMIT 5)
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // O2 — deterministic "sample": key-mod selection (engines' RNGs differ,
     // so random sampling is oracle-checked via a hash-free deterministic
     // predicate; df.sample(frac) itself is exercised in ScalaTest).
-    "o2_sample_mod" -> ((s, d) =>
+    QuerySpec("o2_sample_mod", (s, d) =>
       lineitem(s, d)
         .filter(col("l_orderkey") % 500 === 0)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))),
+        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_quantity")),
+      Some("""SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
+        |WHERE l_orderkey % 500 = 0
+        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin)),
 
     // O2b — true seeded Bernoulli sampling (df.sample). Engines' RNGs
     // differ, so there is no cross-engine oracle (driver records rows-only);
     // the output is self-checking: sampled count, total, and an
     // expected-range flag (Binomial(n, 0.1) at n=60k is within ±20% of the
     // mean with overwhelming probability).
-    "o2b_sample_seeded" -> ((s, d) => {
+    QuerySpec("o2b_sample_seeded", (s, d) => {
       val li = lineitem(s, d)
       li.sample(withReplacement = false, fraction = 0.1, seed = 42L)
         .agg(count(lit(1)).as("n_sampled"))
@@ -1495,7 +2048,7 @@ object QueriesCore {
     // (df.stat.sampleBy, seeded). RNG is engine-specific → rows-only with
     // a self-checking per-stratum tolerance flag (±25% of the target
     // fraction, generous at these stratum sizes).
-    "o2c_stratified_sample" -> ((s, d) => {
+    QuerySpec("o2c_stratified_sample", (s, d) => {
       val li = lineitem(s, d)
       val fractions = Map("A" -> 0.05, "N" -> 0.2, "R" -> 0.1)
       val target = fractions.foldLeft(lit(null).cast("double")) {
@@ -1512,11 +2065,13 @@ object QueriesCore {
     }),
 
     // O3 — positional slice: offset + limit (DC cells 5-7).
-    "o3_slice" -> ((s, d) =>
+    QuerySpec("o3_slice", (s, d) =>
       orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"))
         .orderBy(col("o_orderkey"))
-        .offset(100).limit(10)),
+        .offset(100).limit(10),
+      Some("""SELECT o_orderkey, o_custkey FROM orders
+        |ORDER BY o_orderkey LIMIT 10 OFFSET 100""".stripMargin)),
 
     // O4 — seeded fixed-k per-group sample: rank rows inside each group
     // by a salted md5 of the row key and keep the k smallest — a
@@ -1526,7 +2081,7 @@ object QueriesCore {
     // window plans as WindowGroupLimit, so each task keeps a k-row heap
     // per group instead of sorting whole partitions — the top-k shape
     // that survives groups of any size at 100 TB.
-    "o4_reservoir_pergroup" -> ((s, d) => {
+    QuerySpec("o4_reservoir_pergroup", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("event_type"))
         .orderBy(md5(concat(col("event_id").cast("string"),
@@ -1536,10 +2091,17 @@ object QueriesCore {
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= 20)
         .orderBy(col("event_type"), col("rn"))
-    }),
+    },
+      Some("""SELECT event_type, event_id, user_id, rn FROM (
+        |  SELECT event_type, event_id, user_id,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY md5(CAST(event_id AS VARCHAR) || '-seed42'),
+        |               event_id) AS rn
+        |  FROM events) WHERE rn <= 20
+        |ORDER BY event_type, rn""".stripMargin)),
 
     // ---- W: window functions (engine surface beyond the reference) --------
-    "w1_row_number" -> ((s, d) => {
+    QuerySpec("w1_row_number", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -1549,9 +2111,16 @@ object QueriesCore {
         .select(col("o_custkey"), col("rn"), col("o_orderkey"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"))
         .orderBy(col("o_custkey"), col("rn"))
-    }),
+    },
+      Some("""SELECT o_custkey, rn, o_orderkey, order_date FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |    strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
+        |                       ORDER BY o_orderdate, o_orderkey) AS rn
+        |  FROM orders) WHERE rn <= 3
+        |ORDER BY o_custkey, rn""".stripMargin)),
 
-    "w2_running_sum" -> ((s, d) => {
+    QuerySpec("w2_running_sum", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("l_orderkey"))
         .orderBy(col("l_linenumber"), col("l_quantity"))
@@ -1560,13 +2129,19 @@ object QueriesCore {
         .withColumn("running_qty", round(sum(col("l_quantity")).over(w), 2))
         .select(col("l_orderkey"), col("l_linenumber"), col("running_qty"))
         .orderBy(col("l_orderkey"), col("l_linenumber"), col("running_qty"))
-    }),
+    },
+      Some("""SELECT l_orderkey, l_linenumber,
+        |  ROUND(SUM(l_quantity) OVER (PARTITION BY l_orderkey
+        |    ORDER BY l_linenumber, l_quantity
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
+        |    AS running_qty
+        |FROM lineitem ORDER BY l_orderkey, l_linenumber, running_qty""".stripMargin)),
 
     // engine extra: time-RANGE window frame — trailing 30-day spend per
     // customer. RANGE (unlike ROWS) includes ALL peers at equal order
     // values, so the result is deterministic under ties without tie-break
     // columns.
-    "w4_range_frame" -> ((s, d) => {
+    QuerySpec("w4_range_frame", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       // NTZ has no direct long cast; NTZ→TIMESTAMP uses the session TZ
       // (UTC here), giving the same epoch seconds DuckDB's epoch() computes
@@ -1580,10 +2155,17 @@ object QueriesCore {
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
           col("trailing_30d_spend"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      Some("""SELECT o_orderkey, o_custkey,
+        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
+        |  ROUND(SUM(o_totalprice) OVER (
+        |    PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
+        |    RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW), 2)
+        |    AS trailing_30d_spend
+        |FROM orders ORDER BY o_orderkey""".stripMargin)),
 
     // engine extra: lag/lead — previous/next order price per customer
-    "w3_lag_lead" -> ((s, d) => {
+    QuerySpec("w3_lag_lead", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate"), col("o_orderkey"))
@@ -1592,11 +2174,18 @@ object QueriesCore {
           lag(col("o_totalprice"), 1).over(w).as("prev_price"),
           lead(col("o_totalprice"), 1).over(w).as("next_price"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      Some("""SELECT o_orderkey, o_custkey, o_totalprice,
+        |  LAG(o_totalprice, 1) OVER w AS prev_price,
+        |  LEAD(o_totalprice, 1) OVER w AS next_price
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_custkey
+        |             ORDER BY o_orderdate, o_orderkey)
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // engine extra: rollup — subtotals per (priority, status) hierarchy;
     // grouping keys coalesced to '(all)' to avoid NULL-ordering divergence
-    "g1_rollup" -> ((s, d) =>
+    QuerySpec("g1_rollup", (s, d) =>
       orders(s, d)
         .rollup(col("o_orderpriority"), col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),
@@ -1605,13 +2194,18 @@ object QueriesCore {
             .as("o_orderpriority"),
           coalesce(col("o_orderstatus"), lit("(all)")).as("o_orderstatus"),
           col("n"), col("sum_price"))
-        .orderBy(col("o_orderpriority"), col("o_orderstatus"))),
+        .orderBy(col("o_orderpriority"), col("o_orderstatus")),
+      Some("""SELECT COALESCE(o_orderpriority, '(all)') AS o_orderpriority,
+        |  COALESCE(o_orderstatus, '(all)') AS o_orderstatus,
+        |  COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS sum_price
+        |FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
+        |ORDER BY o_orderpriority, o_orderstatus""".stripMargin)),
 
     // engine extra: co-moment statistics per group — corr/covar/stddev are
     // single-pass streaming aggregates (partial-combinable, one shuffle on
     // the group key); rounded so partial-agg order can't flip the last ulp,
     // and +0.0 normalizes any -0.0 a near-zero co-moment could round to
-    "a9_correlation" -> ((s, d) =>
+    QuerySpec("a9_correlation", (s, d) =>
       lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -1621,12 +2215,20 @@ object QueriesCore {
             + lit(0.0)).as("covar_qty_disc"),
           round(stddev_samp(col("l_extendedprice")), 2).as("std_price"),
           count(lit(1)).as("n"))
-        .orderBy(col("l_returnflag"))),
+        .orderBy(col("l_returnflag")),
+      Some("""SELECT l_returnflag,
+        |  ROUND(corr(l_quantity, l_extendedprice), 4) + 0.0
+        |    AS corr_qty_price,
+        |  ROUND(covar_samp(l_quantity, l_discount), 6) + 0.0
+        |    AS covar_qty_disc,
+        |  ROUND(stddev_samp(l_extendedprice), 2) AS std_price,
+        |  COUNT(*) AS n
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // engine extra: rank-distribution windows — ntile/percent_rank/
     // cume_dist over a unique total order (price + key tie-break), so the
     // rank functions are deterministic and cross-engine exact
-    "w5_rank_distribution" -> ((s, d) => {
+    QuerySpec("w5_rank_distribution", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -1636,7 +2238,15 @@ object QueriesCore {
           round(percent_rank().over(w), 6).as("pct_rank"),
           round(cume_dist().over(w), 6).as("cume"))
         .orderBy(col("o_orderkey"))
-    }),
+    },
+      Some("""SELECT o_orderkey, o_orderpriority,
+        |  NTILE(4) OVER w AS quartile,
+        |  ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
+        |  ROUND(CUME_DIST() OVER w, 6) AS cume
+        |FROM orders
+        |WINDOW w AS (PARTITION BY o_orderpriority
+        |             ORDER BY o_totalprice, o_orderkey)
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // W6 — cumulative distinct users per type over days: the window-hostile
     // "running COUNT(DISTINCT)" reduced to tractable pieces — each user's
@@ -1644,7 +2254,7 @@ object QueriesCore {
     // days-sized new-user census, and a cumulative sum windowed ONLY over
     // that tiny relation. The event log is never window-scanned, which is
     // what makes the running-distinct census feasible at 100 TB.
-    "w6_cumulative_distinct" -> ((s, d) => {
+    QuerySpec("w6_cumulative_distinct", (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val firstDay = events(s, d)
         .groupBy(col("event_type"), col("user_id"))
@@ -1658,7 +2268,18 @@ object QueriesCore {
           date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("new_users"), col("cum_users"))
         .orderBy(col("event_type"), col("day"))
-    }),
+    },
+      Some("""WITH first_day AS (
+        |  SELECT event_type, user_id, MIN(CAST(ts::TIMESTAMP AS DATE))
+        |           AS day
+        |  FROM events GROUP BY 1, 2),
+        |daily AS (
+        |  SELECT event_type, day, COUNT(*) AS new_users
+        |  FROM first_day GROUP BY 1, 2)
+        |SELECT event_type, strftime(day, '%Y-%m-%d') AS day, new_users,
+        |       CAST(SUM(new_users) OVER (PARTITION BY event_type
+        |         ORDER BY day) AS BIGINT) AS cum_users
+        |FROM daily ORDER BY event_type, day""".stripMargin)),
 
     // A16 — Benford first-digit audit over order totals: the fraud /
     // synthetic-data screen. The leading digit comes from pure arithmetic
@@ -1671,7 +2292,7 @@ object QueriesCore {
     // flip the digit from 1 to 9 on one side of the oracle compare; 1e-9
     // is far above any double log10 ulp and far below the gap to the next
     // representable boundary case.
-    "a16_benford_audit" -> ((s, d) => {
+    QuerySpec("a16_benford_audit", (s, d) => {
       val digit = floor(col("o_totalprice") /
         pow(lit(10.0),
           floor(log10(col("o_totalprice")) + lit(1e-9)))).cast("long")
@@ -1686,856 +2307,8 @@ object QueriesCore {
           floor(log10(lit(1.0) + lit(1.0) / col("digit")) * 10000)
             .cast("long").as("benford_bp"))
         .orderBy(col("digit"))
-    }),
-
-    // engine extra: GROUPING SETS with grouping() marker columns — the SQL
-    // surface (temp view + spark.sql), planned as a single Expand+agg pass
-    "g3_grouping_sets" -> ((s, d) => {
-      orders(s, d).createOrReplaceTempView("g3_orders")
-      s.sql("""SELECT coalesce(o_orderstatus, '(all)') AS status,
-              |  coalesce(o_orderpriority, '(all)') AS priority,
-              |  cast(grouping(o_orderstatus) AS BIGINT) AS g_status,
-              |  cast(grouping(o_orderpriority) AS BIGINT) AS g_priority,
-              |  count(*) AS n, round(sum(o_totalprice), 2) AS sum_price
-              |FROM g3_orders
-              |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-              |ORDER BY status, priority""".stripMargin)
-    }),
-
-    // engine extra: cube — all grouping combinations
-    "g2_cube" -> ((s, d) =>
-      lineitem(s, d)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n"))
-        .select(coalesce(col("l_returnflag"), lit("(all)"))
-            .as("l_returnflag"),
-          coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
-          col("n"))
-        .orderBy(col("l_returnflag"), col("l_linestatus")))
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    AS sum_base_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        |  ROUND(CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-        |    / COUNT(*), 4) AS avg_qty,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    / COUNT(*), 4) AS avg_price,
-        |  COUNT(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_shipping_priority" ->
-      """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS orderdate,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey
-        |  AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1995-03-15'
-        |  AND l_shipdate > TIMESTAMP '1995-03-15'
-        |GROUP BY o_orderkey, orderdate
-        |ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q5_region_volume" ->
-      """SELECT n_name,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM region, nation, supplier, lineitem
-        |WHERE r_name = 'ASIA' AND r_regionkey = n_regionkey
-        |  AND n_nationkey = s_nationkey AND l_suppkey = s_suppkey
-        |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
-
-    "q6_revenue_delta" ->
-      """SELECT ROUND(CAST(SUM(CAST(l_extendedprice * l_discount
-        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue,
-        |  COUNT(*) AS n
-        |FROM lineitem
-        |WHERE l_shipdate >= '1994-01-01' AND l_shipdate < '1995-01-01'
-        |  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q14_class_share" ->
-      """SELECT ROUND(CAST(
-        |    SUM(CASE WHEN p_type = 'ECONOMY'
-        |        THEN CAST(l_extendedprice * (1 - l_discount)
-        |             AS DECIMAL(18,6))
-        |        ELSE CAST(0 AS DECIMAL(18,6)) END) * 100
-        |    / SUM(CAST(l_extendedprice * (1 - l_discount)
-        |          AS DECIMAL(18,6))) AS DOUBLE), 4) AS economy_share_pct
-        |FROM lineitem JOIN part ON l_partkey = p_partkey""".stripMargin,
-
-    "j10_bucketed_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q4_order_priority" ->
-      """SELECT o_orderpriority, COUNT(*) AS order_count
-        |FROM orders o
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey
-        |                AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q10_returned_revenue" ->
-      """SELECT c_custkey, c_name, n_name AS nation,
-        |  CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem, nation
-        |WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_returnflag = 'R' AND c_nationkey = n_nationkey
-        |GROUP BY c_custkey, c_name, n_name
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |         SUM(CAST(l_quantity AS DECIMAL(18,2))) AS qsum
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING SUM(CAST(l_quantity AS DECIMAL(18,2))) > 250)
-        |SELECT c_name, c_custkey, o_orderkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS orderdate, o_totalprice,
-        |  CAST(qsum AS DOUBLE) AS total_qty
-        |FROM big JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "q17_small_qty_revenue" ->
-      """SELECT ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)))
-        |         AS DOUBLE) / 7.0, 2) AS avg_yearly
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_size <= 10
-        |  AND l_quantity < (SELECT 0.5 * AVG(l2.l_quantity)
-        |                    FROM lineitem l2
-        |                    WHERE l2.l_partkey = p_partkey)""".stripMargin,
-
-    "q22_idle_rich_customers" ->
-      """SELECT c_mktsegment, COUNT(*) AS numcust,
-        |       ROUND(CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2)))
-        |         AS DOUBLE), 2) AS totacctbal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT AVG(c_acctbal) FROM customer
-        |                   WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o
-        |                  WHERE o.o_custkey = c.c_custkey
-        |                    AND o.o_totalprice > 430000)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "q19_disjunctive_revenue" ->
-      """SELECT COUNT(*) AS n_lines,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
-        |       AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 10
-        |       AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 15
-        |       AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |  CAST(YEAR(l_shipdate) AS BIGINT) AS l_year,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))) AS DOUBLE), 2) AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND n1.n_name IN ('NATION_1', 'NATION_2')
-        |  AND n2.n_name IN ('NATION_1', 'NATION_2')
-        |  AND n1.n_name <> n2.n_name
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
-        |  ROUND(CAST(SUM(CASE WHEN n2.n_name = 'NATION_7'
-        |        THEN CAST(l_extendedprice * (1 - l_discount)
-        |             AS DECIMAL(18,6))
-        |        ELSE CAST(0 AS DECIMAL(18,6)) END) * 100
-        |    / SUM(CAST(l_extendedprice * (1 - l_discount)
-        |          AS DECIMAL(18,6))) AS DOUBLE), 4) AS mkt_share_pct
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE p_type = 'PROMO' AND r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q13_custdist" ->
-      """WITH per_cust AS (
-        |  SELECT c_custkey, COUNT(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |SELECT c_count, COUNT(*) AS custdist
-        |FROM per_cust GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         SUM(CAST(l_extendedprice * (1 - l_discount)
-        |             AS DECIMAL(18,6))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name,
-        |       ROUND(CAST(total_rev AS DOUBLE), 2) AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "q21_waiting_suppliers" ->
-      """WITH late AS (
-        |  SELECT DISTINCT l_orderkey, l_suppkey
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |  WHERE o_orderstatus = 'F'
-        |    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
-        |SELECT s_suppkey, s_name, COUNT(*) AS numwait
-        |FROM late l1 JOIN supplier ON l1.l_suppkey = s_suppkey
-        |WHERE EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM late l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey)
-        |GROUP BY s_suppkey, s_name
-        |ORDER BY numwait DESC, s_suppkey LIMIT 25""".stripMargin,
-
-    "q2_min_cost_supplier" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_acctbal, s_name, n_name, p_partkey, p_name,
-        |       ROUND(ps_supplycost, 2) AS min_cost
-        |FROM ps
-        |JOIN part ON p_partkey = ps_partkey
-        |JOIN supplier ON s_suppkey = ps_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE p_size = 15 AND r_name = 'EUROPE'
-        |  AND ps_supplycost = (
-        |    SELECT MIN(ps2.ps_supplycost) FROM ps ps2
-        |    JOIN supplier s2 ON s2.s_suppkey = ps2.ps_suppkey
-        |    JOIN nation n2 ON s2.s_nationkey = n2.n_nationkey
-        |    JOIN region r2 ON n2.n_regionkey = r2.r_regionkey
-        |    WHERE ps2.ps_partkey = p_partkey AND r2.r_name = 'EUROPE')
-        |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-
-    "q9_product_profit" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT n_name AS nation,
-        |  CAST(YEAR(o_orderdate) AS BIGINT) AS o_year,
-        |  ROUND(CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |    - ps_supplycost * l_quantity AS DECIMAL(18,6))) AS DOUBLE), 2)
-        |    AS sum_profit
-        |FROM lineitem
-        |JOIN ps ON ps_partkey = l_partkey AND ps_suppkey = l_suppkey
-        |JOIN part ON p_partkey = l_partkey
-        |JOIN supplier ON s_suppkey = l_suppkey
-        |JOIN orders ON o_orderkey = l_orderkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |WHERE p_name LIKE 'red%'
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "q11_important_stock" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |         MIN(l_extendedprice / l_quantity) AS ps_supplycost,
-        |         SUM(l_quantity) AS ps_availqty
-        |  FROM lineitem GROUP BY 1, 2),
-        |val AS (
-        |  SELECT ps_partkey,
-        |         SUM(CAST(ps_supplycost * ps_availqty AS DECIMAL(18,6)))
-        |           AS v
-        |  FROM ps JOIN supplier ON ps_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'ASIA'
-        |  GROUP BY ps_partkey)
-        |SELECT ps_partkey, ROUND(CAST(v AS DOUBLE), 2) AS value
-        |FROM val WHERE v > (SELECT SUM(v) * 0.001 FROM val)
-        |ORDER BY value DESC, ps_partkey""".stripMargin,
-
-    "q16_supplier_relationship" ->
-      """WITH ps AS (
-        |  SELECT DISTINCT l_partkey AS ps_partkey,
-        |         l_suppkey AS ps_suppkey
-        |  FROM lineitem)
-        |SELECT p_brand, p_type, p_size,
-        |       COUNT(DISTINCT ps_suppkey) AS supplier_cnt
-        |FROM ps JOIN part ON p_partkey = ps_partkey
-        |WHERE p_brand <> 'Brand#3' AND p_type <> 'PROMO'
-        |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-        |  AND ps_suppkey NOT IN (SELECT s_suppkey FROM supplier
-        |                         WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, p_brand, p_type, p_size""".stripMargin,
-
-    "q20_potential_promotion" ->
-      """WITH ps AS (
-        |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
-        |         SUM(l_quantity) AS ps_availqty
-        |  FROM lineitem GROUP BY 1, 2)
-        |SELECT s_suppkey, s_name FROM supplier
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'EUROPE'
-        |  AND s_suppkey IN (
-        |    SELECT ps_suppkey FROM ps
-        |    WHERE ps_partkey IN (SELECT p_partkey FROM part
-        |                         WHERE p_name LIKE 'red%')
-        |      AND ps_availqty > (
-        |        SELECT 2 * SUM(l.l_quantity) FROM lineitem l
-        |        WHERE l.l_partkey = ps_partkey
-        |          AND l.l_suppkey = ps_suppkey
-        |          AND l.l_shipdate >= TIMESTAMP '1996-01-01'
-        |          AND l.l_shipdate < TIMESTAMP '1997-01-01'))
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "s2_scan_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_quantity > 45 ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
-
-    "s5_lake_roundtrip" ->
-      """WITH src AS (SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS date,
-        |                    value
-        |             FROM events),
-        |m AS (SELECT MIN(date) AS d FROM src)
-        |SELECT COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value,
-        |       MIN(m.d) AS part_date
-        |FROM src, m WHERE src.date = m.d""".stripMargin,
-
-    "s6_orc_roundtrip" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |       ROUND(SUM(value), 2) AS sum_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "s7_jsonl_roundtrip" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-        |       CAST(SUM(doc_id) AS BIGINT) AS id_sum,
-        |       CAST(SUM(length(text)) AS BIGINT) AS chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "s9_csv_roundtrip" ->
-      """SELECT lang, COUNT(*) AS n_docs,
-        |       CAST(SUM(doc_id) AS BIGINT) AS id_sum,
-        |       CAST(SUM(length(text)) AS BIGINT) AS chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    // content half of the compaction contract: the rewritten relation is
-    // exactly the source table (the layout half — fewer files, zero row
-    // drift — is enforced in-query and cannot be expressed as SQL)
-    "s10_compaction" ->
-      """SELECT doc_id, text, lang, source, n_chars
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "s8_schema_evolution" ->
-      """SELECT CAST(CASE WHEN p_partkey % 2 = 0 THEN 1 ELSE 2 END AS BIGINT)
-        |         AS gen,
-        |       COUNT(*) AS n,
-        |       COUNT(CASE WHEN p_partkey % 2 = 1 THEN 1 END) AS n_priced,
-        |       ROUND(SUM(CASE WHEN p_partkey % 2 = 1 THEN p_retailprice
-        |                      ELSE 0 END), 2) AS price_sum
-        |FROM part GROUP BY 1 ORDER BY gen""".stripMargin,
-
-    "j11_bloom_filter_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n_items,
-        |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount)
-        |                     AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_totalprice > 450000
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "o4_reservoir_pergroup" ->
-      """SELECT event_type, event_id, user_id, rn FROM (
-        |  SELECT event_type, event_id, user_id,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY md5(CAST(event_id AS VARCHAR) || '-seed42'),
-        |               event_id) AS rn
-        |  FROM events) WHERE rn <= 20
-        |ORDER BY event_type, rn""".stripMargin,
-
-    "j9_partition_pruned_join" ->
-      """WITH src AS (SELECT strftime(ts::TIMESTAMP, '%Y-%m-%d') AS date,
-        |                    value
-        |             FROM events),
-        |dates AS (SELECT DISTINCT date FROM src ORDER BY date LIMIT 3),
-        |cut AS (SELECT MAX(date) AS c FROM dates)
-        |SELECT COUNT(*) AS n_events, ROUND(SUM(value), 2) AS sum_value,
-        |       MIN(cut.c) AS cutoff_date
-        |FROM src, cut WHERE src.date <= cut.c""".stripMargin,
-
-    "f1_key_existence" ->
-      """SELECT event_id, event_type, user_id FROM events
-        |WHERE event_type IN ('click','view') AND props IS NOT NULL
-        |  AND user_id IS NOT NULL ORDER BY event_id""".stripMargin,
-
-    "f2_equality_drop" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |WHERE o_orderstatus = 'F' ORDER BY o_orderkey""".stripMargin,
-
-    "f3_null_filter" ->
-      """SELECT event_id, value FROM events
-        |WHERE value IS NOT NULL AND props IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-
-    "f4_range_antifilter" ->
-      """SELECT l_orderkey, l_linenumber, l_discount FROM lineitem
-        |WHERE NOT (l_shipdate > TIMESTAMP '1997-01-01' AND l_discount < 0.02)
-        |ORDER BY l_orderkey, l_linenumber, l_discount""".stripMargin,
-
-    "f5_notnull_column" ->
-      """SELECT event_id, user_id FROM events
-        |WHERE user_id IS NOT NULL ORDER BY event_id""".stripMargin,
-
-    "f6_negated_membership" ->
-      """SELECT c_custkey, c_mktsegment FROM customer
-        |WHERE c_mktsegment NOT IN ('BUILDING','MACHINERY')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "f7_threshold" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |WHERE o_totalprice < 5000.0 ORDER BY o_orderkey""".stripMargin,
-
-    "f8_regex_mask" ->
-      """SELECT p_partkey, p_type FROM part
-        |WHERE NOT regexp_matches(p_type, 'BRASS|COPPER')
-        |  AND NOT regexp_matches(p_type, '^ECONOMY')
-        |ORDER BY p_partkey""".stripMargin,
-
-    "p1_null_prune" ->
-      """SELECT event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts, user_id,
-        |       event_type, value, props
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p2_projection" ->
-      """SELECT p_partkey, p_name, p_brand, p_retailprice FROM part
-        |ORDER BY p_partkey""".stripMargin,
-
-    "p4_rename_bulk" ->
-      """SELECT l_orderkey AS order_id, l_linenumber AS line_no,
-        |       l_quantity AS qty, l_extendedprice AS price
-        |FROM lineitem ORDER BY order_id, line_no, qty, price""".stripMargin,
-
-    "p5_synonym_coalesce" ->
-      """SELECT event_id,
-        |  COALESCE(CASE WHEN event_type='click' THEN value END,
-        |           CASE WHEN event_type='view' THEN value END) AS merged_value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p6_dedup_subset" ->
-      """SELECT o_custkey, MIN(o_orderkey) AS first_orderkey,
-        |       COUNT(*) AS n_orders
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-
-    "p6b_distinct" ->
-      """SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "x7_parse_dollars" ->
-      """SELECT p_partkey,
-        |  CASE WHEN p_partkey % 3 = 0 THEN printf('$%d million', p_size)
-        |       WHEN p_partkey % 3 = 1 THEN printf('$%d billion', p_size)
-        |       ELSE 'N/A' END AS money_str,
-        |  CASE WHEN p_partkey % 3 = 0 THEN p_size * 1e6
-        |       WHEN p_partkey % 3 = 1 THEN p_size * 1e9
-        |       ELSE NULL END AS parsed
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "x1_flatten_join" ->
-      """SELECT doc_id,
-        |  CAST(length(array_to_string(string_split(text, ' '), ' '))
-        |    - length(text) AS BIGINT) AS len_delta
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x2_regex_capture" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 3 <> 0 THEN
-        |    regexp_extract(printf('https://www.imdb.com/title/tt%07d/',
-        |                          o_orderkey), '(tt\d{7})', 1)
-        |  END AS imdb_id
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "x3_money_cleanup" ->
-      """SELECT p_partkey, (p_size + 5) * 1e6 AS parsed
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "x13_date_cascade" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%B %-d, %Y')
-        |       WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
-        |       WHEN o_orderkey % 4 = 2 THEN strftime(o_orderdate, '%B %Y')
-        |       ELSE strftime(o_orderdate, '%Y') END AS date_str,
-        |  CASE WHEN o_orderkey % 4 = 0 THEN strftime(o_orderdate, '%Y-%m-%d')
-        |       WHEN o_orderkey % 4 = 1 THEN strftime(o_orderdate, '%Y-%m-%d')
-        |       WHEN o_orderkey % 4 = 2
-        |         THEN strftime(date_trunc('month', o_orderdate), '%Y-%m-%d')
-        |       ELSE strftime(date_trunc('year', o_orderdate), '%Y-%m-%d')
-        |  END AS parsed_date
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "x9_running_time" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_linenumber % 4 = 0
-        |         THEN printf('%d minutes', CAST(l_quantity AS INT))
-        |       WHEN l_linenumber % 4 = 1
-        |         THEN printf('%d hours %d minutes',
-        |                     CAST(l_quantity AS INT) % 4,
-        |                     CAST(l_quantity AS INT))
-        |       WHEN l_linenumber % 4 = 2
-        |         THEN printf('%d h %d m', CAST(l_quantity AS INT) % 4,
-        |                     CAST(l_quantity AS INT))
-        |       ELSE 'unknown' END AS time_str,
-        |  CASE WHEN l_linenumber % 4 = 0 THEN CAST(l_quantity AS INT) * 1.0
-        |       WHEN l_linenumber % 4 IN (1, 2)
-        |         THEN (CAST(l_quantity AS INT) % 4) * 60.0
-        |              + CAST(l_quantity AS INT)
-        |       ELSE NULL END AS minutes
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, time_str, minutes""".stripMargin,
-
-    "x11_coalesce_if_zero" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CASE WHEN l_tax = 0 THEN l_discount ELSE l_tax END AS merged_rate
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, merged_rate""".stripMargin,
-
-    "x12_casts" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(l_quantity AS BIGINT) AS qty_int,
-        |  TRY_CAST(l_returnflag AS DOUBLE) AS bad_num
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, qty_int""".stripMargin,
-
-    "x18_json_extract" ->
-      """SELECT event_id,
-        |  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "x15_epoch_seconds" ->
-      """SELECT event_id,
-        |  strftime(make_timestamp((event_id + 1700000000) * 1000000),
-        |           '%Y-%m-%d %H:%M:%S') AS ts_str
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "j1_inner_join" ->
-      """SELECT o_orderkey, o_totalprice, c_name AS name_customer,
-        |       c_acctbal AS acctbal_customer
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "j2_left_join_fill" ->
-      """SELECT c_custkey, c_name, COALESCE(n_orders, 0) AS n_orders,
-        |       COALESCE(total_spent, 0) AS total_spent
-        |FROM customer LEFT JOIN (
-        |  SELECT o_custkey, COUNT(*) AS n_orders,
-        |         ROUND(SUM(o_totalprice), 2) AS total_spent
-        |  FROM orders GROUP BY o_custkey) agg
-        |ON c_custkey = agg.o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "j3_semi_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE c_custkey IN
-        |  (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "j4_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "j5_asof_join" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts::TIMESTAMP AS ts, value
-        |  FROM events WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id, ts::TIMESTAMP AS ts, MAX(value) AS view_value
-        |  FROM events WHERE event_type = 'view' GROUP BY user_id, ts)
-        |SELECT c.event_id, c.user_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
-        |  c.value AS click_value,
-        |  strftime(v.ts, '%Y-%m-%d %H:%M:%S') AS view_ts,
-        |  v.view_value
-        |FROM clicks c ASOF LEFT JOIN views v
-        |  ON c.user_id = v.user_id AND v.ts <= c.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    "set1_union" ->
-      """SELECT key, COUNT(*) AS n FROM (
-        |  SELECT c_custkey AS key FROM customer
-        |  UNION ALL SELECT o_custkey FROM orders)
-        |GROUP BY key ORDER BY key""".stripMargin,
-
-    "set2_intersect" ->
-      """SELECT c_custkey AS key FROM customer
-        |INTERSECT SELECT o_custkey FROM orders
-        |ORDER BY key""".stripMargin,
-
-    "set3_except" ->
-      """SELECT c_custkey AS key FROM customer
-        |EXCEPT SELECT o_custkey FROM orders WHERE o_totalprice > 400000
-        |ORDER BY key""".stripMargin,
-
-    "j8_full_outer" ->
-      """WITH t AS (SELECT o_custkey, COUNT(*) AS n_orders
-        |           FROM orders GROUP BY o_custkey)
-        |SELECT COALESCE(c_custkey, o_custkey) AS key, c_name, n_orders
-        |FROM customer FULL OUTER JOIN t ON c_custkey = o_custkey
-        |ORDER BY key""".stripMargin,
-
-    "q12_priority_classes" ->
-      """SELECT o_orderstatus,
-        |  CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders GROUP BY o_orderstatus
-        |ORDER BY o_orderstatus""".stripMargin,
-
-    "j7_salted_join" ->
-      """SELECT o_orderpriority, COUNT(*) AS n,
-        |  ROUND(SUM(l_extendedprice), 2) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "j12_forward_asof" ->
-      """WITH c AS (SELECT event_id, user_id, ts::TIMESTAMP AS ts, value
-        |           FROM events WHERE event_type = 'click'),
-        |v AS (SELECT user_id, ts::TIMESTAMP AS ts,
-        |        MAX(value) AS view_value
-        |      FROM events WHERE event_type = 'view' GROUP BY 1, 2)
-        |SELECT c.event_id, c.user_id,
-        |  strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS click_ts,
-        |  c.value AS click_value,
-        |  strftime(m.ts, '%Y-%m-%d %H:%M:%S') AS next_view_ts,
-        |  m.view_value
-        |FROM c LEFT JOIN LATERAL (
-        |  SELECT v.ts, v.view_value FROM v
-        |  WHERE v.user_id = c.user_id AND v.ts >= c.ts
-        |    AND v.ts <= c.ts + INTERVAL '2 hours'
-        |  ORDER BY v.ts, v.view_value LIMIT 1) m ON TRUE
-        |ORDER BY event_id""".stripMargin,
-
-    "j6_range_join" ->
-      """WITH bands(band, lo, hi) AS (
-        |  VALUES ('low', 0.0, 8.0), ('mid', 8.0, 16.0),
-        |         ('high', 16.0, 1e9))
-        |SELECT band, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
-        |FROM events e JOIN bands b ON e.value >= b.lo AND e.value < b.hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-
-    "j6b_bucketed_range_join" ->
-      """WITH bands AS (
-        |  SELECT unnest(generate_series(0, 999)) AS band),
-        |b AS (SELECT band, band * CAST(0.1 AS DOUBLE) AS lo,
-        |             (band + 1) * CAST(0.1 AS DOUBLE) AS hi FROM bands)
-        |SELECT band, COUNT(*) AS n, ROUND(SUM(value), 2) AS sum_value
-        |FROM events e JOIN b ON e.value >= b.lo AND e.value < b.hi
-        |GROUP BY band ORDER BY band""".stripMargin,
-
-    "a1_groupby_count" ->
-      """SELECT l_returnflag, l_linestatus, COUNT(l_orderkey) AS cnt
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "a2_pivot" ->
-      """SELECT o_orderpriority,
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS "F",
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS "O",
-        |  COUNT(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "a3_null_counts" ->
-      """SELECT COUNT(*) - COUNT(event_id) AS nulls_event_id,
-        |       COUNT(*) - COUNT(ts) AS nulls_ts,
-        |       COUNT(*) - COUNT(user_id) AS nulls_user_id,
-        |       COUNT(*) - COUNT(event_type) AS nulls_event_type,
-        |       COUNT(*) - COUNT(value) AS nulls_value,
-        |       COUNT(*) - COUNT(props) AS nulls_props
-        |FROM events""".stripMargin,
-
-    "a4_value_counts" ->
-      """SELECT event_type, COUNT(*) AS cnt FROM events
-        |GROUP BY event_type ORDER BY cnt DESC, event_type""".stripMargin,
-
-    "a5_describe" ->
-      """SELECT COUNT(l_quantity) AS cnt,
-        |  ROUND(AVG(l_quantity), 4) AS mean,
-        |  ROUND(STDDEV(l_quantity), 4) AS std,
-        |  MIN(l_quantity) AS min,
-        |  ROUND(quantile_cont(l_quantity, 0.25), 4) AS p25,
-        |  ROUND(quantile_cont(l_quantity, 0.5), 4) AS p50,
-        |  ROUND(quantile_cont(l_quantity, 0.75), 4) AS p75,
-        |  MAX(l_quantity) AS max
-        |FROM lineitem""".stripMargin,
-
-    "a5b_describe_approx" ->
-      """SELECT COUNT(l_quantity) AS cnt,
-        |  ROUND(quantile_disc(l_quantity, 0.25), 4) AS p25,
-        |  ROUND(quantile_disc(l_quantity, 0.5), 4) AS p50,
-        |  ROUND(quantile_disc(l_quantity, 0.75), 4) AS p75
-        |FROM lineitem""".stripMargin,
-
-    "a6_histogram" ->
-      """SELECT CAST(FLOOR(l_quantity / 5) AS BIGINT) AS bin,
-        |       COUNT(*) AS cnt
-        |FROM lineitem GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    "a7_distinct_scan" ->
-      """SELECT COUNT(DISTINCT o_orderstatus) AS nd_status,
-        |       COUNT(DISTINCT o_orderpriority) AS nd_priority,
-        |       COUNT(DISTINCT o_custkey) AS nd_custkey
-        |FROM orders""".stripMargin,
-
-    "a8_counts" ->
-      """SELECT (SELECT COUNT(*) FROM lineitem) AS lineitem_cnt,
-        |       (SELECT COUNT(*) FROM orders) AS orders_cnt,
-        |       (SELECT COUNT(*) FROM customer) AS customer_cnt""".stripMargin,
-
-    "o1_head" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_orderkey LIMIT 5""".stripMargin,
-
-    "o1b_tail" ->
-      """SELECT o_orderkey, o_totalprice FROM (
-        |  SELECT o_orderkey, o_totalprice FROM orders
-        |  ORDER BY o_orderkey DESC LIMIT 5)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "o2_sample_mod" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE l_orderkey % 500 = 0
-        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
-
-    "o3_slice" ->
-      """SELECT o_orderkey, o_custkey FROM orders
-        |ORDER BY o_orderkey LIMIT 10 OFFSET 100""".stripMargin,
-
-    "w1_row_number" ->
-      """SELECT o_custkey, rn, o_orderkey, order_date FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |    strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_orderdate, o_orderkey) AS rn
-        |  FROM orders) WHERE rn <= 3
-        |ORDER BY o_custkey, rn""".stripMargin,
-
-    "w2_running_sum" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  ROUND(SUM(l_quantity) OVER (PARTITION BY l_orderkey
-        |    ORDER BY l_linenumber, l_quantity
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
-        |    AS running_qty
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, running_qty""".stripMargin,
-
-    "w3_lag_lead" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice,
-        |  LAG(o_totalprice, 1) OVER w AS prev_price,
-        |  LEAD(o_totalprice, 1) OVER w AS next_price
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY o_orderdate, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "w4_range_frame" ->
-      """SELECT o_orderkey, o_custkey,
-        |  strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-        |  ROUND(SUM(o_totalprice) OVER (
-        |    PARTITION BY o_custkey ORDER BY epoch(o_orderdate)
-        |    RANGE BETWEEN 2592000 PRECEDING AND CURRENT ROW), 2)
-        |    AS trailing_30d_spend
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "g1_rollup" ->
-      """SELECT COALESCE(o_orderpriority, '(all)') AS o_orderpriority,
-        |  COALESCE(o_orderstatus, '(all)') AS o_orderstatus,
-        |  COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS sum_price
-        |FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-        |ORDER BY o_orderpriority, o_orderstatus""".stripMargin,
-
-    "g2_cube" ->
-      """SELECT COALESCE(l_returnflag, '(all)') AS l_returnflag,
-        |  COALESCE(l_linestatus, '(all)') AS l_linestatus, COUNT(*) AS n
-        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "a9_correlation" ->
-      """SELECT l_returnflag,
-        |  ROUND(corr(l_quantity, l_extendedprice), 4) + 0.0
-        |    AS corr_qty_price,
-        |  ROUND(covar_samp(l_quantity, l_discount), 6) + 0.0
-        |    AS covar_qty_disc,
-        |  ROUND(stddev_samp(l_extendedprice), 2) AS std_price,
-        |  COUNT(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "w5_rank_distribution" ->
-      """SELECT o_orderkey, o_orderpriority,
-        |  NTILE(4) OVER w AS quartile,
-        |  ROUND(PERCENT_RANK() OVER w, 6) AS pct_rank,
-        |  ROUND(CUME_DIST() OVER w, 6) AS cume
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_orderpriority
-        |             ORDER BY o_totalprice, o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "g3_grouping_sets" ->
-      """SELECT COALESCE(o_orderstatus, '(all)') AS status,
-        |  COALESCE(o_orderpriority, '(all)') AS priority,
-        |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
-        |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
-        |  COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS sum_price
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY status, priority""".stripMargin,
-
-    "w6_cumulative_distinct" ->
-      """WITH first_day AS (
-        |  SELECT event_type, user_id, MIN(CAST(ts::TIMESTAMP AS DATE))
-        |           AS day
-        |  FROM events GROUP BY 1, 2),
-        |daily AS (
-        |  SELECT event_type, day, COUNT(*) AS new_users
-        |  FROM first_day GROUP BY 1, 2)
-        |SELECT event_type, strftime(day, '%Y-%m-%d') AS day, new_users,
-        |       CAST(SUM(new_users) OVER (PARTITION BY event_type
-        |         ORDER BY day) AS BIGINT) AS cum_users
-        |FROM daily ORDER BY event_type, day""".stripMargin,
-
-    "a16_benford_audit" ->
-      """WITH c AS (
+    },
+      Some("""WITH c AS (
         |  SELECT CAST(FLOOR(o_totalprice
         |           / POW(10.0, FLOOR(LOG10(o_totalprice) + 1e-9)))
         |           AS BIGINT)
@@ -2548,6 +2321,43 @@ object QueriesCore {
         |    AS share_bp,
         |  CAST(FLOOR(LOG10(1.0 + 1.0 / digit) * 10000) AS BIGINT)
         |    AS benford_bp
-        |FROM c, t ORDER BY digit""".stripMargin
+        |FROM c, t ORDER BY digit""".stripMargin)),
+
+    // engine extra: GROUPING SETS with grouping() marker columns — the SQL
+    // surface (temp view + spark.sql), planned as a single Expand+agg pass
+    QuerySpec("g3_grouping_sets", (s, d) => {
+      orders(s, d).createOrReplaceTempView("g3_orders")
+      s.sql("""SELECT coalesce(o_orderstatus, '(all)') AS status,
+              |  coalesce(o_orderpriority, '(all)') AS priority,
+              |  cast(grouping(o_orderstatus) AS BIGINT) AS g_status,
+              |  cast(grouping(o_orderpriority) AS BIGINT) AS g_priority,
+              |  count(*) AS n, round(sum(o_totalprice), 2) AS sum_price
+              |FROM g3_orders
+              |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+              |ORDER BY status, priority""".stripMargin)
+    },
+      Some("""SELECT COALESCE(o_orderstatus, '(all)') AS status,
+        |  COALESCE(o_orderpriority, '(all)') AS priority,
+        |  CAST(GROUPING(o_orderstatus) AS BIGINT) AS g_status,
+        |  CAST(GROUPING(o_orderpriority) AS BIGINT) AS g_priority,
+        |  COUNT(*) AS n, ROUND(SUM(o_totalprice), 2) AS sum_price
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY status, priority""".stripMargin)),
+
+    // engine extra: cube — all grouping combinations
+    QuerySpec("g2_cube", (s, d) =>
+      lineitem(s, d)
+        .cube(col("l_returnflag"), col("l_linestatus"))
+        .agg(count(lit(1)).as("n"))
+        .select(coalesce(col("l_returnflag"), lit("(all)"))
+            .as("l_returnflag"),
+          coalesce(col("l_linestatus"), lit("(all)")).as("l_linestatus"),
+          col("n"))
+        .orderBy(col("l_returnflag"), col("l_linestatus")),
+      Some("""SELECT COALESCE(l_returnflag, '(all)') AS l_returnflag,
+        |  COALESCE(l_linestatus, '(all)') AS l_linestatus, COUNT(*) AS n
+        |FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin))
   )
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.MovieEtl
 
@@ -25,10 +24,8 @@ object QueriesEtl {
     */
   private val fx = "/root/repo/src/test/resources/fixtures"
 
-  type Q = (SparkSession, String) => DataFrame
-
-  val queries: Map[String, Q] = Map(
-    "e1_movie_pipeline" -> ((s, _) => {
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("e1_movie_pipeline", (s, _) => {
       // readWikiJson flips spark.sql.caseSensitive=true for the wiki schema
       // ("Release date" vs "Release Date"). The flip is scoped to a child
       // session (shared SparkContext, isolated SessionState) so a shared
@@ -59,12 +56,8 @@ object QueriesEtl {
           (out.collect().head, out.schema)
         }
       s.createDataFrame(java.util.Collections.singletonList(row), schema)
-    })
-  )
-
-  val oracles: Map[String, String] = Map(
-    "e1_movie_pipeline" ->
-      s"""WITH wiki AS (
+    },
+      Some(s"""WITH wiki AS (
          |  SELECT * FROM read_json_auto('$fx/wikipedia.movies.json')),
          |filt AS (
          |  SELECT NULLIF(regexp_extract(imdb_link, 'tt\\d{7}'), '')
@@ -93,6 +86,6 @@ object QueriesEtl {
          |  CAST(31 AS BIGINT) AS n_movie_cols,
          |  CAST(10 AS BIGINT) AS n_rating_cols,
          |  (SELECT COUNT(*) FROM rat) AS n_ratings
-         |FROM merged m LEFT JOIN rc ON m.kaggle_id = rc.movieId""".stripMargin
+         |FROM merged m LEFT JOIN rc ON m.kaggle_id = rc.movieId""".stripMargin))
   )
 }

@@ -129,7 +129,7 @@ object Dedup {
     * form that also re-evaluates inside Generate nodes). Bit-identical —
     * the semantic reference GramStrings' parity tests replay against.
     */
-  private[graft] def wordGramsChain(toks: Column, k: Int): Column = {
+  private[ops] def wordGramsChain(toks: Column, k: Int): Column = {
     val len = greatest(size(toks) - (k - 1), lit(1))
     val joined = (0 until k)
       .map(i => slice(toks, lit(i + 1), len))

@@ -140,8 +140,4 @@ object Expressions {
     */
   def coalesceIfZero(kaggle: Column, wiki: Column): Column =
     when(kaggle === 0, wiki).otherwise(kaggle)
-
-  /** X10 standalone — hour/minute arithmetic on already-extracted groups. */
-  def hoursMinutes(h: Column, m: Column, pureM: Column): Column =
-    when(pureM === 0, h * 60 + m).otherwise(pureM)
 }

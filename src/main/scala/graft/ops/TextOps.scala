@@ -86,8 +86,8 @@ object TextOps {
     round((lengthTerm + stopTerm + punctTerm) / 3.0, 4)
   }
 
-  /** Single-expression convenience forms (each recomputes the counts —
-    * fine standalone; multi-feature pipelines should select [[rawCounts]]
+  /** Single-expression convenience form (recomputes the counts — fine
+    * standalone; multi-feature pipelines should select [[rawCounts]]
     * first and use the `FromCounts` variants).
     */
   def qualityFeatures(text: Column): Seq[(String, Column)] = {
@@ -97,10 +97,6 @@ object TextOps {
       qualityFeaturesFromCounts(chars, wordCount(text), punctCount(text),
         markerCount(text, stopwords))
   }
-
-  def qualityScore(text: Column): Column =
-    qualityScoreFromCounts(length(text), wordCount(text), punctCount(text),
-      markerCount(text, stopwords))
 
   /** Exact corpus TF-IDF: per-(doc, term) score = tf × ln(N/df).
     * SINGLE tokenize pass: term frequency aggregates the exploded token

@@ -85,7 +85,22 @@ class BenchSpec extends AnyFunSuite {
   test("every scale-rehearsal query is a real catalog headline") {
     ScaleBench.scaleQueries.foreach { q =>
       assert(Bench.headlineQueries.contains(q), s"$q not in headline set")
-      assert(SparkEntry.queries.contains(q), s"$q not in the catalog")
     }
+    // Bench and PlanAudit run the headline list as is: a misspelt name
+    // must fail here, not drop out of the bench
+    Bench.headlineQueries.foreach { q =>
+      assert(SparkEntry.queries.contains(q), s"headline $q not in the catalog")
+    }
+  }
+
+  test("the registry: unique names, 244 queries, 215 oracles") {
+    val spec = QuerySpec("x", (s, _) => s.emptyDataFrame)
+    assert(SparkEntry.unique(Seq(spec, spec.copy(name = "y"))).size == 2)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.unique(Seq(spec, spec.copy(name = "y"), spec)))
+    assert(e.getMessage.contains("declared twice: x"))
+    assert(SparkEntry.queries.size == 244)
+    assert(SparkEntry.oracleSql.size == 215)
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 }

@@ -146,7 +146,7 @@ class MovieEtlSpec extends SparkSpec {
     // entry scopes the flip to a child session so a shared Verify/Bench
     // session keeps its resolution semantics regardless of run order
     spark.conf.set("spark.sql.caseSensitive", "false")
-    val row = graft.QueriesEtl.queries("e1_movie_pipeline")(spark, "")
+    val row = graft.SparkEntry.queries("e1_movie_pipeline")(spark, "")
       .collect().head
     assert(row.getLong(0) > 0)
     assert(spark.conf.get("spark.sql.caseSensitive") == "false")

@@ -297,7 +297,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("ts2: each text regex evaluated once (two-stage projection held)") {
-    val plan = QueriesScale.queries("ts2_quality")(spark, sf)
+    val plan = SparkEntry.queries("ts2_quality")(spark, sf)
       .queryExecution.optimizedPlan.toString
     def occurrences(needle: String): Int =
       plan.sliding(needle.length).count(_ == needle)
