@@ -9,7 +9,7 @@ import graft.etl.MovieEtl
   * The entry runs [[MovieEtl.run]] over the repo's synthesized fixtures
   * (FIXTURES.md §A) and reduces the result to one row of checkpoint facts:
   * merged-movie cardinality, vote-count mass carried through the join, two
-  * rating-pivot column sums (exercising groupBy+pivot+left-join+fill), the
+  * rating-column sums (exercising rating counts+left-join+fill), the
   * 31-column movies contract, the 10 rating columns appended, and the raw
   * ratings passthrough count. The oracle recomputes every data-dependent
   * value from the same fixture files in DuckDB (json/csv readers, filter,

@@ -32,15 +32,17 @@ object Load {
 
   /** Append to a relational table over JDBC. Spark partitions the write
     * natively — the scalable replacement for the reference's 1 M-row chunk
-    * loop (numPartitions bounds connection fan-out at cluster scale).
+    * loop. `numPartitions` is the writer's connection cap: Spark coalesces
+    * only an input with more partitions than that, and never shuffles.
     */
   def jdbc(df: DataFrame, url: String, table: String,
       user: String, password: String, numPartitions: Int = 8): Unit = {
     val props = new java.util.Properties()
     props.setProperty("user", user)
     props.setProperty("password", password)
-    df.repartition(numPartitions)
-      .write.mode("append").jdbc(url, table, props)
+    df.write.mode("append")
+      .option("numPartitions", numPartitions.toString)
+      .jdbc(url, table, props)
   }
 
   /** Truncate-then-load — the engine-side form of the reference's manual
@@ -57,8 +59,8 @@ object Load {
     val props = new java.util.Properties()
     props.setProperty("user", user)
     props.setProperty("password", password)
-    df.repartition(numPartitions)
-      .write.mode("overwrite")
+    df.write.mode("overwrite")
+      .option("numPartitions", numPartitions.toString)
       .option("truncate", truncate.toString)
       .jdbc(url, table, props)
   }

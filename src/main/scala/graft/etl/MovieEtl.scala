@@ -25,12 +25,24 @@ final case class EtlResult(
 
 object MovieEtl {
 
+  /** Extract and transform run once per call, as the reference reads each
+    * source once into a frame it reuses. The frames read by more than one
+    * sink are materialised eagerly with `localCheckpoint`: `movies` (the
+    * movies sink, the ratings attach and the JDBC sink), the raw `ratings`
+    * (the counts and the ratings sink), and inside [[WikiClean.clean]] the
+    * filtered wiki frame the null profile reads. So no sink re-reads the
+    * input files. The checkpoint blocks live in executor storage, not in
+    * the CacheManager, and the ContextCleaner frees them once the
+    * [[EtlResult]] is unreachable. `moviesWithRatings` and the rating
+    * counts have one consumer each and stay lazy.
+    */
   def run(spark: SparkSession, wikiPath: String, kagglePath: String,
       ratingsPath: String, config: EtlConfig = EtlConfig()): EtlResult = {
     // EXTRACT (S1-S3)
     val wikiRaw = Extract.readWikiJson(spark, wikiPath)
     val kaggleRaw = Extract.readCsv(spark, kagglePath)
     val ratings = Extract.readCsv(spark, ratingsPath)
+      .localCheckpoint(eager = true)
 
     // TRANSFORM: wiki (F1, P5, X1-X10, P1), kaggle (F2, X12-X14)
     val wiki = WikiClean.clean(wikiRaw, dedup = config.dedupWiki)
@@ -41,6 +53,7 @@ object MovieEtl {
     val outlierHandled =
       if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
     val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
+      .localCheckpoint(eager = true)
 
     // RATINGS (A1, A2, J2)
     val withRatings = Ratings.attach(movies, Ratings.ratingCounts(ratings))

@@ -3,13 +3,13 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Ratings aggregation + attach (challenge.py:290-302): group counts per
-  * (movieId, rating), pivot the 10 rating values to columns, left-join onto
-  * movies by kaggle_id, fill unmatched with 0.
+/** Ratings aggregation + attach (challenge.py:290-302): count each movie's
+  * ratings per value into the 10 rating columns, left-join onto movies by
+  * kaggle_id, fill unmatched with 0.
   */
 object Ratings {
 
-  /** The 10 rating values, pivoted in ascending order (pandas emits columns
+  /** The 10 rating values in ascending order (pandas emits columns
     * sorted by value; explicit list pins Spark's column order — SURVEY H4).
     */
   val ratingValues: Seq[Double] =
@@ -17,18 +17,19 @@ object Ratings {
 
   val ratingColumns: Seq[String] = ratingValues.map(v => s"rating_$v")
 
-  /** A1+A2 — one-step groupBy+pivot (pandas' two-step groupby+pivot,
-    * challenge.py:293). The count aggregates userId (the reference renames
-    * userId→count), so null userIds would not count — count("userId").
+  /** A1+A2 — per-movie counts of each rating value as one conditional
+    * aggregation (pandas' two-step groupby+pivot, challenge.py:293): one
+    * aggregate keyed on movieId alone, where the builtin pivot plans a
+    * (movieId, rating) aggregate, a second aggregate and two exchanges.
+    * The count aggregates userId (the reference renames userId→count), so
+    * null userIds do not count; ratings outside [[ratingValues]] are
+    * ignored. A value a movie never received counts 0 (the pivot's null),
+    * which [[attach]]'s fill makes the same downstream.
     */
   def ratingCounts(ratings: DataFrame): DataFrame = {
-    val pivoted = ratings
-      .groupBy(col("movieId"))
-      .pivot("rating", ratingValues)
-      .agg(count(col("userId")))
-    // rename value columns 0.5..5.0 → rating_0.5..rating_5.0 (:296)
-    ratingValues.foldLeft(pivoted)((d, v) =>
-      d.withColumnRenamed(v.toString, s"rating_$v"))
+    val counts = ratingValues.map(v =>
+      count(when(col("rating") === v, col("userId"))).as(s"rating_$v"))
+    ratings.groupBy(col("movieId")).agg(counts.head, counts.tail: _*)
   }
 
   /** J2 — left join + fillna(0) on the rating columns only

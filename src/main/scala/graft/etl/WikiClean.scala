@@ -109,15 +109,23 @@ object WikiClean {
   def dedupImdb(df: DataFrame): DataFrame = df.dropDuplicates("imdb_id")
 
   /** P1 — data-dependent pruning: keep columns with <90% nulls
-    * (challenge.py:110-111). Two-phase: one aggregate pass, then a select.
+    * (challenge.py:110-111). One pass profiles the frame: each row
+    * emits the index of every null column plus a row marker (-1), and a
+    * one-key count gives the row total and the per-column null counts.
+    * (A `sum(isnull)` per column is one aggregate as wide as the frame,
+    * past whole-stage codegen's field limit on the ~180-key wiki data;
+    * the count's buffer is one long whatever the width.) Then a select.
     */
   def pruneMostlyNull(df: DataFrame): DataFrame = {
-    val total = df.count()
-    val counts = df.select(df.columns.zipWithIndex.map { case (n, i) =>
-      sum(c(n).isNull.cast("long")).as(s"c$i")
-    }.toSeq: _*).head()
+    val marks = lit(-1) +: df.columns.toSeq.zipWithIndex.map {
+      case (n, i) => when(c(n).isNull, lit(i)) }
+    val counts = df.select(explode(array(marks: _*)).as("i"))
+      .filter(col("i").isNotNull)
+      .groupBy("i").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val total = counts.getOrElse(-1, 0L)
     val kept = df.columns.zipWithIndex.collect {
-      case (n, i) if counts.getLong(i) < 0.9 * total => n
+      case (n, i) if counts.getOrElse(i, 0L) < 0.9 * total => n
     }
     df.select(kept.map(c).toSeq: _*)
   }
@@ -200,10 +208,14 @@ object WikiClean {
 
   /** Full wiki stage. `dedup` = DC behavior (drop_duplicates on imdb_id);
     * false = challenge.py behavior (quirk Q5, join fan-out allowed).
+    * The filtered, consolidated frame is materialised once (eager
+    * `localCheckpoint`), so the null profile and every later consumer
+    * read it instead of re-parsing the JSON.
     */
   def clean(raw: DataFrame, dedup: Boolean = false): DataFrame = {
     val base = withImdbId(consolidateColumns(filterMovies(raw)))
-    val deduped = if (dedup) dedupImdb(base) else base
+    val deduped = (if (dedup) dedupImdb(base) else base)
+      .localCheckpoint(eager = true)
     val pruned = pruneMostlyNull(deduped)
     withRunningTime(withReleaseDate(withBudget(withBoxOffice(pruned))))
   }

@@ -1,13 +1,16 @@
 package graft.etl
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end tests of the reference pipeline over the synthesized
   * fixtures (SURVEY §5.2): checkpoint cardinalities, the 31-column output
   * contract, quirk decisions Q3/Q5/Q7, and per-branch parse spot checks.
   */
-class MovieEtlSpec extends SparkSpec {
+class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val wikiRaw =
     Extract.readWikiJson(spark, fixture("wikipedia.movies.json"))
@@ -39,6 +42,75 @@ class MovieEtlSpec extends SparkSpec {
     val cleaned = WikiClean.clean(wikiRaw)
     assert(!cleaned.columns.contains("Mostly Null"))
     assert(cleaned.columns.contains("alt_titles"))
+  }
+
+  /** The null profile as two jobs (row count, then one `sum(isnull)` per
+    * column): the reference that [[WikiClean.pruneMostlyNull]]'s one-pass
+    * profile must agree with.
+    */
+  private def keptByTwoJobs(df: DataFrame): Seq[String] = {
+    val total = df.count()
+    val nulls = df.select(df.columns.toSeq.map(n =>
+      sum(col(s"`$n`").isNull.cast("long"))): _*).head()
+    df.columns.toSeq.zipWithIndex.collect {
+      case (n, i) if nulls.getLong(i) < 0.9 * total => n
+    }
+  }
+
+  test("null pruning boundary: 8 of 10 null kept, 9 of 10 dropped") {
+    import spark.implicits._
+    val df = (0 until 10).map(i => (i, if (i < 8) None else Some(i),
+      if (i < 9) None else Some(i))).toDF("id", "eight_null", "nine_null")
+    assert(WikiClean.pruneMostlyNull(df).columns.toSeq ==
+      Seq("id", "eight_null"))
+  }
+
+  test("null pruning keeps the same columns as the two-job profile") {
+    val base = WikiClean.withImdbId(
+      WikiClean.consolidateColumns(WikiClean.filterMovies(wikiRaw)))
+    val kept = WikiClean.pruneMostlyNull(base).columns.toSeq
+    assert(kept == keptByTwoJobs(base))
+    assert(kept.size < base.columns.length)
+  }
+
+  test("rating counts equal the builtin pivot, null mapped to 0") {
+    import spark.implicits._
+    val raw = Extract.readCsv(spark, fixture("ratings.csv"))
+    // a null userId is not counted; a value outside the 10 is ignored
+    val extra = Seq((Option.empty[Int], 9001, 4.0, 0L),
+        (Some(7), 9001, 0.0, 0L), (Some(8), 424242, 0.0, 0L))
+      .toDF("userId", "movieId", "rating", "timestamp")
+      .select(raw.columns.toSeq.zip(raw.schema.map(_.dataType)).map {
+        case (n, t) => col(n).cast(t) }: _*)
+    val ratings = raw.unionByName(extra)
+    val pivoted = ratings.groupBy(col("movieId"))
+      .pivot("rating", Ratings.ratingValues).agg(count(col("userId")))
+    val expected = pivoted.select(col("movieId") +:
+      Ratings.ratingValues.map(v =>
+        coalesce(col(s"`$v`"), lit(0L)).as(s"rating_$v")): _*)
+    val got = Ratings.ratingCounts(ratings)
+    assert(got.columns.toSeq == "movieId" +: Ratings.ratingColumns)
+    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
+    // the movie with only an out-of-range rating still gets its all-0 row
+    val only0 = got.filter(col("movieId") === 424242).collect()
+    assert(only0.length == 1 && (1 to 10).forall(only0.head.getLong(_) == 0))
+  }
+
+  test("run reads each input once: no file scan behind the sinks") {
+    spark.sharedState.cacheManager.clearCache()
+    Seq(EtlConfig(), EtlConfig(dedupWiki = true)).foreach { cfg =>
+      val r = MovieEtl.run(spark, fixture("wikipedia.movies.json"),
+        fixture("movies_metadata.csv"), fixture("ratings.csv"), cfg)
+      Seq("movies" -> r.movies, "ratings" -> r.ratings,
+          "moviesWithRatings" -> r.moviesWithRatings).foreach {
+        case (n, df) =>
+          val scans = collect(df.queryExecution.executedPlan) {
+            case s: FileSourceScanExec => s }
+          assert(scans.isEmpty, s"$cfg: $n re-reads its input files")
+      }
+      // checkpoints, not cached relations: nothing for a caller to release
+      assert(spark.sharedState.cacheManager.isEmpty, cfg.toString)
+    }
   }
 
   test("movies: 50 rows (challenge.py mode: dup imdb fans out, Q5)") {
