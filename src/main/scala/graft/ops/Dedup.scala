@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Large-scale deduplication operators for a training-data pipeline:
@@ -321,9 +321,10 @@ object Dedup {
   }
 
   /** Exact n-gram Jaccard similarity for doc pairs within the same blocking
-    * group, via inverted-index join (gram → docs), never a cross join.
+    * group, via inverted-index buckets (gram → docs), never a cross join.
     * Blocking columns bound bucket sizes; intersection counts come from the
-    * gram-join group-by, union sizes from per-doc gram counts.
+    * bucket pairs, union sizes from the per-doc gram-set sizes that ride
+    * through the buckets ([[gramIntersections]]).
     *
     * `maxDocFreq` is the document-frequency cutoff that bounds bucket cost:
     * a gram appearing in more than `maxDocFreq` docs of a block (a
@@ -338,58 +339,14 @@ object Dedup {
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int, minJaccard: Double,
-      maxDocFreq: Int = 1000): DataFrame = {
-    // per-row distinct gram-key arrays: per-doc set sizes come for free
-    // (size(array), no shuffle) and no global DISTINCT is needed — grams
-    // are already unique within a doc. Keys are [[blockedGramKeys]]'s
-    // block-folded 64-bit form: the bucket shuffle ships (long, long)
-    // rows instead of block strings + a key (width trade quantified
-    // there — a merged bucket here inflates two intersection counts by
-    // one gram, a ratio nudge orders below the threshold's own
-    // fuzziness). Block cols are constant per doc, so per-doc distinct
-    // and set sizes are the distinct-gram counts the oracle computes
-    // from the raw strings.
-    // the gram arrays are referenced by three branches below (the explode
-    // and both size joins) → [[barrier]] computes them once, exchange-reused
-    val base = barrier(
-      df.select(
-          (col(idCol) +: blockCols.map(col) :+
-            tokens(col(textCol)).as("toks")): _*)
-        .withColumn("grams", graft.functions.GramHashes(col("toks"), n,
-          if (blockCols.isEmpty) lit(42L)
-          else xxhash64(blockCols.map(col): _*), distinct = true))
-        .select(col(idCol), col("grams")),
-      idCol)
-    val sizes = base.select(col(idCol), size(col("grams")).as("sz"))
-    val grams = base
-      .select(col(idCol), explode(col("grams")).as("bk"))
-    // intersection counts via gram buckets: group docs per (block, gram),
-    // emit upper-triangle pairs in-task, partial-aggregate before the
-    // (doc_a, doc_b) shuffle — one shuffle of the gram relation instead of
-    // a two-sided hash join, same exact counts
-    val buckets = grams
-      .groupBy(col("bk"))
-      .agg(graft.functions.BoundedCollect(col(idCol), maxDocFreq).as("docs"))
-      .filter(size(col("docs")) > 1 && size(col("docs")) <= maxDocFreq)
-    val inter = buckets
-      .select(explode(expr(
-        "filter(flatten(transform(docs, a -> transform(docs, " +
-          "b -> struct(a AS doc_a, b AS doc_b)))), " +
-          "p -> p.doc_a < p.doc_b)")).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("doc_a"), col("sz").as("sz_a")),
-        "doc_a")
-      .join(sizes.select(col(idCol).as("doc_b"), col("sz").as("sz_b")),
-        "doc_b")
+      maxDocFreq: Int = 1000): DataFrame =
+    gramIntersections(df, idCol, textCol, blockCols, n, maxDocFreq)
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= minJaccard)
       .select(col("doc_a"), col("doc_b"),
         round(col("jaccard"), 4).as("jaccard"))
-  }
 
   /** Directional gram-set CONTAINMENT join: emits (src_doc, dst_doc, c)
     * where c = |grams(src) ∩ grams(dst)| / |grams(src)| ≥ `minContainment`
@@ -397,44 +354,16 @@ object Dedup {
     * or excerpt wholly CONTAINED in a long document scores near-1
     * containment but near-0 Jaccard (the union is dominated by the long
     * side), and excerpt-inclusion is exactly the dedup case quote-heavy
-    * web text creates. Same inverted-index bucket machinery, blocking, and
+    * web text creates. Same inverted-index buckets, blocking, and
     * `maxDocFreq` stop-gram cutoff as [[ngramJaccardPairs]] (intersections
     * exclude hot grams, sizes keep them → reported containment is the same
     * conservative lower bound); each unordered bucket pair fans out to its
-    * two directions row-locally after the size join.
+    * two directions row-locally.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int, minContainment: Double,
-      maxDocFreq: Int = 1000): DataFrame = {
-    // same block-folded 64-bit gram keys as [[ngramJaccardPairs]]
-    val base = barrier(
-      df.select(
-          (col(idCol) +: blockCols.map(col) :+
-            tokens(col(textCol)).as("toks")): _*)
-        .withColumn("grams", graft.functions.GramHashes(col("toks"), n,
-          if (blockCols.isEmpty) lit(42L)
-          else xxhash64(blockCols.map(col): _*), distinct = true))
-        .select(col(idCol), col("grams")),
-      idCol)
-    val sizes = base.select(col(idCol), size(col("grams")).as("sz"))
-    val grams = base
-      .select(col(idCol), explode(col("grams")).as("bk"))
-    val buckets = grams
-      .groupBy(col("bk"))
-      .agg(graft.functions.BoundedCollect(col(idCol), maxDocFreq).as("docs"))
-      .filter(size(col("docs")) > 1 && size(col("docs")) <= maxDocFreq)
-    val inter = buckets
-      .select(explode(expr(
-        "filter(flatten(transform(docs, a -> transform(docs, " +
-          "b -> struct(a AS doc_a, b AS doc_b)))), " +
-          "p -> p.doc_a < p.doc_b)")).as("p"))
-      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("doc_a"), col("sz").as("sz_a")),
-        "doc_a")
-      .join(sizes.select(col(idCol).as("doc_b"), col("sz").as("sz_b")),
-        "doc_b")
+      maxDocFreq: Int = 1000): DataFrame =
+    gramIntersections(df, idCol, textCol, blockCols, n, maxDocFreq)
       .select(explode(array(
         struct(col("doc_a").as("src_doc"), col("doc_b").as("dst_doc"),
           (col("inter").cast("double") / col("sz_a")).as("c")),
@@ -445,28 +374,71 @@ object Dedup {
       .filter(col("containment") >= minContainment)
       .select(col("src_doc"), col("dst_doc"),
         round(col("containment"), 4).as("containment"))
-  }
 
-  /** Per-doc distinct (id, bk) gram-key rows for the bucket-pair
-    * generators: the block columns and the raw gram string are FOLDED
-    * into one 64-bit xxhash64 key before the shuffle, so the bucket
-    * exchange ships (long, long) rows instead of block strings plus a
-    * gram key. Width is a measured trade, not an oversight: a 64-bit
-    * key collides with probability ~n²/2⁶⁵ over n distinct
-    * (block, gram) triples — negligible through 10⁹, ~27k expected
-    * merges at the 10¹² a 100 TB corpus holds — and a merge creates
-    * spurious candidate pairs (for CC consumers, a spurious component
-    * merge), i.e. ~10⁴ mis-clustered docs among 10⁹+, orders below the
-    * gram-sharing heuristic's own false-positive rate. Widening to the
-    * two-seed 128-bit form (ts21's census-exact pattern) was measured
-    * at +20-27% COMPRESSED shuffle and +10-20% wall on the five
-    * gram-bucket headliners: the second seed is 8 incompressible
-    * random bytes per row, while the block strings it displaces
-    * compress to almost nothing — candidate generation keeps the
-    * narrow key, ts21 keeps the wide one because its novelty COUNTS
-    * replay an exact census. DuckDB oracles key the same buckets by
-    * the raw strings; at verification scales the bucket partition is
-    * identical.
+  /** (doc_a, doc_b, sz_a, sz_b, inter) for every doc pair (doc_a < doc_b)
+    * sharing a non-hot gram bucket: `inter` counts the shared non-hot
+    * grams, `sz` is a doc's distinct gram count (hot grams included; block
+    * cols are constant per doc, so it is the count the oracles take over
+    * the raw gram strings). The
+    * size is computed next to the doc's gram array and carried into the
+    * bucket with the id, so the pair aggregation groups by
+    * (doc_a, doc_b, sz_a, sz_b) — the same groups as (doc_a, doc_b), sizes
+    * being per-doc — and nothing joins sizes back: the gram array has one
+    * consumer, is built once per row, and needs no [[barrier]].
+    */
+  private def gramIntersections(df: DataFrame, idCol: String,
+      textCol: String, blockCols: Seq[String], n: Int, maxDocFreq: Int)
+  : DataFrame =
+    gramBuckets(df, idCol, textCol, blockCols, n, maxDocFreq,
+        struct(col(idCol).as("id"), col("sz").as("sz")))
+      .select(explode(expr(
+        "filter(flatten(transform(docs, a -> transform(docs, b -> " +
+          "struct(a.id AS doc_a, b.id AS doc_b, a.sz AS sz_a, " +
+          "b.sz AS sz_b)))), p -> p.doc_a < p.doc_b)")).as("p"))
+      .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
+        col("p.sz_a").as("sz_a"), col("p.sz_b").as("sz_b"))
+      .agg(count(lit(1)).as("inter"))
+
+  /** Gram buckets (bk, docs) holding 2..`maxDocFreq` docs, `doc` collected
+    * once per doc in the bucket — the inverted index under every gram-pair
+    * operator here. Rows are [[blockedGramKeys]]'s (id, sz, bk).
+    */
+  private def gramBuckets(df: DataFrame, idCol: String, textCol: String,
+      blockCols: Seq[String], n: Int, maxDocFreq: Int, doc: Column)
+  : DataFrame =
+    blockedGramKeys(df, idCol, textCol, blockCols, n)
+      .groupBy(col("bk"))
+      .agg(graft.functions.BoundedCollect(doc, maxDocFreq).as("docs"))
+      .filter(size(col("docs")) > 1 && size(col("docs")) <= maxDocFreq)
+
+  /** Per-doc distinct (id, sz, bk) gram-key rows — sz the doc's distinct
+    * gram count — for the bucket-pair generators: the block columns and
+    * the raw gram string are FOLDED into one 64-bit xxhash64 key before
+    * the shuffle, so the bucket exchange ships (long, long) rows instead
+    * of block strings plus a gram key. Width is a measured trade, not an
+    * oversight: a 64-bit key collides with probability ~n²/2⁶⁵ over n
+    * distinct (block, gram) triples — negligible through 10⁹, ~27k
+    * expected merges at the 10¹² a 100 TB corpus holds — and a merge
+    * creates spurious candidate pairs (for CC consumers, a spurious
+    * component merge; for Jaccard, one extra intersecting gram), i.e.
+    * ~10⁴ mis-clustered docs among 10⁹+, orders below the gram-sharing
+    * heuristic's own false-positive rate. Widening to the two-seed
+    * 128-bit form (ts21's census-exact pattern) was measured at +20-27%
+    * COMPRESSED shuffle and +10-20% wall on the five gram-bucket
+    * headliners: the second seed is 8 incompressible random bytes per
+    * row, while the block strings it displaces compress to almost
+    * nothing — candidate generation keeps the narrow key, ts21 keeps the
+    * wide one because its novelty COUNTS replay an exact census. DuckDB
+    * oracles key the same buckets by the raw strings; at verification
+    * scales the bucket partition is identical.
+    *
+    * `explode_outer` + an explicit `bk IS NOT NULL` filter, not
+    * `explode`: a plain explode of the named array (named because `sz`
+    * reads it too) makes Spark infer `size(grams) > 0` and push it, as
+    * `size(GramHashes(..)) > 0`, below the caller's `fanOut` RoundRobin
+    * exchange into the single scan task, which then builds every doc's
+    * grams once more. A filter on the generator's output stays above it,
+    * so the array is built once per row, after the exchange (PlansSpec).
     */
   private def blockedGramKeys(df: DataFrame, idCol: String,
       textCol: String, blockCols: Seq[String], n: Int): DataFrame = {
@@ -480,34 +452,31 @@ object Dedup {
       if (blockCols.isEmpty) lit(42L) else xxhash64(blockCols.map(col): _*)
     df.select((col(idCol) +: blockCols.map(col) :+
         tokens(col(textCol)).as("toks")): _*)
-      .select(col(idCol), explode(graft.functions.GramHashes(
-        col("toks"), n, seed, distinct = true)).as("bk"))
+      .select(col(idCol), graft.functions.GramHashes(
+        col("toks"), n, seed, distinct = true).as("grams"))
+      .select(col(idCol), size(col("grams")).as("sz"),
+        explode_outer(col("grams")).as("bk"))
+      .filter(col("bk").isNotNull)
   }
 
   /** Candidate doc pairs sharing at least one non-hot gram — the
     * inverted-index bucket pairs of [[ngramJaccardPairs]] WITHOUT the
     * similarity arithmetic, for consumers that only need the edge
-    * relation (duplicate-cluster resolution). Single-consumer gram
-    * arrays → no barrier, no per-doc size branch, no join-back: one
-    * bucket-keyed shuffle ([[blockedGramKeys]] — block cols folded into
-    * the key, never shipped) and the in-task upper-triangle
-    * emission, `maxDocFreq`-capped like every bucket op here.
+    * relation (duplicate-cluster resolution): one bucket-keyed shuffle
+    * ([[gramBuckets]] — block cols folded into the key, never shipped)
+    * and the in-task upper-triangle emission, `maxDocFreq`-capped like
+    * every bucket op here.
     */
   def gramCandidatePairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int, maxDocFreq: Int = 1000)
-  : DataFrame = {
-    blockedGramKeys(df, idCol, textCol, blockCols, n)
-      .groupBy(col("bk"))
-      .agg(graft.functions.BoundedCollect(col(idCol), maxDocFreq)
-        .as("docs"))
-      .filter(size(col("docs")) > 1 && size(col("docs")) <= maxDocFreq)
+  : DataFrame =
+    gramBuckets(df, idCol, textCol, blockCols, n, maxDocFreq, col(idCol))
       .select(explode(expr(
         "filter(flatten(transform(docs, a -> transform(docs, " +
           "b -> struct(a AS doc_a, b AS doc_b)))), " +
           "p -> p.doc_a < p.doc_b)")).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-  }
 
   /** Connectivity-equivalent replacement for [[gramCandidatePairs]] when
     * the pairs feed ONLY a connected-components pass (dd10, dd16): each
@@ -529,19 +498,14 @@ object Dedup {
     */
   def gramStarEdges(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int, maxDocFreq: Int = 1000)
-  : DataFrame = {
-    blockedGramKeys(df, idCol, textCol, blockCols, n)
-      .groupBy(col("bk"))
-      .agg(graft.functions.BoundedCollect(col(idCol), maxDocFreq)
-        .as("docs"))
-      .filter(size(col("docs")) > 1 && size(col("docs")) <= maxDocFreq)
+  : DataFrame =
+    gramBuckets(df, idCol, textCol, blockCols, n, maxDocFreq, col(idCol))
       .select(explode(expr(
         "filter(transform(docs, b -> " +
           "struct(array_min(docs) AS doc_a, b AS doc_b)), " +
           "p -> p.doc_a < p.doc_b)")).as("p"))
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
       .distinct()
-  }
 
   /** Degree-oriented triangle counting over a pair relation — the
     * clustering-structure probe for near-dup graphs (triangle-dense
@@ -1313,93 +1277,119 @@ object Dedup {
 
   /** Connected components over an undirected pair relation — the step that
     * turns near-dup PAIRS into duplicate CLUSTERS (transitive closure), so
-    * one representative per cluster can be kept. Iterative min-label
-    * propagation: every node starts as its own label; each round, a node
-    * adopts the minimum label among itself and its neighbors; fixpoint =
-    * per-component minimum node id. The fixpoint is unique, so the result
-    * is deterministic regardless of execution order.
+    * one representative per cluster can be kept. Output: (id, component),
+    * component = the component's minimum id, both in the input id type;
+    * only nodes appearing in `pairs` are emitted (singletons are not
+    * duplicates by definition).
     *
-    * Scale shape: per round, ONE keyed join (edges × labels on src) + one
-    * dst-keyed min aggregate (map-side combined) + the label join-back —
-    * all equi-keyed; nothing quadratic. Rounds are bounded by component
-    * diameter, and near-dup graphs are shallow (cliques and short chains
-    * from banding), so convergence is a handful of rounds; `maxIters` is a
-    * hard stop. Each round's labels are `localCheckpoint`ed (truncating
-    * lineage so the plan does not grow by one join per round — the
-    * standard iterative-algorithm pattern, same reason GraphX checkpoints
-    * Pregel state); once the convergence count materializes the new
-    * round, the previous round's checkpoint RDD becomes unreachable and
-    * the ContextCleaner frees its blocks (label relations are one narrow
-    * row per node — far smaller than the edge relation, which IS
-    * explicitly persisted and unpersisted). Only nodes appearing in
-    * `pairs` are emitted — singletons are not duplicates by definition.
+    * Min-label propagation over the symmetrized edges, every node starting
+    * as its own label. Each round begins by counting the CROSS-LABEL edges
+    * (ends with different labels, taken once: label(src) < label(dst)):
+    *   - none: every component carries its minimum id → done;
+    *   - at most 2^20: the driver collects them as (label, label) pairs,
+    *     closes them with union-find (root = smaller label, in Spark's
+    *     ordering of the id type) and relabels each node through the
+    *     broadcast (label → root) map → done;
+    *   - more, after `maxIters` rounds: throws, naming the rounds run and
+    *     the edges left — never a non-converged result;
+    *   - otherwise each dst node adopts the minimum src label over its
+    *     cross edges, and the next round begins.
+    * The driver finish is exact: a label is always the id of a node in the
+    * same component, and a component's minimum id is its own label from
+    * the start, so the smallest label of each connected set of labels is
+    * the minimum id of its component — the fixpoint the rounds would reach.
     *
-    * Output: (id, component) where component = min reachable id.
+    * The first count runs on identity labels (no join) and materializes the
+    * symmetrized edges (lazy `localCheckpoint`: the caller's pair plan runs
+    * once). A graph within the bound thus runs no round at all — one count,
+    * one collect, the relabel pass; a larger one runs rounds on the cluster
+    * only until its contracted edges fit, skipping the slow tail of rounds
+    * and the confirming one. A round is two edges × labels equi-joins, a
+    * dst-keyed min aggregate and the label join-back over [[loopParts]]-wide
+    * edges; labels and cross edges are lazily checkpointed (lineage one
+    * round deep, both materialized by the count, freed by the
+    * ContextCleaner once unreachable). The bound is a constant driver-memory
+    * budget: 2^20 id pairs are 16 MB as longs, on the order of 200 MB of
+    * heap as boxed rows plus the union-find map and its broadcast copy.
     *
-    * `jump` adds a pointer-jumping step per round (label ← label's
-    * label, a labels×labels equi-join): rounds drop from O(diameter) to
-    * O(log diameter) at ~1.5× the per-round cost. On local/small graphs
-    * the fixed per-round job overhead dominates and plain propagation
-    * wins (measured sf0.1: 9×0.4 s vs 6×0.7 s); at cluster scale a round
-    * is a full pass over the label relation, so the log-round form is
-    * the one a 100 TB graph wants. Identical fixpoint either way
-    * (DedupSpec asserts equality).
+    * `jump` adds a pointer-jumping step per round (label ← label's label, a
+    * labels×labels equi-join): O(log diameter) rounds instead of
+    * O(diameter) at ~1.5× the per-round cost; same result (DedupSpec).
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 25, jump: Boolean = false): DataFrame = {
+      maxIters: Int = 25, jump: Boolean = false): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIters, jump, 1L << 20)
+
+  /** [[connectedComponents]] with the driver-finish bound exposed, so
+    * tests can force the distributed rounds. */
+  private[ops] def connectedComponents(pairs: DataFrame, aCol: String,
+      bCol: String, maxIters: Int, jump: Boolean, driverEdges: Long)
+  : DataFrame = {
     val fwd = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-    val edges0 = fwd.union(fwd.select(col("dst").as("src"),
-      col("src").as("dst")))
-    // edges are re-joined every round → materialize once (spillable)
-    val cached = edges0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = cached.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    // LOOP-WIDTH the cached edge relation (r15): the labels-init job above
-    // already materialized the cache, so the count is a cheap cached scan,
-    // and coalesce (never a shuffle) narrows the per-round edge side to
-    // ~32 MB/task. The pair generators upstream shuffle at ≥32 partitions,
-    // so a KB-scale graph otherwise pays 64+ map tasks per round × rounds
-    // of pure task/stage overhead — measured 1.35 s/round vs 0.28 s/round
-    // compacted on dd15's 1.6k-edge graph (5.6 s → 1.3 s for its 2-round
-    // CC). Scale-adaptive by construction: width grows linearly with the
-    // edge count, so a 100× corpus loops 100× wider.
-    val edges = cached.coalesce(loopParts(cached.count(), 32))
-    var iters = 0
-    var converged = false
-    while (!converged && iters < maxIters) {
-      val nbrMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("label")).as("nbr"))
-      val prop = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("old"),
-          least(col("label"), coalesce(col("nbr"), col("label")))
-            .as("label"))
-      val stepped =
-        if (!jump) prop
+    val edges = fwd.union(fwd.select(col("dst").as("src"),
+        col("src").as("dst")))
+      .localCheckpoint(false)
+    var labels = edges.select(col("src").as("id")).distinct()
+      .select(col("id"), col("id").as("label"))
+    var cross = edges.filter(col("src") < col("dst"))
+      .select(col("dst"), col("src").as("ls"), col("dst").as("ld"))
+    // one job: a Dataset count would add a shuffle stage for its global sum
+    def rows(d: DataFrame): Long = d.queryExecution.toRdd.count()
+    var left = rows(cross)
+    val loopEdges = edges.coalesce(loopParts(2 * left, 32))
+    var rounds = 0
+    while (left > driverEdges) {
+      if (rounds == maxIters) throw new IllegalStateException(
+        s"connectedComponents did not converge: $left cross-label edges " +
+          s"left after $rounds rounds (maxIters = $maxIters)")
+      val prop = labels
+        .join(cross.groupBy(col("dst").as("id")).agg(min("ls").as("nbr")),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("nbr"), col("label")).as("label"))
+      labels = (if (!jump) prop
         else prop // labels only shrink, so label's label ≤ label
-          .join(prop.select(col("id").as("label"),
-            col("label").as("ll")), Seq("label"), "left")
-          .select(col("id"), col("old"),
+          .join(prop.select(col("id").as("label"), col("label").as("ll")),
+            Seq("label"), "left")
+          .select(col("id"),
             least(col("label"), coalesce(col("ll"), col("label")))
-              .as("label"))
-      // LAZY checkpoint: the convergence count below is the round's one
-      // materializing job and checkpoints the round's labels as its side
-      // effect — an eager checkpoint would compute every partition twice
-      // per round (once to checkpoint, once to count)
-      val next = stepped
-        .select(col("id"), col("label"),
-          (col("label") < col("old")).as("changed"))
+              .as("label")))
         .localCheckpoint(false)
-      val nChanged = next.filter(col("changed")).count()
-      labels = next.drop("changed")
-      converged = nChanged == 0
-      iters += 1
+      cross = loopEdges
+        .join(labels.select(col("id").as("src"), col("label").as("ls")),
+          "src")
+        .join(labels.select(col("id").as("dst"), col("label").as("ld")),
+          "dst")
+        .filter(col("ls") < col("ld"))
+        .select(col("dst"), col("ls"), col("ld"))
+        .localCheckpoint(false)
+      left = rows(cross)
+      rounds += 1
     }
-    cached.unpersist()
-    labels.select(col("id"), col("label").as("component"))
+    if (left == 0) labels.select(col("id"), col("label").as("component"))
+    else {
+      val ord = org.apache.spark.sql.graft.Bridge.ordering(
+        labels.schema("label").dataType)
+      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+      def find(x: Any): Any = {
+        var r = x
+        while (parent.contains(r)) r = parent(r)
+        var y = x
+        while (y != r) { val up = parent(y); parent(y) = r; y = up }
+        r
+      }
+      cross.select("ls", "ld").collect().foreach { e =>
+        val (a, b) = (find(e.get(0)), find(e.get(1)))
+        if (a != b) { if (ord.lt(a, b)) parent(b) = a else parent(a) = b }
+      }
+      // map-side lookup through a broadcast variable: a broadcast join
+      // would spend one more job collecting its build side
+      val roots = pairs.sparkSession.sparkContext.broadcast(
+        parent.keys.toSeq.map(k => k -> find(k)).toMap)
+      labels.map { r =>
+          Row(r.get(0), roots.value.getOrElse(r.get(1), r.get(1)))
+        }(Encoders.row(labels.schema))
+        .toDF("id", "component")
+    }
   }
 
   /** Quality-aware duplicate-cluster resolution: given a near-dup pair

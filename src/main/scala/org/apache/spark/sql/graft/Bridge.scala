@@ -13,6 +13,16 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Spark's own ordering of `dt`'s values, applied to their external
+    * (`Row`) form — what `min`/`<` compute on the same column.
+    */
+  def ordering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] = {
+    val internal = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(dt)
+    Ordering.by(internal)(
+      org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt))
+  }
+
   /** Run `body` with `session` as the thread's ACTIVE session, restoring
     * the previous active session after. Needed when working on a child
     * `newSession()`: several Dataset-API resolution paths read conf via

@@ -15,6 +15,26 @@ class DedupSpec extends SparkSpec {
     (5L, "unrelated text regarding benchmark suites and parquet readers here")
   ).toDF("doc_id", "text")
 
+  // connectedComponents under every driver-finish bound: 0 runs every
+  // round on the cluster, 1 and 3 switch to the driver mid-loop, None is
+  // the public overload (finishes on the driver from the first count).
+  // All must give the same (id -> component) map in the input id type.
+  private def components(pairs: org.apache.spark.sql.DataFrame,
+      a: String, b: String, jump: Boolean = false): Map[Any, Any] = {
+    val byBound = Seq(Some(0L), Some(1L), Some(3L), None).map { bound =>
+      val cc = bound.fold(Dedup.connectedComponents(pairs, a, b,
+        jump = jump))(Dedup.connectedComponents(pairs, a, b, 25, jump, _))
+      val idType = pairs.schema(a).dataType
+      assert(cc.schema.map(_.dataType) == Seq(idType, idType), cc.schema)
+      bound -> cc.collect().map(r => r.get(0) -> r.get(1)).toMap
+    }
+    val (_, want) = byBound.last
+    byBound.foreach { case (bound, got) =>
+      assert(got == want, s"bound $bound: $got vs $want")
+    }
+    want
+  }
+
   test("exact dedup groups identical texts under min-id representative") {
     val got = Dedup.exact(docs, "text", "doc_id")
       .select("rep_id", "n_dupes").collect()
@@ -68,6 +88,11 @@ class DedupSpec extends SparkSpec {
     assert(got((3L, 4L)) == 1.0)
     assert(got((1L, 2L)) > 0.4 && got((1L, 2L)) < 1.0)
     assert(!got.keySet.exists { case (a, b) => Set(a, b).contains(5L) })
+    // the pairs close into the two duplicate clusters at every bound
+    val pairs = Dedup.ngramJaccardPairs(blocked, "doc_id", "text",
+      Seq("grp"), 3, 0.2).select("doc_a", "doc_b")
+    assert(components(pairs, "doc_a", "doc_b") ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
   }
 
   test("embedding near-dup: cosine pairs contract to min-id representative") {
@@ -523,12 +548,21 @@ class DedupSpec extends SparkSpec {
       (10L, 11L),
       (20L, 21L), (21L, 22L), (20L, 22L)
     ).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = components(pairs, "id_a", "id_b")
     assert((1L to 6L).forall(got(_) == 1L), got)
     assert(got(10L) == 10L && got(11L) == 10L, got)
     assert(Seq(20L, 21L, 22L).forall(got(_) == 20L), got)
     assert(got.size == 11, "only nodes appearing in pairs are emitted")
+    // int and string ids come back in their own type, ordered as Spark
+    // orders them ("10" < "2" as strings)
+    val asInt = components(pairs.selectExpr("CAST(id_a AS INT) AS id_a",
+      "CAST(id_b AS INT) AS id_b"), "id_a", "id_b")
+    assert(asInt == got.map { case (k, v) =>
+      k.asInstanceOf[Long].toInt -> v.asInstanceOf[Long].toInt }, asInt)
+    val asString = components(pairs.selectExpr("CAST(id_a AS STRING) AS id_a",
+      "CAST(id_b AS STRING) AS id_b"), "id_a", "id_b")
+    assert(asString("11") == "10" && asString("22") == "20" &&
+      asString("6") == "1", asString)
   }
 
   test("connected components: pointer-jumping variant reaches the same " +
@@ -537,10 +571,8 @@ class DedupSpec extends SparkSpec {
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 7L),
       (10L, 11L), (20L, 21L), (21L, 22L)
     ).toDF("id_a", "id_b")
-    def comp(jump: Boolean) =
-      Dedup.connectedComponents(pairs, "id_a", "id_b", jump = jump)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp(jump = true) == comp(jump = false))
+    assert(components(pairs, "id_a", "id_b", jump = true) ==
+      components(pairs, "id_a", "id_b"))
   }
 
   test("connected components converge regardless of edge direction") {
@@ -548,9 +580,18 @@ class DedupSpec extends SparkSpec {
     // reach every node through the symmetrized edges
     val pairs = Seq((6L, 5L), (4L, 5L), (3L, 4L), (3L, 2L), (2L, 1L))
       .toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs, "id_a", "id_b")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = components(pairs, "id_a", "id_b")
     assert((1L to 6L).forall(got(_) == 1L), got)
+  }
+
+  test("connected components throw when maxIters rounds leave more " +
+      "cross-label edges than the driver bound") {
+    // after r rounds a 40-node chain keeps 39 - r cross-label edges
+    val chain = (1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.connectedComponents(chain, "id_a", "id_b", 5, false, 0L))
+    assert(e.getMessage.contains("34 cross-label edges left after 5 " +
+      "rounds"), e.getMessage)
   }
 
   test("incremental dedup: bloom path equals the plain anti join") {
@@ -584,7 +625,7 @@ class DedupSpec extends SparkSpec {
 
   test("connected components of an empty pair relation are empty") {
     val pairs = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    assert(Dedup.connectedComponents(pairs, "id_a", "id_b").count() == 0L)
+    assert(components(pairs, "id_a", "id_b").isEmpty)
   }
 
   test("incremental dedup stays exact under a saturated bloom (fpp→1)") {

@@ -624,6 +624,70 @@ class PlansSpec extends SparkSpec {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("dd10/dd12: each doc's gram array is built once, above fanOut's " +
+      "RoundRobin exchange") {
+    // a plain explode lets Spark infer size(GramHashes(..)) > 0 on the
+    // generator's input and push it below the RoundRobin exchange, so the
+    // single scan task built every doc's grams once more. The gram plans
+    // run inside the entries' connected-components pass (its edge
+    // checkpoint), not in the returned plan — capture every executed
+    // QueryExecution and judge the gram-building nodes across all of them.
+    // Judge the uncached production shape: a documents relation cached by
+    // an earlier test hides the exchange inside its InMemoryRelation and
+    // defeats exchange reuse (see the ts21 test below, which also clears
+    // the shared cache and runs after this one).
+    spark.sharedState.cacheManager.clearCache()
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{
+      ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case i: InMemoryTableScanExec => flatten(i.relation.cachedPlan)
+      case _: ReusedExchangeExec => Nil
+      case other => other.children.flatMap(flatten)
+    })
+    def buildsGrams(p: SparkPlan): Boolean = p.expressions.exists(
+      _.exists(_.isInstanceOf[graft.functions.GramHashes]))
+    val captured = scala.collection.mutable.ArrayBuffer[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        captured.synchronized { captured += qe; () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try Seq("dd10_dup_clusters", "dd12_neardup_dedup").foreach { name =>
+      captured.synchronized(captured.clear())
+      SparkEntry.queries(name)(spark, sf).collect(): Unit
+      // events arrive in order on the async listener bus: once this
+      // marker query has arrived, every event of the entry has too
+      spark.range(1).selectExpr("id AS gram_plan_marker").collect(): Unit
+      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
+      def arrived = captured.synchronized(captured.exists(
+        _.analyzed.output.exists(_.name == "gram_plan_marker")))
+      while (!arrived && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(arrived, s"$name: listener events did not arrive")
+      val grams = captured.synchronized(captured.toVector)
+        .flatMap(qe => flatten(qe.executedPlan)).filter(buildsGrams)
+        .distinctBy(System.identityHashCode) // a cached plan read twice
+      assert(grams.size == 1,
+        s"$name: expected one GramHashes node: ${grams.mkString("\n")}")
+      assert(flatten(grams.head).exists {
+        case s: ShuffleExchangeExec =>
+          s.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+        case _ => false
+      }, s"$name: GramHashes must sit above the RoundRobin exchange: " +
+        grams.head)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("ts21: one gram exchange serves both consumers (ReusedExchange)") {
     // scale bug 7: with the gram relation feeding two consumers
     // (min-aggregate + join probe), AQE's re-planner forwent the static
