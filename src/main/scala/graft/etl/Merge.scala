@@ -33,12 +33,11 @@ object Merge {
     * side (7k rows real) broadcasts.
     */
   def join(wiki: DataFrame, kaggle: DataFrame): DataFrame = {
-    val w = collisions.foldLeft(wiki)((d, n) =>
-      if (d.columns.contains(n)) d.withColumnRenamed(n, s"${n}_wiki") else d)
-    val k = collisions.foldLeft(kaggle)((d, n) =>
-      if (d.columns.contains(n)) d.withColumnRenamed(n, s"${n}_kaggle")
-      else d)
-    broadcast(w).join(k, Seq("imdb_id"), "inner")
+    // one projection per side; a collision the side lacks is a no-op
+    def suffixed(d: DataFrame, side: String): DataFrame =
+      d.withColumnsRenamed(collisions.map(n => n -> s"${n}_$side").toMap)
+    broadcast(suffixed(wiki, "wiki"))
+      .join(suffixed(kaggle, "kaggle"), Seq("imdb_id"), "inner")
   }
 
   /** X11 — fill_missing_kaggle_data (challenge.py:244-256): prefer kaggle,

@@ -26,38 +26,82 @@ final case class EtlResult(
 object MovieEtl {
 
   /** Extract and transform run once per call, as the reference reads each
-    * source once into a frame it reuses. The frames read by more than one
-    * sink are materialised eagerly with `localCheckpoint`: `movies` (the
-    * movies sink, the ratings attach and the JDBC sink), the raw `ratings`
-    * (the counts and the ratings sink), and inside [[WikiClean.clean]] the
-    * filtered wiki frame the null profile reads. So no sink re-reads the
-    * input files. The checkpoint blocks live in executor storage, not in
-    * the CacheManager, and the ContextCleaner frees them once the
-    * [[EtlResult]] is unreachable. `moviesWithRatings` and the rating
-    * counts have one consumer each and stay lazy.
+    * source once into a frame it reuses. The three sources are independent
+    * until the merge (challenge.py:38), so they run as three concurrent
+    * branches, each materialising what it hands on with eager
+    * `localCheckpoint`:
+    *   - ratings, on its own thread: the raw `ratings` (read under the
+    *     declared [[Extract.ratingsSchema]]; the counts and the ratings
+    *     sink read it) and the per-movie rating counts;
+    *   - kaggle, on its own thread: the cleaned kaggle frame;
+    *   - wiki, on the calling thread: the filtered wiki frame, inside
+    *     [[WikiClean.clean]].
+    * Then the merge materialises `movies` (the movies sink, the ratings
+    * attach and the JDBC sink). So no sink re-reads the input files.
+    *
+    * A branch thread is created by this call, so it inherits the caller's
+    * active session and SparkContext local properties: its jobs run under
+    * the caller's job group and description. `spark.sql.caseSensitive`
+    * (the wiki schema needs it) is set before any branch starts. Every
+    * branch is joined before the call returns or throws, and a branch's
+    * failure is rethrown as it was raised.
+    *
+    * The checkpoint blocks live in executor storage, not in the
+    * CacheManager, and the ContextCleaner frees them once the
+    * [[EtlResult]] is unreachable. `moviesWithRatings` has one consumer and
+    * stays lazy.
     */
   def run(spark: SparkSession, wikiPath: String, kagglePath: String,
       ratingsPath: String, config: EtlConfig = EtlConfig()): EtlResult = {
-    // EXTRACT (S1-S3)
-    val wikiRaw = Extract.readWikiJson(spark, wikiPath)
-    val kaggleRaw = Extract.readCsv(spark, kagglePath)
-    val ratings = Extract.readCsv(spark, ratingsPath)
-      .localCheckpoint(eager = true)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    // EXTRACT (S3) + RATINGS (A1, A2)
+    val ratingsBranch = new Branch("ratings")({
+      val ratings = Extract.readRatings(spark, ratingsPath)
+        .localCheckpoint(eager = true)
+      (ratings, Ratings.ratingCounts(ratings).localCheckpoint(eager = true))
+    })
+    // EXTRACT (S2) + TRANSFORM kaggle (F2, X12-X14)
+    val kaggleBranch = new Branch("kaggle")(
+      Merge.cleanKaggle(Extract.readCsv(spark, kagglePath))
+        .localCheckpoint(eager = true))
+    try {
+      // EXTRACT (S1) + TRANSFORM wiki (F1, P5, X1-X10, P1)
+      val wiki = WikiClean.clean(Extract.readWikiJson(spark, wikiPath),
+        dedup = config.dedupWiki)
 
-    // TRANSFORM: wiki (F1, P5, X1-X10, P1), kaggle (F2, X12-X14)
-    val wiki = WikiClean.clean(wikiRaw, dedup = config.dedupWiki)
-    val kaggle = Merge.cleanKaggle(kaggleRaw)
+      // MERGE (J1, X11, P2-P4)
+      val joined = Merge.join(wiki, kaggleBranch.get)
+      val outlierHandled =
+        if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
+      val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
+        .localCheckpoint(eager = true)
 
-    // MERGE (J1, X11, P2-P4)
-    val joined = Merge.join(wiki, kaggle)
-    val outlierHandled =
-      if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
-    val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
-      .localCheckpoint(eager = true)
+      // RATINGS (J2)
+      val (ratings, counts) = ratingsBranch.get
+      EtlResult(movies, Ratings.attach(movies, counts), ratings)
+    } finally {
+      ratingsBranch.join()
+      kaggleBranch.join()
+    }
+  }
 
-    // RATINGS (A1, A2, J2)
-    val withRatings = Ratings.attach(movies, Ratings.ratingCounts(ratings))
+  /** `body` running on a thread of its own, `MovieEtl-<name>`, started at
+    * construction.
+    */
+  private final class Branch[T](name: String)(body: => T) {
+    @volatile private var outcome: Either[Throwable, T] = _
+    private val thread = new Thread(() =>
+      outcome = try Right(body) catch { case e: Throwable => Left(e) },
+      s"MovieEtl-$name")
+    thread.setDaemon(true)
+    thread.start()
 
-    EtlResult(movies, withRatings, ratings)
+    def join(): Unit = thread.join()
+
+    /** The body's result once it ends; its own exception if it threw. */
+    def get: T = {
+      join()
+      outcome.fold(e => throw e, identity)
+    }
   }
 }

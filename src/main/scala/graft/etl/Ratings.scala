@@ -39,11 +39,11 @@ object Ratings {
   def attach(movies: DataFrame, counts: DataFrame): DataFrame = {
     val joined = movies
       .join(counts, movies("kaggle_id") === counts("movieId"), "left")
-      .drop("movieId")
-    // fillna(0) restricted to the rating columns; the names contain dots
-    // ("rating_0.5"), which na.fill would resolve as nested fields — use
-    // explicit coalesce with backticked refs instead.
-    ratingColumns.foldLeft(joined)((d, rc) =>
-      d.withColumn(rc, coalesce(col(s"`$rc`"), lit(0L))))
+    // fillna(0) restricted to the rating columns, in one projection that
+    // also drops movieId; the names contain dots ("rating_0.5"), which
+    // na.fill would resolve as nested fields — use explicit coalesce with
+    // backticked refs instead.
+    joined.select(movies.columns.toSeq.map(n => col(s"`$n`")) ++
+      ratingColumns.map(rc => coalesce(col(s"`$rc`"), lit(0L)).as(rc)): _*)
   }
 }

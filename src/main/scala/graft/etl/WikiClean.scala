@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.ops.Expressions._
 
@@ -58,6 +58,40 @@ object WikiClean {
     "Production company(s)" -> Seq("Productioncompany ",
       "Productioncompanies "))
 
+  /** The keys [[filterMovies]] tests. */
+  private val filterKeys: Seq[String] =
+    Seq("Director", "Directed by", "imdb_link", "No. of episodes")
+
+  /** The raw keys the regex parse layer reads (box office, budget, release
+    * date, running time).
+    */
+  private val parseKeys: Seq[String] =
+    Seq("Box office", "Budget", "Release date", "Running time")
+
+  /** Raw keys the 31-column projection ([[Merge.outputColumns]]) takes
+    * unchanged from the wiki side.
+    */
+  private val projectedKeys: Seq[String] =
+    Seq("url", "imdb_link", "Starring", "Cinematography", "Based on")
+
+  /** Every raw wiki key the output can depend on: the filter keys, the
+    * parse inputs, the projected keys, and each [[synonyms]] group whose
+    * target is a parse input or a projected column (`Release date` also
+    * feeds the optional outlier drop through `release_date_wiki`). The
+    * other keys only build `alt_titles` or are dropped before the
+    * projection (`Language`, `Production company(s)` and the rest), so
+    * [[Extract.readWikiJson]] reads these alone.
+    */
+  val inputKeys: Seq[String] = {
+    val projected = Merge.outputColumns.map(_._1).toSet
+    val groups = synonyms.collect {
+      case (target, sources)
+          if projected(target) || parseKeys.contains(target) =>
+        target +: sources
+    }
+    (filterKeys ++ parseKeys ++ projectedKeys ++ groups.flatten).distinct
+  }
+
   /** F1 — keep movies: has a director, has an imdb link, is not a TV series
     * (challenge.py:55-58; 7,311 → 7,076 on the real data).
     */
@@ -109,25 +143,25 @@ object WikiClean {
   def dedupImdb(df: DataFrame): DataFrame = df.dropDuplicates("imdb_id")
 
   /** P1 — data-dependent pruning: keep columns with <90% nulls
-    * (challenge.py:110-111). One pass profiles the frame: each row
-    * emits the index of every null column plus a row marker (-1), and a
-    * one-key count gives the row total and the per-column null counts.
-    * (A `sum(isnull)` per column is one aggregate as wide as the frame,
-    * past whole-stage codegen's field limit on the ~180-key wiki data;
-    * the count's buffer is one long whatever the width.) Then a select.
+    * (challenge.py:110-111). Materialises `df` (eager `localCheckpoint`)
+    * and returns the kept columns of that checkpoint. The null profile
+    * rides the same job as observed metrics, `count(1)` plus one
+    * `count(column)` per column, so profiling starts no job of its own. A
+    * 0-row frame keeps no column.
     */
   def pruneMostlyNull(df: DataFrame): DataFrame = {
-    val marks = lit(-1) +: df.columns.toSeq.zipWithIndex.map {
-      case (n, i) => when(c(n).isNull, lit(i)) }
-    val counts = df.select(explode(array(marks: _*)).as("i"))
-      .filter(col("i").isNotNull)
-      .groupBy("i").count().collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = counts.getOrElse(-1, 0L)
+    val profile = Observation()
+    val nonNull = df.columns.toSeq.zipWithIndex.map {
+      case (n, i) => count(c(n)).as(s"c$i") }
+    val done = df.observe(profile, count(lit(1)).as("rows"), nonNull: _*)
+      .localCheckpoint(eager = true)
+    val counts = profile.get
+    def long(k: String): Long = counts(k).asInstanceOf[Long]
+    val total = long("rows")
     val kept = df.columns.zipWithIndex.collect {
-      case (n, i) if counts.getOrElse(i, 0L) < 0.9 * total => n
+      case (n, i) if total - long(s"c$i") < 0.9 * total => n
     }
-    df.select(kept.map(c).toSeq: _*)
+    done.select(kept.map(c).toSeq: _*)
   }
 
   // ---- regex parse layer ---------------------------------------------------
@@ -208,15 +242,14 @@ object WikiClean {
 
   /** Full wiki stage. `dedup` = DC behavior (drop_duplicates on imdb_id);
     * false = challenge.py behavior (quirk Q5, join fan-out allowed).
-    * The filtered, consolidated frame is materialised once (eager
-    * `localCheckpoint`), so the null profile and every later consumer
-    * read it instead of re-parsing the JSON.
+    * The filtered, consolidated frame is materialised once, by
+    * [[pruneMostlyNull]] in the job that profiles its nulls, so every later
+    * consumer reads it instead of re-parsing the JSON, and the parse layer
+    * stays lazy.
     */
   def clean(raw: DataFrame, dedup: Boolean = false): DataFrame = {
     val base = withImdbId(consolidateColumns(filterMovies(raw)))
-    val deduped = (if (dedup) dedupImdb(base) else base)
-      .localCheckpoint(eager = true)
-    val pruned = pruneMostlyNull(deduped)
+    val pruned = pruneMostlyNull(if (dedup) dedupImdb(base) else base)
     withRunningTime(withReleaseDate(withBudget(withBoxOffice(pruned))))
   }
 }

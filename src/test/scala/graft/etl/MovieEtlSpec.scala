@@ -1,6 +1,10 @@
 package graft.etl
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -14,6 +18,9 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private lazy val wikiRaw =
     Extract.readWikiJson(spark, fixture("wikipedia.movies.json"))
+  /** Every key of the file, for tests of columns the keyed read omits. */
+  private lazy val wikiAllKeys =
+    ReferenceWiki.readWikiJson(spark, fixture("wikipedia.movies.json"))
   private lazy val result = MovieEtl.run(spark,
     fixture("wikipedia.movies.json"), fixture("movies_metadata.csv"),
     fixture("ratings.csv"))
@@ -39,7 +46,7 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("null pruning drops the 96%-null column, keeps alt_titles") {
-    val cleaned = WikiClean.clean(wikiRaw)
+    val cleaned = WikiClean.clean(wikiAllKeys)
     assert(!cleaned.columns.contains("Mostly Null"))
     assert(cleaned.columns.contains("alt_titles"))
   }
@@ -71,6 +78,107 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val kept = WikiClean.pruneMostlyNull(base).columns.toSeq
     assert(kept == keptByTwoJobs(base))
     assert(kept.size < base.columns.length)
+  }
+
+  test("null pruning of a 0-row frame drops every column") {
+    import spark.implicits._
+    val empty = Seq.empty[(Int, String)].toDF("id", "s")
+    assert(WikiClean.pruneMostlyNull(empty).columns.isEmpty)
+    val emptyParts = spark.range(0).selectExpr("id", "cast(null as string) s")
+      .repartition(3)
+    assert(WikiClean.pruneMostlyNull(emptyParts).columns.isEmpty)
+  }
+
+  /** The job-start events of `body`, in start order. */
+  private def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBus.drain(sc)
+      seen.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("clean profiles nulls in the job that materialises the wiki frame") {
+    Seq(false, true).foreach { dedup =>
+      val jobs = jobsDuring(WikiClean.clean(wikiRaw, dedup))
+      val checkpoints = jobs.zipWithIndex.collect {
+        case (j, i) if j.stageInfos.exists(
+          _.name.startsWith("localCheckpoint at WikiClean")) => i }
+      // one materialising job, and no job after it
+      assert(checkpoints == Seq(jobs.length - 1), s"dedup=$dedup")
+    }
+  }
+
+  test("declared ratings schema equals the inferred one") {
+    assert(Extract.readCsv(spark, fixture("ratings.csv")).schema ==
+      Extract.ratingsSchema)
+  }
+
+  /** The pipeline composed step by step on the calling thread, with the
+    * wiki read over every key (two passes) and the ratings schema inferred:
+    * the reference [[MovieEtl.run]] must give the same output as.
+    */
+  private def referenceRun(cfg: EtlConfig): EtlResult = {
+    val wiki = WikiClean.clean(wikiAllKeys, cfg.dedupWiki)
+    val joined = Merge.join(wiki, Merge.cleanKaggle(
+      Extract.readCsv(spark, fixture("movies_metadata.csv"))))
+    val movies = Merge.project(Merge.fillMissingKaggle(
+      if (cfg.dropOutlier) Merge.dropMergeOutlier(joined) else joined))
+    val ratings = Extract.readCsv(spark, fixture("ratings.csv"))
+    EtlResult(movies, Ratings.attach(movies, Ratings.ratingCounts(ratings)),
+      ratings)
+  }
+
+  test("run equals the all-keys, inferred-schema reference in every config") {
+    for (dedup <- Seq(false, true); outlier <- Seq(false, true)) {
+      val cfg = EtlConfig(dedupWiki = dedup, dropOutlier = outlier)
+      val got = MovieEtl.run(spark, fixture("wikipedia.movies.json"),
+        fixture("movies_metadata.csv"), fixture("ratings.csv"), cfg)
+      val want = referenceRun(cfg)
+      Seq("movies" -> (got.movies, want.movies),
+          "moviesWithRatings" -> (got.moviesWithRatings,
+            want.moviesWithRatings),
+          "ratings" -> (got.ratings, want.ratings)).foreach {
+        case (n, (g, w)) =>
+          assert(g.schema == w.schema, s"$cfg: $n schema")
+          assert(g.exceptAll(w).isEmpty && w.exceptAll(g).isEmpty,
+            s"$cfg: $n rows")
+      }
+    }
+  }
+
+  test("run's branch jobs carry the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("etl-test", "branch hygiene", interruptOnCancel = false)
+    val jobs =
+      try jobsDuring(MovieEtl.run(spark, fixture("wikipedia.movies.json"),
+        fixture("movies_metadata.csv"), fixture("ratings.csv")))
+      finally sc.clearJobGroup()
+    assert(jobs.nonEmpty)
+    jobs.foreach(j =>
+      assert(j.properties.getProperty("spark.jobGroup.id") == "etl-test"))
+  }
+
+  test("a failing branch rethrows its own exception, every branch joined") {
+    val missing = fixture("ratings.csv") + ".missing"
+    val direct = intercept[Exception](Extract.readRatings(spark, missing))
+    val viaRun = intercept[Exception](MovieEtl.run(spark,
+      fixture("wikipedia.movies.json"), fixture("movies_metadata.csv"),
+      missing))
+    assert(viaRun.getClass == direct.getClass)
+    assert(viaRun.getMessage == direct.getMessage)
+    ListenerBus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty)
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.getName.startsWith("MovieEtl-") && t.isAlive))
   }
 
   test("rating counts equal the builtin pivot, null mapped to 0") {
@@ -172,7 +280,7 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("alt_titles map built from the 20 keys incl en-dash McCune–Reischauer") {
-    val wiki = WikiClean.clean(wikiRaw)
+    val wiki = WikiClean.clean(wikiAllKeys)
     val m = wiki.filter(col("imdb_id") === "tt1000024")
       .select(col("alt_titles")).collect().head
       .getMap[String, String](0)
