@@ -26,36 +26,18 @@ object QueriesEtl {
 
   val specs: Seq[QuerySpec] = Seq(
     QuerySpec("e1_movie_pipeline", (s, _) => {
-      // readWikiJson flips spark.sql.caseSensitive=true for the wiki schema
-      // ("Release date" vs "Release Date"). The flip is scoped to a child
-      // session (shared SparkContext, isolated SessionState) so a shared
-      // Verify/Bench session can't inherit resolution-semantics changes.
-      // Two subtleties make this safe:
-      //   - the child must also be the thread-ACTIVE session while plans
-      //     are built and run — Dataset resolution reads conf through
-      //     SQLConf.get = active session, not the DataFrame's own session
-      //     (Bridge.withActive);
-      //   - the one-row result is materialized EAGERLY inside that scope
-      //     (physical planning is lazy; a lazily-returned plan would
-      //     resolve under whatever session is active at write time).
-      val etlSession = s.newSession()
-      val (row, schema) = org.apache.spark.sql.graft.Bridge
-        .withActive(etlSession) {
-          val r = MovieEtl.run(etlSession, s"$fx/wikipedia.movies.json",
-            s"$fx/movies_metadata.csv", s"$fx/ratings.csv")
-          val mr = r.moviesWithRatings
-          val out = mr.agg(
-              count(lit(1)).as("n_movies"),
-              sum(col("vote_count").cast("long")).as("sum_vote_count"),
-              sum(col("`rating_5.0`")).as("sum_rating_5"),
-              sum(col("`rating_0.5`")).as("sum_rating_05"))
-            .withColumn("n_movie_cols", lit(r.movies.columns.length.toLong))
-            .withColumn("n_rating_cols",
-              lit(mr.columns.count(_.startsWith("rating_")).toLong))
-            .crossJoin(r.ratings.agg(count(lit(1)).as("n_ratings")))
-          (out.collect().head, out.schema)
-        }
-      s.createDataFrame(java.util.Collections.singletonList(row), schema)
+      val r = MovieEtl.run(s, s"$fx/wikipedia.movies.json",
+        s"$fx/movies_metadata.csv", s"$fx/ratings.csv")
+      val mr = r.moviesWithRatings
+      mr.agg(
+          count(lit(1)).as("n_movies"),
+          sum(col("vote_count").cast("long")).as("sum_vote_count"),
+          sum(col("`rating_5.0`")).as("sum_rating_5"),
+          sum(col("`rating_0.5`")).as("sum_rating_05"))
+        .withColumn("n_movie_cols", lit(r.movies.columns.length.toLong))
+        .withColumn("n_rating_cols",
+          lit(mr.columns.count(_.startsWith("rating_")).toLong))
+        .crossJoin(r.ratings.agg(count(lit(1)).as("n_ratings")))
     },
       Some(s"""WITH wiki AS (
          |  SELECT * FROM read_json_auto('$fx/wikipedia.movies.json')),

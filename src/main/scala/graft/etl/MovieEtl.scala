@@ -1,6 +1,8 @@
 package graft.etl
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 /** The full reference pipeline (challenge.py:38-325, E1), Spark-first.
   *
@@ -39,10 +41,22 @@ object MovieEtl {
     * Then the merge materialises `movies` (the movies sink, the ratings
     * attach and the JDBC sink). So no sink re-reads the input files.
     *
-    * A branch thread is created by this call, so it inherits the caller's
-    * active session and SparkContext local properties: its jobs run under
-    * the caller's job group and description. `spark.sql.caseSensitive`
-    * (the wiki schema needs it) is set before any branch starts. Every
+    * The pipeline runs in a session [[run]] owns, never in the caller's, so
+    * `spark.sql.caseSensitive` (the wiki schema needs it) leaves the
+    * caller's conf as it was. It is one child of the caller per SparkContext
+    * and caller conf (the caller's modifiable SQL conf plus `caseSensitive`),
+    * memoised in one slot. Its conf is complete when it is made (the wiki
+    * read's own `caseSensitive` set changes nothing), so concurrent runs
+    * share it and the result stays a function of the inputs and the
+    * caller's conf. Spark gives each session its own executor class loader
+    * and caches generated code per loader, so a session per call would
+    * compile every generated class again on every run. The returned frames
+    * belong to the owned session.
+    *
+    * Every frame is built with the owned session active (Dataset
+    * resolution reads `SQLConf.get`). The branch threads, created in that
+    * scope, inherit it and the caller's SparkContext local properties, so
+    * their jobs run under the caller's job group and description. Every
     * branch is joined before the call returns or throws, and a branch's
     * failure is rethrown as it was raised.
     *
@@ -51,37 +65,59 @@ object MovieEtl {
     * [[EtlResult]] is unreachable. `moviesWithRatings` has one consumer and
     * stays lazy.
     */
-  def run(spark: SparkSession, wikiPath: String, kagglePath: String,
+  def run(caller: SparkSession, wikiPath: String, kagglePath: String,
       ratingsPath: String, config: EtlConfig = EtlConfig()): EtlResult = {
-    spark.conf.set("spark.sql.caseSensitive", "true")
-    // EXTRACT (S3) + RATINGS (A1, A2)
-    val ratingsBranch = new Branch("ratings")({
-      val ratings = Extract.readRatings(spark, ratingsPath)
-        .localCheckpoint(eager = true)
-      (ratings, Ratings.ratingCounts(ratings).localCheckpoint(eager = true))
-    })
-    // EXTRACT (S2) + TRANSFORM kaggle (F2, X12-X14)
-    val kaggleBranch = new Branch("kaggle")(
-      Merge.cleanKaggle(Extract.readCsv(spark, kagglePath))
-        .localCheckpoint(eager = true))
-    try {
-      // EXTRACT (S1) + TRANSFORM wiki (F1, P5, X1-X10, P1)
-      val wiki = WikiClean.clean(Extract.readWikiJson(spark, wikiPath),
-        dedup = config.dedupWiki)
+    val spark = ownedSession(caller)
+    Bridge.withActive(spark) {
+      // EXTRACT (S3) + RATINGS (A1, A2)
+      val ratingsBranch = new Branch("ratings")({
+        val ratings = Extract.readRatings(spark, ratingsPath)
+          .localCheckpoint(eager = true)
+        (ratings, Ratings.ratingCounts(ratings).localCheckpoint(eager = true))
+      })
+      // EXTRACT (S2) + TRANSFORM kaggle (F2, X12-X14)
+      val kaggleBranch = new Branch("kaggle")(
+        Merge.cleanKaggle(Extract.readCsv(spark, kagglePath))
+          .localCheckpoint(eager = true))
+      try {
+        // EXTRACT (S1) + TRANSFORM wiki (F1, P5, X1-X10, P1)
+        val wiki = WikiClean.clean(Extract.readWikiJson(spark, wikiPath),
+          dedup = config.dedupWiki)
 
-      // MERGE (J1, X11, P2-P4)
-      val joined = Merge.join(wiki, kaggleBranch.get)
-      val outlierHandled =
-        if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
-      val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
-        .localCheckpoint(eager = true)
+        // MERGE (J1, X11, P2-P4)
+        val joined = Merge.join(wiki, kaggleBranch.get)
+        val outlierHandled =
+          if (config.dropOutlier) Merge.dropMergeOutlier(joined) else joined
+        val movies = Merge.project(Merge.fillMissingKaggle(outlierHandled))
+          .localCheckpoint(eager = true)
 
-      // RATINGS (J2)
-      val (ratings, counts) = ratingsBranch.get
-      EtlResult(movies, Ratings.attach(movies, counts), ratings)
-    } finally {
-      ratingsBranch.join()
-      kaggleBranch.join()
+        // RATINGS (J2)
+        val (ratings, counts) = ratingsBranch.get
+        EtlResult(movies, Ratings.attach(movies, counts), ratings)
+      } finally {
+        ratingsBranch.join()
+        kaggleBranch.join()
+      }
+    }
+  }
+
+  /** The last owned session, with the context and conf it was made for. */
+  private var owned: Option[(SparkContext, Map[String, String],
+    SparkSession)] = None
+
+  /** The owned session for `caller`'s context and modifiable conf. */
+  private def ownedSession(caller: SparkSession): SparkSession = {
+    val conf = caller.conf.getAll.filter { case (k, _) =>
+      caller.conf.isModifiable(k) } + ("spark.sql.caseSensitive" -> "true")
+    synchronized {
+      owned match {
+        case Some((sc, c, s)) if (sc eq caller.sparkContext) && c == conf => s
+        case _ =>
+          val s = caller.newSession()
+          conf.foreach { case (k, v) => s.conf.set(k, v) }
+          owned = Some((caller.sparkContext, conf, s))
+          s
+      }
     }
   }
 

@@ -35,10 +35,16 @@ object Ratings {
   /** J2 — left join + fillna(0) on the rating columns only
     * (challenge.py:299-302). kaggle_id (a TMDB id) is joined against
     * movieId (a MovieLens id) exactly as the reference does.
+    *
+    * The counts (one row per movieId, ~4.5 MB at the paper's scale) are
+    * broadcast, like [[Merge.join]]'s wiki side: the checkpoint estimates
+    * hide how small they are, so the planner would run both shuffle-map
+    * stages before AQE re-plans the join to a broadcast.
     */
   def attach(movies: DataFrame, counts: DataFrame): DataFrame = {
     val joined = movies
-      .join(counts, movies("kaggle_id") === counts("movieId"), "left")
+      .join(broadcast(counts), movies("kaggle_id") === counts("movieId"),
+        "left")
     // fillna(0) restricted to the rating columns, in one projection that
     // also drops movieId; the names contain dots ("rating_0.5"), which
     // na.fill would resolve as nested fields — use explicit coalesce with

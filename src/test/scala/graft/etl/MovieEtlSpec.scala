@@ -5,9 +5,12 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end tests of the reference pipeline over the synthesized
@@ -221,6 +224,68 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  test("moviesWithRatings broadcasts the rating counts: no shuffle") {
+    // size-based broadcast off: at fixture size it would hide a missing hint
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val mr = MovieEtl.run(caller, fixture("wikipedia.movies.json"),
+      fixture("movies_metadata.csv"), fixture("ratings.csv")).moviesWithRatings
+    mr.collect()
+    val plan = mr.queryExecution.executedPlan
+    assert(collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty)
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty)
+  }
+
+  /** [[MovieEtl.run]] for `caller` over the fixtures, its three outputs
+    * written to the noop sink.
+    */
+  private def runAndSink(caller: SparkSession): EtlResult = {
+    val r = MovieEtl.run(caller, fixture("wikipedia.movies.json"),
+      fixture("movies_metadata.csv"), fixture("ratings.csv"))
+    Seq(r.movies, r.moviesWithRatings, r.ratings)
+      .foreach(_.write.format("noop").mode("overwrite").save())
+    r
+  }
+
+  test("a repeated run from a fresh caller session compiles no class") {
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    runAndSink(spark.newSession())
+    val before = compiled
+    runAndSink(spark.newSession())
+    assert(compiled - before == 0)
+  }
+
+  test("run leaves the caller session's conf untouched") {
+    val was = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "false")
+    try {
+      val before = spark.conf.getAll
+      runAndSink(spark)
+      assert(spark.conf.getAll == before)
+    } finally spark.conf.set("spark.sql.caseSensitive", was)
+  }
+
+  test("run honours the caller's conf: one owned session per conf") {
+    def ownerOf(r: EtlResult): SparkSession = {
+      val owners = Seq(r.movies, r.moviesWithRatings, r.ratings)
+        .map(_.sparkSession).distinct
+      assert(owners.size == 1)
+      owners.head
+    }
+    def callerWith(partitions: String): SparkSession = {
+      val c = spark.newSession()
+      c.conf.set("spark.sql.shuffle.partitions", partitions)
+      c
+    }
+    val three = ownerOf(runAndSink(callerWith("3")))
+    assert(three.conf.get("spark.sql.shuffle.partitions") == "3")
+    assert(three.conf.get("spark.sql.caseSensitive") == "true")
+    assert(ownerOf(runAndSink(callerWith("3"))) eq three)
+    val five = ownerOf(runAndSink(callerWith("5")))
+    assert(!(five eq three))
+    assert(five.conf.get("spark.sql.shuffle.partitions") == "5")
+  }
+
   test("movies: 50 rows (challenge.py mode: dup imdb fans out, Q5)") {
     assert(result.movies.count() == 50)
   }
@@ -322,9 +387,9 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("e1 entry leaves the caller session's caseSensitive untouched") {
-    // the ETL needs caseSensitive=true for the wiki schema; the catalog
-    // entry scopes the flip to a child session so a shared Verify/Bench
-    // session keeps its resolution semantics regardless of run order
+    // the ETL needs caseSensitive=true for the wiki schema; MovieEtl.run
+    // sets it on a session of its own, so a shared Verify/Bench session
+    // keeps its resolution semantics regardless of run order
     spark.conf.set("spark.sql.caseSensitive", "false")
     val row = graft.SparkEntry.queries("e1_movie_pipeline")(spark, "")
       .collect().head
