@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * Wiki JSON (S1, challenge.py:44-45): one top-level array of heterogeneous
   * objects whose fields are per-record polymorphic (string OR array-of-string
   * OR nested object — SURVEY §7.5 H1). Every field is read as StringType —
-  * Spark then yields the raw JSON text for arrays/objects ("["a","b"]"),
+  * Spark then yields the JSON text for arrays/objects ("["a","b"]"),
   * which the expression layer flattens with
   * [[graft.ops.Expressions.flattenListString]] exactly like the reference's
   * `' '.join(x) if type(x) == list else x` (challenge.py:117).
@@ -18,8 +18,9 @@ object Extract {
   /** The wiki records, one string column per key of
     * [[WikiClean.inputKeys]]: the keys the output can depend on, about 30
     * of the ~210 in the file. The schema is declared, so the file is
-    * parsed once, with no inference pass; a list value's string is the
-    * file's own text of the list, whitespace included.
+    * parsed once, with no inference pass. A list value's string follows the
+    * session's JSON string mode (`spark.sql.json.enableExactStringParsing`):
+    * the file's own text of the list when on, compact JSON when off.
     *
     * The output is the same as with the whole union of keys (the analogue
     * of pandas' dict-key union, challenge.py:103): a key the file lacks

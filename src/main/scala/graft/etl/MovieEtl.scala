@@ -41,17 +41,24 @@ object MovieEtl {
     * Then the merge materialises `movies` (the movies sink, the ratings
     * attach and the JDBC sink). So no sink re-reads the input files.
     *
-    * The pipeline runs in a session [[run]] owns, never in the caller's, so
-    * `spark.sql.caseSensitive` (the wiki schema needs it) leaves the
-    * caller's conf as it was. It is one child of the caller per SparkContext
-    * and caller conf (the caller's modifiable SQL conf plus `caseSensitive`),
-    * memoised in one slot. Its conf is complete when it is made (the wiki
-    * read's own `caseSensitive` set changes nothing), so concurrent runs
-    * share it and the result stays a function of the inputs and the
-    * caller's conf. Spark gives each session its own executor class loader
-    * and caches generated code per loader, so a session per call would
-    * compile every generated class again on every run. The returned frames
-    * belong to the owned session.
+    * The pipeline runs in a session [[run]] owns, never in the caller's. It
+    * is one child of the caller per SparkContext and caller conf, memoised
+    * in one slot, and carries the caller's modifiable SQL conf plus two
+    * fixed overrides that leave the caller's conf as it was:
+    *   - `spark.sql.caseSensitive=true`: the wiki schema needs it;
+    *   - `spark.sql.json.enableExactStringParsing=false`: a list value's
+    *     text is re-encoded by the JSON generator from the bytes the
+    *     multiLine parser already holds, where exact-string parsing would
+    *     re-read the file once per list value. The text is compact
+    *     (`["a","b"]`), not the file's layout; every parse of it goes
+    *     through `from_json`, so only the list columns' text changes.
+    * Its conf is complete when it is made (the wiki read's own
+    * `caseSensitive` set changes nothing), so concurrent runs share it and
+    * the result stays a function of the inputs and the caller's conf. Spark
+    * gives each session its own executor class loader and caches generated
+    * code per loader, so a session per call would compile every generated
+    * class again on every run. The returned frames belong to the owned
+    * session.
     *
     * Every frame is built with the owned session active (Dataset
     * resolution reads `SQLConf.get`). The branch threads, created in that
@@ -108,7 +115,8 @@ object MovieEtl {
   /** The owned session for `caller`'s context and modifiable conf. */
   private def ownedSession(caller: SparkSession): SparkSession = {
     val conf = caller.conf.getAll.filter { case (k, _) =>
-      caller.conf.isModifiable(k) } + ("spark.sql.caseSensitive" -> "true")
+      caller.conf.isModifiable(k) } ++ Seq("spark.sql.caseSensitive" -> "true",
+      "spark.sql.json.enableExactStringParsing" -> "false")
     synchronized {
       owned match {
         case Some((sc, c, s)) if (sc eq caller.sparkContext) && c == conf => s

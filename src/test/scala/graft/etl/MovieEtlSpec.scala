@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -92,21 +93,25 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(WikiClean.pruneMostlyNull(emptyParts).columns.isEmpty)
   }
 
-  /** The job-start events of `body`, in start order. */
-  private def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
+  /** Runs `body` with `listener` on the bus, every event of it delivered. */
+  private def listening(listener: SparkListener)(body: => Any): Unit = {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
-    }
     ListenerBus.drain(sc)
     sc.addSparkListener(listener)
     try {
       body
       ListenerBus.drain(sc)
-      seen.asScala.toSeq
     } finally sc.removeSparkListener(listener)
+  }
+
+  /** The job-start events of `body`, in start order. */
+  private def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+    })(body)
+    seen.asScala.toSeq
   }
 
   test("clean profiles nulls in the job that materialises the wiki frame") {
@@ -125,17 +130,32 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Extract.ratingsSchema)
   }
 
+  /** A child of the test session with the given JSON string mode. */
+  private def stringMode(exact: Boolean): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.json.enableExactStringParsing", exact.toString)
+    s
+  }
+
+  /** The reference's session: [[MovieEtl.run]]'s JSON string mode, which
+    * sets the list columns' text.
+    */
+  private lazy val referenceSession = stringMode(exact = false)
+
   /** The pipeline composed step by step on the calling thread, with the
     * wiki read over every key (two passes) and the ratings schema inferred:
     * the reference [[MovieEtl.run]] must give the same output as.
     */
   private def referenceRun(cfg: EtlConfig): EtlResult = {
-    val wiki = WikiClean.clean(wikiAllKeys, cfg.dedupWiki)
+    val ref = referenceSession
+    val wiki = WikiClean.clean(
+      ReferenceWiki.readWikiJson(ref, fixture("wikipedia.movies.json")),
+      cfg.dedupWiki)
     val joined = Merge.join(wiki, Merge.cleanKaggle(
-      Extract.readCsv(spark, fixture("movies_metadata.csv"))))
+      Extract.readCsv(ref, fixture("movies_metadata.csv"))))
     val movies = Merge.project(Merge.fillMissingKaggle(
       if (cfg.dropOutlier) Merge.dropMergeOutlier(joined) else joined))
-    val ratings = Extract.readCsv(spark, fixture("ratings.csv"))
+    val ratings = Extract.readCsv(ref, fixture("ratings.csv"))
     EtlResult(movies, Ratings.attach(movies, Ratings.ratingCounts(ratings)),
       ratings)
   }
@@ -156,6 +176,39 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
             s"$cfg: $n rows")
       }
     }
+  }
+
+  test("run reads the wiki file once: checkpoint bytes equal the file's") {
+    val wiki = fixture("wikipedia.movies.json")
+    val read = new java.util.concurrent.atomic.AtomicLong
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.name.startsWith("localCheckpoint at WikiClean"))
+          read.addAndGet(e.stageInfo.taskMetrics.inputMetrics.bytesRead)
+    })(MovieEtl.run(spark, wiki, fixture("movies_metadata.csv"),
+      fixture("ratings.csv")))
+    assert(read.get == new java.io.File(wiki).length)
+  }
+
+  test("a list value reaches the output as compact JSON text") {
+    assert(field("tt1000001", "starring") == """["Ann A","Bob B"]""")
+  }
+
+  test("parsed wiki columns are the same in either JSON string mode") {
+    val wiki = fixture("wikipedia.movies.json")
+    val parsed = Seq("imdb_id", "box_office", "budget", "release_date",
+      "running_time").map(col)
+    // the parser takes the mode of the session that runs the job, so each
+    // side is collected in its own session, never joined across sessions
+    val Seq(exact, compact) = Seq(true, false).map { m =>
+      val raw = Extract.readWikiJson(stringMode(m), wiki)
+      val starring = raw.filter(col("imdb_link").contains("tt1000001"))
+        .select("Starring").head().getString(0)
+      val rows = WikiClean.clean(raw).select(parsed: _*).collect()
+      (starring, rows.toSeq.sortBy(_.toString))
+    }
+    assert(exact._1 != compact._1)
+    assert(exact._2.nonEmpty && exact._2 == compact._2)
   }
 
   test("run's branch jobs carry the caller's job group") {
@@ -273,13 +326,15 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       owners.head
     }
     def callerWith(partitions: String): SparkSession = {
-      val c = spark.newSession()
+      val c = stringMode(exact = true)
       c.conf.set("spark.sql.shuffle.partitions", partitions)
       c
     }
     val three = ownerOf(runAndSink(callerWith("3")))
     assert(three.conf.get("spark.sql.shuffle.partitions") == "3")
     assert(three.conf.get("spark.sql.caseSensitive") == "true")
+    assert(three.conf.get("spark.sql.json.enableExactStringParsing") ==
+      "false")
     assert(ownerOf(runAndSink(callerWith("3"))) eq three)
     val five = ownerOf(runAndSink(callerWith("5")))
     assert(!(five eq three))
