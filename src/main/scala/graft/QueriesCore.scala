@@ -1132,7 +1132,7 @@ object QueriesCore {
     // builds a bloom filter from the filtered keys and semi-joins it into
     // the probe-side SCAN — at 100 TB that drops most fact rows before
     // the exchange instead of shuffling them to die in the join. The
-    // entry runs in a child session so the size thresholds (tuned down to
+    // entry runs in an OwnedSession so the size thresholds (tuned down to
     // fire at test scale; the default 10 GiB probe floor is exactly right
     // for a real cluster) and the disabled broadcast (which would
     // otherwise absorb this dim — bloom is the big-dim regime) can't
@@ -1140,25 +1140,21 @@ object QueriesCore {
     // bloom_filter_agg / might_contain pair; the oracle is the plain
     // join aggregate, so correctness is filter-transparent.
     QuerySpec("j11_bloom_filter_join", (s, d) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.session.timeZone", "UTC")
-      s2.conf.set("spark.sql.shuffle.partitions",
-        s.conf.get("spark.sql.shuffle.partitions"))
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "512MB")
-      lineitem(s2, d)
-        .join(orders(s2, d).filter(col("o_totalprice") > 450000),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n_items"),
-          sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
-            .cast("decimal(18,6)")).cast("double").as("revenue"))
-        .orderBy(col("o_orderpriority"))
+      OwnedSession(s, Map(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        ("spark.sql.optimizer.runtime.bloomFilter." +
+          "applicationSideScanSizeThreshold") -> "0",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" ->
+          "512MB")) { s2 =>
+        lineitem(s2, d)
+          .join(orders(s2, d).filter(col("o_totalprice") > 450000),
+            col("l_orderkey") === col("o_orderkey"))
+          .groupBy(col("o_orderpriority"))
+          .agg(count(lit(1)).as("n_items"),
+            sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
+              .cast("decimal(18,6)")).cast("double").as("revenue"))
+          .orderBy(col("o_orderpriority"))
+      }
     },
       Some("""SELECT o_orderpriority, COUNT(*) AS n_items,
         |       CAST(SUM(CAST(l_extendedprice * (1 - l_discount)

@@ -5139,12 +5139,11 @@ object QueriesScale {
     // BIT-EQUAL to the batch sketch — no tolerance.
     QuerySpec("st14_stream_sketch", (s, d) => {
       val tag = java.util.UUID.randomUUID().toString.take(8)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // landing zone built once per JVM (input staging, not result
       // caching — Scratch.fixture's scaladoc carries the rationale);
       // the streamed query below runs from scratch every invocation
       val tmp = Scratch.fixture(s"cms:$d") { p =>
-        val raw = s.read.parquet(s"$d/events.parquet")
+        val raw = Tables.parquet(s, s"$d/events.parquet")
         for (i <- 0 until 3) {
           raw.filter(col("event_id") % 3 === i)
             .coalesce(1).write.mode("append").parquet(s"$p/events")
@@ -5167,8 +5166,7 @@ object QueriesScale {
 
     QuerySpec("st9_stream_static_enrich", (s, d) => {
       val tag = java.util.UUID.randomUUID().toString.take(8)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
+      val raw = Tables.parquet(s, s"$d/events.parquet")
       // once-per-JVM input staging (see Scratch.fixture)
       val tmp = Scratch.fixture(s"enrich:$d") { p =>
         for (i <- 0 until 3) {
@@ -5232,11 +5230,10 @@ object QueriesScale {
 
     QuerySpec("st4b_interval_join_stream_equiv", (s, d) => {
       val tag = java.util.UUID.randomUUID().toString.take(8)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // once-per-JVM input staging (see Scratch.fixture); mtime order
       // is baked into the zone at build time
       val root = Scratch.fixture(s"ssjoin:$d") { p =>
-        val raw = s.read.parquet(s"$d/events.parquet")
+        val raw = Tables.parquet(s, s"$d/events.parquet")
         // one global event-time sextiling drives BOTH zones so the two
         // sources advance through event time together (the join's
         // watermark is the min across inputs)
@@ -5298,7 +5295,6 @@ object QueriesScale {
     // verdict (rows-only check by design).
     QuerySpec("st2b_stream_batch_equiv", (s, d) => {
       val tag = java.util.UUID.randomUUID().toString.take(8)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // a time-ordered landing zone: six sequential appends (one per ts
       // sextile) give strictly increasing file modification times, and the
       // file stream source processes oldest-first — so micro-batches
@@ -5307,7 +5303,7 @@ object QueriesScale {
       // discovery order: all parts share one mtime.) Built once per JVM
       // (input staging — see Scratch.fixture).
       val tmp = Scratch.fixture(s"landing:$d") { p =>
-        val raw = s.read.parquet(s"$d/events.parquet")
+        val raw = Tables.parquet(s, s"$d/events.parquet")
         val withB = raw.withColumn("_b",
           ntile(6).over(org.apache.spark.sql.expressions.Window
             .orderBy(col("ts"))))
@@ -5364,10 +5360,9 @@ object QueriesScale {
     // masked by a double-admitted one). Self-checking rows-only entry.
     QuerySpec("st6_stream_dedup", (s, d) => {
       val tag = java.util.UUID.randomUUID().toString.take(8)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // once-per-JVM input staging (see Scratch.fixture)
       val tmp = Scratch.fixture(s"dedup_feed:$d") { p =>
-        val raw = s.read.parquet(s"$d/events.parquet")
+        val raw = Tables.parquet(s, s"$d/events.parquet")
         val withB = raw.withColumn("_b",
           ntile(6).over(org.apache.spark.sql.expressions.Window
             .orderBy(col("ts"))))
@@ -5449,8 +5444,7 @@ object QueriesScale {
       // input zone staged once per JVM (see Scratch.fixture); the OUTPUT
       // dir stays fresh per invocation — the chunked load is the work
       val tmpOut = Scratch.dir("load_out") + "/out"
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = s.read.parquet(s"$d/events.parquet")
+      val raw = Tables.parquet(s, s"$d/events.parquet")
       val tmpIn = Scratch.fixture(s"load_in:$d") { p =>
         val withB = raw.withColumn("_b",
           ntile(6).over(org.apache.spark.sql.expressions.Window

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Harness-table readers (TESTDATA.md). One parquet file per table under the
   * sf directory. All reads go through here so scan options stay uniform.
@@ -35,10 +36,23 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame = t(s, d, "part")
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
+  /** The schema of the parquet at `path` as derived with
+    * `spark.sql.legacy.parquet.nanosAsLong` on, in an [[OwnedSession]]: a
+    * TIMESTAMP(NANOS) column, which the plain derivation rejects
+    * ([PARQUET_TYPE_ILLEGAL]), comes out as epoch-nanos LONG. The flag only
+    * derives the schema: a read under it in any session returns LONG.
+    */
+  def parquetSchema(s: SparkSession, path: String): StructType =
+    OwnedSession(s, Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))(
+      _.read.parquet(path).schema)
+
+  /** The parquet at `path`, read in `s` under [[parquetSchema]]. */
+  def parquet(s: SparkSession, path: String): DataFrame =
+    s.read.schema(parquetSchema(s, path)).parquet(path)
+
   /** `events.ts` has shipped in two physical forms across testdata drops:
-    * TIMESTAMP(NANOS) — which Spark's vectorized reader rejects
-    * ([PARQUET_TYPE_ILLEGAL]), so the legacy flag reads it as epoch-nanos
-    * LONG — and TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives as
+    * TIMESTAMP(NANOS), which [[parquetSchema]] reads as epoch-nanos LONG,
+    * and TIMESTAMP(MICROS, isAdjustedToUTC=false), which arrives as
     * TIMESTAMP_NTZ. Either way the engine presents one schema downstream:
     * a micros session-zone TimestampType. ns→µs `div 1000` truncates
     * exactly like DuckDB's formatting, and the NTZ cast under the UTC
@@ -55,10 +69,9 @@ object Tables {
     }
   }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(t(s, d, "events"))
-  }
+  /** The events table read through [[parquet]], `ts` normalised. */
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeTs(parquet(s, s"$d/events.parquet"))
   def documents(s: SparkSession, d: String): DataFrame = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }

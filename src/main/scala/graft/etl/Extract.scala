@@ -27,11 +27,13 @@ object Extract {
     * reads as an all-null column, which [[WikiClean]] treats like an absent
     * one and the null pruning drops, and every other key is consumed only
     * by `alt_titles` or dropped before the 31-column projection.
+    *
+    * The wiki keys "Release date" AND "Release Date" (the :89-90 rename
+    * chain) need `caseSensitive`. [[MovieEtl.run]]'s owned session has it;
+    * the set stays for callers that resolve [[WikiClean]] columns in the
+    * session they pass, as the benchmark's traced pass does.
     */
   def readWikiJson(spark: SparkSession, path: String): DataFrame = {
-    // pandas dict keys are case-sensitive and the wiki data carries both
-    // "Release date" AND "Release Date" (the :89-90 rename chain depends on
-    // it) — Spark's default case-insensitive resolution rejects that schema.
     spark.conf.set("spark.sql.caseSensitive", "true")
     val keys = StructType(
       WikiClean.inputKeys.map(StructField(_, StringType, nullable = true)))

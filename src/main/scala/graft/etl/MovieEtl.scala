@@ -1,8 +1,7 @@
 package graft.etl
 
-import org.apache.spark.SparkContext
+import graft.OwnedSession
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.Bridge
 
 /** The full reference pipeline (challenge.py:38-325, E1), Spark-first.
   *
@@ -41,31 +40,20 @@ object MovieEtl {
     * Then the merge materialises `movies` (the movies sink, the ratings
     * attach and the JDBC sink). So no sink re-reads the input files.
     *
-    * The pipeline runs in a session [[run]] owns, never in the caller's. It
-    * is one child of the caller per SparkContext and caller conf, memoised
-    * in one slot, and carries the caller's modifiable SQL conf plus two
-    * fixed overrides that leave the caller's conf as it was:
+    * The pipeline runs in an [[graft.OwnedSession]], which the returned
+    * frames belong to, with two overrides:
     *   - `spark.sql.caseSensitive=true`: the wiki schema needs it;
-    *   - `spark.sql.json.enableExactStringParsing=false`: a list value's
-    *     text is re-encoded by the JSON generator from the bytes the
-    *     multiLine parser already holds, where exact-string parsing would
-    *     re-read the file once per list value. The text is compact
-    *     (`["a","b"]`), not the file's layout; every parse of it goes
-    *     through `from_json`, so only the list columns' text changes.
-    * Its conf is complete when it is made (the wiki read's own
-    * `caseSensitive` set changes nothing), so concurrent runs share it and
-    * the result stays a function of the inputs and the caller's conf. Spark
-    * gives each session its own executor class loader and caches generated
-    * code per loader, so a session per call would compile every generated
-    * class again on every run. The returned frames belong to the owned
-    * session.
+    *   - `spark.sql.json.enableExactStringParsing=false`: the JSON
+    *     generator re-encodes a list value from the bytes the multiLine
+    *     parser holds, where exact-string parsing would re-read the file
+    *     once per list value. The text is compact (`["a","b"]`); every
+    *     parse of it goes through `from_json`.
     *
-    * Every frame is built with the owned session active (Dataset
-    * resolution reads `SQLConf.get`). The branch threads, created in that
-    * scope, inherit it and the caller's SparkContext local properties, so
-    * their jobs run under the caller's job group and description. Every
-    * branch is joined before the call returns or throws, and a branch's
-    * failure is rethrown as it was raised.
+    * The branch threads, created with the owned session active, inherit
+    * it and the caller's SparkContext local properties, so their jobs run
+    * under the caller's job group and description. Every branch is joined
+    * before the call returns or throws, and a branch's failure is rethrown
+    * as it was raised.
     *
     * The checkpoint blocks live in executor storage, not in the
     * CacheManager, and the ContextCleaner frees them once the
@@ -74,8 +62,7 @@ object MovieEtl {
     */
   def run(caller: SparkSession, wikiPath: String, kagglePath: String,
       ratingsPath: String, config: EtlConfig = EtlConfig()): EtlResult = {
-    val spark = ownedSession(caller)
-    Bridge.withActive(spark) {
+    OwnedSession(caller, overrides) { spark =>
       // EXTRACT (S3) + RATINGS (A1, A2)
       val ratingsBranch = new Branch("ratings")({
         val ratings = Extract.readRatings(spark, ratingsPath)
@@ -108,26 +95,9 @@ object MovieEtl {
     }
   }
 
-  /** The last owned session, with the context and conf it was made for. */
-  private var owned: Option[(SparkContext, Map[String, String],
-    SparkSession)] = None
-
-  /** The owned session for `caller`'s context and modifiable conf. */
-  private def ownedSession(caller: SparkSession): SparkSession = {
-    val conf = caller.conf.getAll.filter { case (k, _) =>
-      caller.conf.isModifiable(k) } ++ Seq("spark.sql.caseSensitive" -> "true",
-      "spark.sql.json.enableExactStringParsing" -> "false")
-    synchronized {
-      owned match {
-        case Some((sc, c, s)) if (sc eq caller.sparkContext) && c == conf => s
-        case _ =>
-          val s = caller.newSession()
-          conf.foreach { case (k, v) => s.conf.set(k, v) }
-          owned = Some((caller.sparkContext, conf, s))
-          s
-      }
-    }
-  }
+  private val overrides = Map(
+    "spark.sql.caseSensitive" -> "true",
+    "spark.sql.json.enableExactStringParsing" -> "false")
 
   /** `body` running on a thread of its own, `MovieEtl-<name>`, started at
     * construction.

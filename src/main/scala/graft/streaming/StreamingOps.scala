@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{OwnedSession, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode,
@@ -50,12 +50,7 @@ object StreamingOps {
     */
   def streamingHourlyAgg(spark: SparkSession, eventsDir: String,
       queryName: String): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val events = Tables.normalizeTs(spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(eventsDir))
+    val events = Tables.normalizeTs(landing(spark, eventsDir))
       .withWatermark("ts", "2 hours")
     hourlyAgg(events)
       .writeStream
@@ -204,18 +199,11 @@ object StreamingOps {
   def streamIntervalJoin(spark: SparkSession, leftDir: String,
       rightDir: String, keyCol: String, tsCol: String, lookback: String,
       watermark: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     def src(dir: String): DataFrame =
-      Tables.normalizeTs(
-          spark.readStream.schema(spark.read.parquet(dir).schema)
-            .option("maxFilesPerTrigger", 1).parquet(dir), tsCol)
+      Tables.normalizeTs(landing(spark, dir), tsCol)
         .withWatermark(tsCol, watermark)
-    val q = intervalJoin(src(leftDir), src(rightDir), keyCol, tsCol,
-        lookback)
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(intervalJoin(src(leftDir), src(rightDir), keyCol, tsCol,
+      lookback), OutputMode.Append, queryName)
   }
 
   /** Stream-static enrichment: every micro-batch of the event stream
@@ -230,17 +218,11 @@ object StreamingOps {
   def streamStaticEnrich(spark: SparkSession, eventsDir: String,
       dim: DataFrame, keyCol: String, attrCol: String, queryName: String)
   : DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(eventsDir)
-    val q = src.join(broadcast(dim), Seq(keyCol), "left")
+    drain(landing(spark, eventsDir)
+      .join(broadcast(dim), Seq(keyCol), "left")
       .groupBy(col(attrCol), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value"))
-      .writeStream.outputMode(OutputMode.Complete).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("total_value")),
+      OutputMode.Complete, queryName)
   }
 
   /** Ingest-time decontamination: documents stream in and any doc sharing
@@ -309,15 +291,8 @@ object StreamingOps {
           Bridge.expression(xxhash64(g)))))
       }
     gramSet.unpersist()
-    val schema = spark.read.parquet(docsDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(docsDir)
-      .filter(!contaminated)
-      .select(col(idCol))
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(landing(spark, docsDir).filter(!contaminated).select(col(idCol)),
+      OutputMode.Append, queryName)
   }
 
   /** Drive [[statefulSessionize]] over a parquet landing zone with
@@ -328,18 +303,12 @@ object StreamingOps {
     */
   def streamClosedSessions(spark: SparkSession, eventsDir: String,
       gap: String, queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
     import spark.implicits._
-    val ticks = Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(eventsDir))
+    val ticks = Tables.normalizeTs(landing(spark, eventsDir))
       .withWatermark("ts", "2 hours")
       .select(col("user_id"), col("ts")).as[UserTick]
-    val q = statefulSessionize(ticks, gap)
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(statefulSessionize(ticks, gap).toDF(), OutputMode.Append,
+      queryName)
   }
 
   case class SourcedDoc(source: String, doc_id: Long)
@@ -371,33 +340,30 @@ object StreamingOps {
   }
 
   /** Drive [[PerKeyQuota]] over a documents landing zone (AvailableNow,
-    * memory sink). transformWithState requires the RocksDB state store —
-    * scoped to this query and restored after.
+    * memory sink). transformWithState requires the RocksDB state store, so
+    * the stream runs in an [[OwnedSession]] with that provider; the
+    * admitted rows come back as a frame of the caller's session.
     */
   def streamPerKeyQuota(spark: SparkSession, docsDir: String,
       maxPerKey: Long, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(docsDir).schema
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
-      "streaming.state.RocksDBStateStoreProvider")
-    try {
-      import spark.implicits._
-      val src = spark.readStream.schema(schema)
+    val schema = Tables.parquetSchema(spark, docsDir)
+    val sink = OwnedSession(spark, rocksDb) { owned =>
+      import owned.implicits._
+      val admitted = drain(owned.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(docsDir)
         .select(col("source"), col("doc_id")).as[SourcedDoc]
-      val q = src.groupByKey(_.source)
+        .groupByKey(_.source)
         .transformWithState(new PerKeyQuota(maxPerKey), TimeMode.None(),
-          OutputMode.Append(), Encoders.product[SourcedDoc])
-        .writeStream.outputMode(OutputMode.Append).format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      spark.table(queryName)
-    } finally prev match {
-      case Some(p) => spark.conf.set(providerKey, p)
-      case None => spark.conf.unset(providerKey)
+          OutputMode.Append(), Encoders.product[SourcedDoc]).toDF(),
+        OutputMode.Append, queryName)
+      owned.catalog.dropTempView(queryName)
+      admitted.queryExecution.analyzed
     }
+    org.apache.spark.sql.graft.Bridge.ofRows(spark, sink)
   }
+
+  private val rocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   /** Streaming ingest dedup: exactly-once event delivery on top of an
     * at-least-once feed — `dropDuplicatesWithinWatermark` keys state by
@@ -410,16 +376,10 @@ object StreamingOps {
     */
   def streamDedup(spark: SparkSession, eventsDir: String, idCol: String,
       queryName: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val src = Tables.normalizeTs(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(eventsDir))
+    val src = Tables.normalizeTs(landing(spark, eventsDir))
       .withWatermark("ts", "2 hours")
-    val q = src.dropDuplicatesWithinWatermark(idCol)
-      .writeStream.outputMode(OutputMode.Append).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drain(src.dropDuplicatesWithinWatermark(idCol), OutputMode.Append,
+      queryName)
   }
 
   /** Streaming Count-Min sketch: the CMS build is ONE commutative cell
@@ -435,16 +395,10 @@ object StreamingOps {
   def streamCountMin(spark: SparkSession, eventsDir: String,
       keyCol: String, depth: Int, width: Int, queryName: String)
   : DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(eventsDir).schema
-    val src = Tables.normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(eventsDir))
-    val q = graft.functions.CountMin
-      .sketch(src.select(col(keyCol)), keyCol, depth, width)
-      .writeStream.outputMode(OutputMode.Complete).format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(queryName)
+    val src = Tables.normalizeTs(landing(spark, eventsDir))
+    drain(graft.functions.CountMin
+      .sketch(src.select(col(keyCol)), keyCol, depth, width),
+      OutputMode.Complete, queryName)
   }
 
   /** Chunked incremental load with progress accounting (S6): stream the
@@ -453,10 +407,7 @@ object StreamingOps {
     */
   def chunkedLoad(spark: SparkSession, srcDir: String, outPath: String)
   : StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
+    val src = landing(spark, srcDir)
     val t0 = System.nanoTime()
     val total = new java.util.concurrent.atomic.AtomicLong(0L)
     src.writeStream
@@ -469,5 +420,23 @@ object StreamingOps {
       }
       .trigger(Trigger.AvailableNow())
       .start()
+  }
+
+  /** A file stream over the landing zone `dir`, one file per micro-batch,
+    * read under [[Tables.parquetSchema]].
+    */
+  private def landing(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(Tables.parquetSchema(spark, dir))
+      .option("maxFilesPerTrigger", 1).parquet(dir)
+
+  /** `stream` run over all its input (AvailableNow) into a memory sink:
+    * the sink's rows, as the view `queryName` of the stream's session.
+    */
+  private def drain(stream: DataFrame, mode: OutputMode,
+      queryName: String): DataFrame = {
+    stream.writeStream.outputMode(mode).format("memory")
+      .queryName(queryName).trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    stream.sparkSession.table(queryName)
   }
 }

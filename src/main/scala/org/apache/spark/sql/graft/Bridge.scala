@@ -25,7 +25,7 @@ object Bridge {
 
   /** Run `body` with `session` as the thread's ACTIVE session, restoring
     * the previous active session after. Needed when working on a child
-    * `newSession()`: several Dataset-API resolution paths read conf via
+    * session (`graft.OwnedSession`): several Dataset-API resolution paths read conf via
     * `SQLConf.get` = the thread-active session's conf, NOT the conf of the
     * session the DataFrame belongs to — so a child session's conf overrides
     * (e.g. `spark.sql.caseSensitive`) silently don't apply unless the child

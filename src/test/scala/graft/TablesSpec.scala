@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.StreamingOps
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -33,5 +35,47 @@ class TablesSpec extends SparkSpec {
     assert(out.schema("ts").dataType == TimestampType)
     assert(out.collect().head.getTimestamp(0) ==
       df.collect().head.getTimestamp(0))
+  }
+
+  /** An events-shaped pyarrow file whose `ts` is TIMESTAMP(NANOS), alone in
+    * its directory so the directory is also a landing zone (FIXTURES.md).
+    */
+  private lazy val nanosDir = fixture("nanos_events")
+  private val nanosTs = Seq(1704067798778549123L, 1704068166738090456L,
+    1704068217102229789L, 1704071405000000999L, 1704072001999999999L,
+    1704075600000000001L)
+
+  /** A fresh caller without the nanos flag, and its conf before `body`. */
+  private def withFreshCaller(body: org.apache.spark.sql.SparkSession =>
+      Unit): Unit = {
+    val caller = spark.newSession()
+    assert(caller.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+    val before = caller.conf.getAll
+    body(caller)
+    assert(caller.conf.getAll == before)
+  }
+
+  test("events reads a TIMESTAMP(NANOS) ts as its micros truncation, " +
+      "leaving the caller's conf as it was") {
+    withFreshCaller { caller =>
+      val ev = Tables.events(caller, nanosDir)
+      assert(ev.schema("ts").dataType == TimestampType)
+      val got = ev.orderBy("event_id").select("ts").collect()
+        .map(_.getTimestamp(0)).toSeq
+      assert(got == nanosTs.map(n => DateTimeUtils.toJavaTimestamp(n / 1000)))
+    }
+  }
+
+  test("a stream over a TIMESTAMP(NANOS) landing zone equals its batch " +
+      "form, leaving the caller's conf as it was") {
+    withFreshCaller { caller =>
+      StreamingOps.streamingHourlyAgg(caller, nanosDir, "nanos_hourly")
+        .awaitTermination()
+      val streamed = caller.table("nanos_hourly")
+      val batch = StreamingOps.hourlyAgg(Tables.events(caller, nanosDir))
+      assert(streamed.count() == 6)
+      assert(streamed.exceptAll(batch).isEmpty)
+      assert(batch.exceptAll(streamed).isEmpty)
+    }
   }
 }

@@ -339,6 +339,11 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val five = ownerOf(runAndSink(callerWith("5")))
     assert(!(five eq three))
     assert(five.conf.get("spark.sql.shuffle.partitions") == "5")
+    val etl = Map("spark.sql.caseSensitive" -> "true",
+      "spark.sql.json.enableExactStringParsing" -> "false")
+    assert(graft.OwnedSession(callerWith("3"), etl)(identity) eq three)
+    assert(!(graft.OwnedSession(callerWith("3"),
+      etl - "spark.sql.caseSensitive")(identity) eq three))
   }
 
   test("movies: 50 rows (challenge.py mode: dup imdb fans out, Q5)") {

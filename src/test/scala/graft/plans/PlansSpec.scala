@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.{QueriesCore, QueriesScale, SparkSpec, SparkEntry}
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Plan-shape regression tests: lock in the physical-plan properties the
   * 100 TB design depends on — filters pushed to the parquet scan, dimension
@@ -78,6 +79,29 @@ class PlansSpec extends SparkSpec {
       s"no bloom filter build in plan: ${plan.take(3000)}")
     assert(lower.contains("might_contain"),
       s"probe side not bloom-filtered: ${plan.take(3000)}")
+  }
+
+  test("j11 run again from a fresh caller session compiles no class") {
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(): Unit = SparkEntry.queries("j11_bloom_filter_join")(
+      spark.newSession(), sf).collect()
+    run()
+    val before = compiled
+    run()
+    assert(compiled - before == 0)
+  }
+
+  test("entries with conf overrides leave a fresh caller's conf as it was") {
+    for (name <- Seq("e1_movie_pipeline", "j11_bloom_filter_join",
+        "st2b_stream_batch_equiv", "st4b_interval_join_stream_equiv",
+        "st6_stream_dedup", "st7_per_source_quota", "st8_chunked_load",
+        "st9_stream_static_enrich", "st14_stream_sketch",
+        "f1_key_existence")) {
+      val caller = spark.newSession()
+      val before = caller.conf.getAll
+      SparkEntry.queries(name)(caller, sf).collect()
+      assert(caller.conf.getAll == before, name)
+    }
   }
 
   test("q17: the correlated avg-quantity subquery decorrelates to an " +
