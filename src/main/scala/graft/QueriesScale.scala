@@ -5316,7 +5316,9 @@ object QueriesScale {
 
       val hq = StreamingOps.streamingHourlyAgg(s, tmp, s"st2b_h_$tag")
       hq.awaitTermination()
+      // the frame keeps the memory sink's plan; the view can go
       val hStream = s.table(s"st2b_h_$tag")
+      s.catalog.dropTempView(s"st2b_h_$tag")
       val hBatch = StreamingOps.hourlyAgg(events(s, d))
 
       val closed = StreamingOps.streamClosedSessions(s, tmp, "10 minutes",

@@ -16,9 +16,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * `sort_array` the set-similarity consumers apply next. It exists for
   * the consumers that must keep RAW gram strings (set joins keyed on the
   * gram value, DuckDB-oracle-replayed set builds): dd25/dd26's shingle
-  * sets, tc1's decontamination gram join, ts21's novelty census, ts7's
-  * bigram runs. Consumers that immediately hash the gram should use
-  * [[GramHashes]] instead and never materialize the strings.
+  * sets, tc1's decontamination gram join, ts21's novelty census.
+  * Consumers that immediately hash the gram should use [[GramHashes]]
+  * instead and never materialize the strings. Two sibling kernels work on
+  * the text itself rather than a token array: [[WordChunks]] (the line
+  * chunks of dd8 and ts13) and [[RepetitionCounts]] (ts7's line and
+  * bigram counts, which need no gram strings at all; it runs the same
+  * token scan and line rule as [[WordChunks]]).
   *
   * Why it exists (r16 measurement): the chain's higher-order functions —
   * the k−1 `zip_with`s and their per-element lambda `concat` — are

@@ -1065,16 +1065,13 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("jw"), 4).as("jw"))
   }
 
-  /** Non-overlapping chunks of `w` whitespace words as an array column —
-    * the "line" unit for line-level ops on newline-free corpora.
+  /** Non-overlapping chunks of `w` space-separated words as an array
+    * column — the "line" unit for line-level ops on newline-free corpora.
+    * One compiled pass per row ([[graft.functions.WordChunks]], which
+    * states the exact semantics).
     */
-  def wordChunks(text: Column, w: Int): Column = {
-    val ws = split(text, " ")
-    val nChunks = greatest(
-      ceil(size(ws).cast("double") / w).cast("int"), lit(1))
-    transform(sequence(lit(0), nChunks - 1),
-      i => array_join(slice(ws, i * w + 1, lit(w)), " "))
-  }
+  def wordChunks(text: Column, w: Int): Column =
+    graft.functions.WordChunks(text, w)
 
   /** C4/RefinedWeb-style line-level dedup: drop every line whose
     * corpus-wide occurrence count exceeds `maxOccurrences`, then reassemble
@@ -1640,7 +1637,9 @@ object Dedup {
     * degree equals the naive alive-degree at every round — confluence
     * keeps the result identical. Rounds are bounded by the peel depth,
     * with the round's degree relation lazily checkpointed — the
-    * connectedComponents loop discipline.
+    * connectedComponents loop discipline. When `maxIters` rounds still
+    * leave nodes below k it throws `IllegalStateException`, as
+    * connectedComponents does, rather than return a non-core.
     *
     * Returns (node, deg) for surviving nodes, deg = within-core degree.
     */
@@ -1653,24 +1652,27 @@ object Dedup {
     val cached = und.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(und.select(col("b").as("src"), col("a").as("dst")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one full-degree aggregate — the only all-edges shuffle in the op
-    var deg = cached.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg"))
-      .localCheckpoint(true)
-    // LOOP-WIDTH the cached edge relation (r15, the connectedComponents
-    // rationale): the degree job above materialized the cache, the count
-    // is a cached scan, and the peel rounds re-join edges up to maxIters
-    // times — at inherited width that is 64+ map tasks per round of pure
-    // overhead on a KB-scale graph.
-    val edges = cached.coalesce(loopParts(cached.count(), 32))
-    var iters = 0
-    var done = false
-    while (!done && iters < maxIters) {
+    try {
+      // one full-degree aggregate — the only all-edges shuffle in the op
+      var deg = cached.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .select(col("src").as("node"), col("deg"))
+        .localCheckpoint(true)
+      // LOOP-WIDTH the cached edge relation (r15, the connectedComponents
+      // rationale): the degree job above materialized the cache, the count
+      // is a cached scan, and the peel rounds re-join edges up to maxIters
+      // times — at inherited width that is 64+ map tasks per round of pure
+      // overhead on a KB-scale graph.
+      val edges = cached.coalesce(loopParts(cached.count(), 32))
       // the frontier leaves this round; referenced twice (emptiness probe
       // + decrement join) — eager checkpoint of a node-sized filter
-      val frontier = deg.filter(col("deg") < k).localCheckpoint(true)
-      if (frontier.isEmpty) done = true
-      else {
+      def frontierOf(d: DataFrame) =
+        d.filter(col("deg") < k).localCheckpoint(true)
+      var frontier = frontierOf(deg)
+      var iters = 0
+      while (!frontier.isEmpty) {
+        if (iters == maxIters) throw new IllegalStateException(
+          s"kCore did not converge: nodes below degree $k left after " +
+            s"$iters rounds (maxIters = $maxIters)")
         val dec = edges
           .join(frontier.select(col("node").as("src")), Seq("src"))
           .groupBy(col("dst")).agg(count(lit(1)).as("dec"))
@@ -1680,13 +1682,12 @@ object Dedup {
           .select(col("node"),
             (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
           .localCheckpoint(false)
+        frontier = frontierOf(deg)
         iters += 1
       }
-    }
-    // maxIters truncation can leave sub-k rows; fixpoint exit cannot
-    val out = deg.filter(col("deg") >= k).localCheckpoint(true)
-    cached.unpersist()
-    out
+      // an empty frontier: every row left is in the core
+      deg.localCheckpoint(true)
+    } finally cached.unpersist()
   }
 
   /** Synchronous label propagation over the dup-candidate graph — the

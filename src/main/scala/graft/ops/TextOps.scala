@@ -166,70 +166,27 @@ object TextOps {
     * fraction, duplicate-line character fraction, and the most common word
     * bigram with its character coverage — the filters MassiveText applies
     * before training. Entirely ROW-LOCAL (zero shuffles, embarrassingly
-    * parallel): duplicate runs are counted in one pass over the SORTED
-    * line/gram arrays via `aggregate` with a struct accumulator
-    * (O(L log L) per doc from the sort — not the O(L²)
-    * count-each-distinct-element formulation), so the whole operator is a
-    * codegen'd projection. Lines are `lineWords`-word chunks (see
+    * parallel): every count comes from one compiled pass per document
+    * ([[graft.functions.RepetitionCounts]]: hash counts over the lines and
+    * bigrams, O(L) per doc). Lines are `lineWords`-word chunks (see
     * [[Dedup.wordChunks]]); ties for the top bigram resolve to the
-    * lexicographically smallest (first max run in sorted order).
+    * smallest in UTF-8 binary order.
     */
   def repetitionSignals(df: DataFrame, idCol: String, textCol: String,
-      lineWords: Int = 5): DataFrame = {
-    // stage 1: the expensive array builds, each exactly once
-    // (multi-referenced non-cheap projections stay un-collapsed)
-    // grams build PRE-SORTED in the fused GramStrings pass (r16): its
-    // only consumer is the run-length scan below, which needs the sorted
-    // order — sorted=true replays sort_array (nulls first), identical to
-    // the old array_sort (nulls last) here because split output never
-    // contains nulls, so no gram is ever null
-    val base = df.select(col(idCol), length(col(textCol)).as("n_chars"),
-      Dedup.wordChunks(col(textCol), lineWords).as("lines"),
-      graft.functions.GramStrings(split(col(textCol), " "), 2,
-        distinct = false, sorted = true).as("grams"))
-    // one-pass run-length scan over a sorted array: chars in lines whose
-    // within-doc occurrence count is >1 (both members of a pair count)
-    val dupChars = aggregate(array_sort(col("lines")),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("dup")),
-      (acc, l) => {
-        val run = when(l === acc("prev"), acc("run") + 1).otherwise(lit(1L))
-        val add = when(run === 2, length(l).cast("long") * 2)
-          .when(run > 2, length(l).cast("long")).otherwise(lit(0L))
-        struct(l.as("prev"), run.as("run"), (acc("dup") + add).as("dup"))
-      },
-      st => st("dup"))
-    // longest run in the sorted gram array = max bigram frequency
-    // (grams arrive pre-sorted from the fused build above)
-    val top = aggregate(col("grams"),
-      struct(lit("").as("prev"), lit(0L).as("run"),
-        lit(0L).as("best"), lit("").as("bestg")),
-      (acc, g) => {
-        val run = when(g === acc("prev"), acc("run") + 1).otherwise(lit(1L))
-        val isBest = run > acc("best")
-        struct(g.as("prev"), run.as("run"),
-          when(isBest, run).otherwise(acc("best")).as("best"),
-          when(isBest, g).otherwise(acc("bestg")).as("bestg"))
-      })
-    val staged = base.select(col(idCol), col("n_chars"),
-      size(col("lines")).cast("long").as("n_lines"),
-      (size(col("lines")) - size(array_distinct(col("lines"))))
-        .cast("long").as("n_dup_lines"),
-      aggregate(col("lines"), lit(0L), (a, l) => a + length(l))
-        .as("line_chars"),
-      dupChars.as("dup_line_chars"),
-      // the scan struct lands whole (one evaluation), fields split next
-      top.as("topst"))
-      .withColumn("top_bigram_count", col("topst.best"))
-      .withColumn("top_bigram", col("topst.bestg"))
-    staged.select(col(idCol), col("n_lines"), col("n_dup_lines"),
-      round(col("n_dup_lines").cast("double") / col("n_lines"), 4)
-        .as("dup_line_frac"),
-      round(col("dup_line_chars").cast("double") / col("line_chars"), 4)
-        .as("dup_line_char_frac"),
-      col("top_bigram"), col("top_bigram_count"),
-      round(col("top_bigram_count") * length(col("top_bigram"))
-        .cast("double") / col("n_chars"), 4).as("top_bigram_char_frac"))
-  }
+      lineWords: Int = 5): DataFrame =
+    // the struct lands whole (one evaluation per row), fields split next
+    df.select(col(idCol), length(col(textCol)).as("n_chars"),
+        graft.functions.RepetitionCounts(col(textCol), lineWords).as("r"))
+      .select(col(idCol), col("r.n_lines").as("n_lines"),
+        col("r.n_dup_lines").as("n_dup_lines"),
+        round(col("r.n_dup_lines").cast("double") / col("r.n_lines"), 4)
+          .as("dup_line_frac"),
+        round(col("r.dup_line_chars").cast("double") / col("r.line_chars"),
+          4).as("dup_line_char_frac"),
+        col("r.top_bigram").as("top_bigram"),
+        col("r.top_bigram_count").as("top_bigram_count"),
+        round(col("r.top_bigram_count") * length(col("r.top_bigram"))
+          .cast("double") / col("n_chars"), 4).as("top_bigram_char_frac"))
 
   /** CCNet-style language-model document scoring: train a unigram LM on
     * the corpus (top-`vocabSize` terms by frequency, add-one smoothing over
@@ -638,13 +595,14 @@ object TextOps {
     * this newline-free corpus ([[Dedup.wordChunks]], as in
     * [[Dedup.lineDedup]]).
     *
-    * Entirely ROW-LOCAL — the line array is built, filtered (codegen'd
-    * higher-order `filter` over per-line token arrays) and re-joined inside
-    * one projection; zero shuffles, partitioning inherited from the corpus
-    * scan. This is the designed contrast to [[Dedup.lineDedup]]: C4's
-    * HEURISTIC gate needs no corpus statistics, so it composes map-side
-    * ahead of the frequency-based passes and costs one scan at any corpus
-    * size.
+    * Entirely ROW-LOCAL — the line array is built (one compiled pass,
+    * [[graft.functions.WordChunks]]), filtered (higher-order `filter` over
+    * per-line token arrays, interpreted: CodegenFallback in Spark 4.1) and
+    * re-joined inside one projection; zero shuffles, partitioning
+    * inherited from the corpus scan. This is the designed contrast to
+    * [[Dedup.lineDedup]]: C4's HEURISTIC gate needs no corpus statistics,
+    * so it composes map-side ahead of the frequency-based passes and costs
+    * one scan at any corpus size.
     */
   def heuristicClean(docs: DataFrame, idCol: String, textCol: String,
       lineWords: Int = 5, badWords: Seq[String] = Seq("javascript"),

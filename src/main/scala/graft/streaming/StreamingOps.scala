@@ -349,15 +349,13 @@ object StreamingOps {
     val schema = Tables.parquetSchema(spark, docsDir)
     val sink = OwnedSession(spark, rocksDb) { owned =>
       import owned.implicits._
-      val admitted = drain(owned.readStream.schema(schema)
+      drain(owned.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(docsDir)
         .select(col("source"), col("doc_id")).as[SourcedDoc]
         .groupByKey(_.source)
         .transformWithState(new PerKeyQuota(maxPerKey), TimeMode.None(),
           OutputMode.Append(), Encoders.product[SourcedDoc]).toDF(),
-        OutputMode.Append, queryName)
-      owned.catalog.dropTempView(queryName)
-      admitted.queryExecution.analyzed
+        OutputMode.Append, queryName).queryExecution.analyzed
     }
     org.apache.spark.sql.graft.Bridge.ofRows(spark, sink)
   }
@@ -430,13 +428,18 @@ object StreamingOps {
       .option("maxFilesPerTrigger", 1).parquet(dir)
 
   /** `stream` run over all its input (AvailableNow) into a memory sink:
-    * the sink's rows, as the view `queryName` of the stream's session.
+    * the sink's rows, as a frame of the stream's session. The frame keeps
+    * the sink's resolved plan, so the sink's view `queryName` is dropped
+    * and no view is left in that session.
     */
   private def drain(stream: DataFrame, mode: OutputMode,
       queryName: String): DataFrame = {
+    val spark = stream.sparkSession
     stream.writeStream.outputMode(mode).format("memory")
       .queryName(queryName).trigger(Trigger.AvailableNow()).start()
       .awaitTermination()
-    stream.sparkSession.table(queryName)
+    val rows = spark.table(queryName)
+    spark.catalog.dropTempView(queryName)
+    rows
   }
 }

@@ -16,4 +16,7 @@ trait SparkSpec extends AnyFunSuite {
 
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
+
+  /** The generated sf0.01 tables (TESTDATA.md). */
+  val sf01: String = "/root/testdata/sf0.01"
 }

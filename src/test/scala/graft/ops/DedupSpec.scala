@@ -309,6 +309,33 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("WordChunks equals the builtin chunk chain on documents and edges") {
+    def same(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
+      val k = df.select(col("doc_id"), Dedup.wordChunks(col("text"), w)
+        .as("lines"))
+      val r = df.select(col("doc_id"),
+        BuiltinReferences.wordChunks(col("text"), w).as("lines"))
+      assert(k.schema == r.schema, s"w=$w")
+      assert(k.exceptAll(r).isEmpty && r.exceptAll(k).isEmpty, s"w=$w")
+    }
+    val docs = spark.read.parquet(s"$sf01/documents.parquet")
+    for (w <- Seq(1, 5)) same(docs, w)
+    // empty tokens from leading, trailing and doubled spaces; one word;
+    // exactly w and w + 1 words; multi-byte chars; null text (one null
+    // line, as the builtin gives)
+    val edges = Seq((1L, ""), (2L, " lead"), (3L, "trail "), (4L, "  "),
+      (5L, "a  b   c d"), (6L, "one"), (7L, "a b c"), (8L, "a b c d"),
+      (9L, "héllo wörld ñandú 日本語 テキスト ok"),
+      (10L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    for (w <- Seq(1, 3)) same(edges, w)
+    val got = edges.select(col("doc_id"), Dedup.wordChunks(col("text"), 3))
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(got(1L) == Seq(""))
+    assert(got(5L) == Seq("a  b", "  c", "d"))
+    assert(got(8L) == Seq("a b c", "d"))
+    assert(got(10L) == Seq(null))
+  }
+
   test("loopParts: 32MB/task rule, floor 1, cluster-derived cap") {
     // KB-scale loop relations collapse to one task
     assert(Dedup.loopParts(1000L, 32L, 32) == 1)
@@ -592,6 +619,18 @@ class DedupSpec extends SparkSpec {
       Dedup.connectedComponents(chain, "id_a", "id_b", 5, false, 0L))
     assert(e.getMessage.contains("34 cross-label edges left after 5 " +
       "rounds"), e.getMessage)
+  }
+
+  test("kCore throws when maxIters rounds leave sub-k nodes, and drops " +
+      "its edge cache") {
+    // a 60-node chain's 2-core is empty, but each round peels only the
+    // two current ends; nothing else here needs the shared cache
+    spark.sharedState.cacheManager.clearCache()
+    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](
+      Dedup.kCore(chain, "a", "b", k = 2, maxIters = 5))
+    assert(e.getMessage.contains("after 5 rounds"), e.getMessage)
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 
   test("incremental dedup: bloom path equals the plain anti join") {

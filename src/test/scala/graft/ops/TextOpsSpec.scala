@@ -80,6 +80,49 @@ class TextOpsSpec extends SparkSpec {
     assert(r.getAs[Double]("top_bigram_char_frac") == 0.6522)
   }
 
+  test("repetition signals equal their builtin reference on documents " +
+      "and edges") {
+    def same(df: org.apache.spark.sql.DataFrame, w: Int): Unit = {
+      val k = TextOps.repetitionSignals(df, "doc_id", "text", w)
+      val r = BuiltinReferences.repetitionSignals(df, "doc_id", "text", w)
+      assert(k.schema == r.schema, s"w=$w")
+      assert(k.exceptAll(r).isEmpty && r.exceptAll(k).isEmpty, s"w=$w")
+    }
+    val docs = spark.read.parquet(s"$sf01/documents.parquet")
+    for (w <- Seq(2, 5)) same(docs, w)
+    // empty tokens, one word, exactly w and w + 1 words, multi-byte chars
+    // (length counts chars), tied bigram counts ("w x", "x y" and "z w"
+    // twice each; in row 9 every bigram once) and null text (one null
+    // line)
+    val edges = Seq((1L, " lead"), (2L, "trail "), (3L, "a  b  a  b"),
+      (4L, "one"), (5L, "a b c"), (6L, "a b c d"),
+      (7L, "日本 ñandú 日本 ñandú héllo 日本 ñandú"),
+      (8L, "z w x y z w x y q"), (9L, "b a a b"),
+      (10L, null.asInstanceOf[String])).toDF("doc_id", "text")
+    for (w <- Seq(1, 3)) same(edges, w)
+    val got = TextOps.repetitionSignals(edges, "doc_id", "text", 3)
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(got(8L).getAs[String]("top_bigram") == "w x")
+    assert(got(9L).getAs[String]("top_bigram") == "a a")
+    assert(got(7L).getAs[String]("top_bigram") == "日本 ñandú")
+    assert(got(7L).getAs[Long]("top_bigram_count") == 3)
+    val nul = got(10L)
+    assert(nul.getAs[Long]("n_lines") == 1 && nul.isNullAt(4) &&
+      nul.isNullAt(5) && nul.isNullAt(6))
+    // "" is one empty line and one empty bigram: both forms divide by
+    // its zero chars, which ANSI mode rejects
+    val empty = Seq((1L, "")).toDF("doc_id", "text")
+    for (e <- Seq(
+        intercept[ArithmeticException](TextOps.repetitionSignals(
+          empty, "doc_id", "text", 5).collect()),
+        intercept[ArithmeticException](BuiltinReferences.repetitionSignals(
+          empty, "doc_id", "text", 5).collect()))) {
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"), e)
+    }
+    assert(empty.select(graft.functions.RepetitionCounts(col("text"), 5))
+      .head().getStruct(0).toSeq == Seq(1L, 0L, 0L, 0L, "", 1L))
+  }
+
   test("sequenceChunks: strided windows with truncated tails") {
     import spark.implicits._
     // 5 tokens, seqLen 3, stride 2 → starts 0,2,4: [a b c][c d e][e]

@@ -104,6 +104,61 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("stream entries leave a fresh caller's temp views as they were") {
+    for (name <- Seq("st2b_stream_batch_equiv",
+        "st4b_interval_join_stream_equiv", "st6_stream_dedup",
+        "st7_per_source_quota", "st9_stream_static_enrich",
+        "st10_stream_decontam", "st14_stream_sketch")) {
+      val caller = spark.newSession()
+      def views = caller.catalog.listTables().collect()
+        .filter(_.isTemporary).map(_.name).toSet
+      val before = views
+      SparkEntry.queries(name)(caller, sf).collect()
+      assert(views == before, name)
+    }
+  }
+
+  /** Every node of `name`'s executed plan, cached plans included. */
+  private def nodesOf(name: String)
+  : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{
+      AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def flatten(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+      case q: QueryStageExec => flatten(q.plan)
+      case i: InMemoryTableScanExec => flatten(i.relation.cachedPlan)
+      case other => other.children.flatMap(flatten)
+    })
+    flatten(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+  }
+
+  test("ts7: repetition counts run as one kernel, no interpreted lambda") {
+    import org.apache.spark.sql.catalyst.expressions.{
+      ArrayAggregate, LambdaFunction}
+    val exprs = nodesOf("ts7_repetition").flatMap(_.expressions)
+      .flatMap(_.collect { case e => e })
+    assert(!exprs.exists(e => e.isInstanceOf[LambdaFunction] ||
+      e.isInstanceOf[ArrayAggregate]), exprs.mkString("\n").take(3000))
+    assert(exprs.exists(_.nodeName == "RepetitionCounts"))
+  }
+
+  test("dd8/ts13: lines come from the WordChunks kernel, not a " +
+      "transform over chunk indices") {
+    import org.apache.spark.sql.catalyst.expressions.{
+      ArrayTransform, Sequence}
+    for (name <- Seq("dd8_line_dedup", "ts13_c4_clean")) {
+      val exprs = nodesOf(name).flatMap(_.expressions)
+        .flatMap(_.collect { case e => e })
+      assert(!exprs.exists {
+        case t: ArrayTransform => t.argument.isInstanceOf[Sequence]
+        case _ => false
+      }, name)
+      assert(exprs.exists(_.nodeName == "WordChunks"), name)
+    }
+  }
+
   test("q17: the correlated avg-quantity subquery decorrelates to an " +
       "aggregate join") {
     val opt = SparkEntry.queries("q17_small_qty_revenue")(spark, sf)

@@ -3,6 +3,7 @@
 dumped by graft.Verify, run the matching oracle SQL in DuckDB over the same
 sf tables and compare (rows, schema names, values). Usage:
     python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+Exits 1 when any entry is flagged XX (a mismatch or an oracle SQL error).
 """
 import sys, json, glob, os
 import duckdb
@@ -50,8 +51,11 @@ for d in sorted(os.listdir(out)):
     results[d] = mismatch or "OK"
 
 ok = sum(1 for v in results.values() if v == "OK")
+bad = 0
 for k, v in sorted(results.items()):
     flag = "  " if v == "OK" or v.startswith("rows-only") else "XX"
+    bad += flag == "XX"
     print(f"{flag} {k}: {v}")
 print(f"\n{ok} OK / {len(results)} total "
       f"({sum(1 for v in results.values() if v.startswith('rows-only'))} rows-only)")
+sys.exit(1 if bad else 0)
