@@ -109,14 +109,18 @@ object Bench {
     * written/read across all tasks, total spill (memory+disk), and the
     * single largest per-task peak execution memory — the four numbers that
     * say whether a plan's shuffle would survive a 100× scale-up (bytes
-    * growth rate) and whether any one task is a memory hot-spot.
+    * growth rate) and whether any one task is a memory hot-spot — plus the
+    * Spark jobs the run started (a per-job fixed cost the task totals
+    * do not show).
     */
   private[graft] case class RunMetrics(shuffleReadMB: Double,
-      shuffleWriteMB: Double, spillMB: Double, peakTaskMemMB: Double) {
+      shuffleWriteMB: Double, spillMB: Double, peakTaskMemMB: Double,
+      jobs: Long = 0L) {
     def json: String =
       f""""shuffle_read_mb":$shuffleReadMB%.1f,""" +
         f""""shuffle_write_mb":$shuffleWriteMB%.1f,""" +
-        f""""spill_mb":$spillMB%.1f,"peak_task_mem_mb":$peakTaskMemMB%.1f"""
+        f""""spill_mb":$spillMB%.1f,"peak_task_mem_mb":$peakTaskMemMB%.1f,""" +
+        s""""jobs":$jobs"""
   }
 
   /** SparkListener accumulating task metrics between [[reset]] and
@@ -133,6 +137,10 @@ object Bench {
     private val write = new java.util.concurrent.atomic.AtomicLong
     private val spill = new java.util.concurrent.atomic.AtomicLong
     private val peak = new java.util.concurrent.atomic.AtomicLong
+    private val jobs = new java.util.concurrent.atomic.AtomicLong
+    override def onJobStart(
+        js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.incrementAndGet(): Unit
     override def onTaskEnd(
         te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = te.taskMetrics
@@ -145,11 +153,11 @@ object Bench {
     }
     private def drain(): Unit = Thread.sleep(300)
     def reset(): Unit = { drain()
-      read.set(0); write.set(0); spill.set(0); peak.set(0) }
+      read.set(0); write.set(0); spill.set(0); peak.set(0); jobs.set(0) }
     def snapshot(): RunMetrics = {
       drain()
       RunMetrics(read.get / 1e6, write.get / 1e6, spill.get / 1e6,
-        peak.get / 1e6)
+        peak.get / 1e6, jobs.get)
     }
   }
 
@@ -655,7 +663,7 @@ object Bench {
       "\",\"warmup\":(-?\\d+\\.\\d+),\"times\":\\[([0-9.,]*)\\]" +
       "(?:,\"shuffle_read_mb\":(-?[0-9.]+),\"shuffle_write_mb\":" +
       "(-?[0-9.]+),\"spill_mb\":(-?[0-9.]+)," +
-      "\"peak_task_mem_mb\":(-?[0-9.]+))?" +
+      "\"peak_task_mem_mb\":(-?[0-9.]+)(?:,\"jobs\":(\\d+))?)?" +
       "(?:,\"gc_sec\":\\[([0-9.,]*)\\],\"steal_sec\":\\[([0-9.,]*)\\]" +
       "(?:,\"iowait_sec\":\\[([0-9.,]*)\\]" +
       "(?:,\"cpu_sec\":\\[([0-9.,]*)\\])?)?)?").r
@@ -665,11 +673,12 @@ object Bench {
       .flatMap(l => pat.findFirstMatchIn(l).map(m => Detail(
         m.group(1).toDouble, nums(m.group(2)),
         Option(m.group(3)).map(_ => RunMetrics(m.group(3).toDouble,
-          m.group(4).toDouble, m.group(5).toDouble, m.group(6).toDouble)),
-        Option(m.group(7)).fold(Seq.empty[Double])(nums),
+          m.group(4).toDouble, m.group(5).toDouble, m.group(6).toDouble,
+          Option(m.group(7)).fold(0L)(_.toLong))),
         Option(m.group(8)).fold(Seq.empty[Double])(nums),
         Option(m.group(9)).fold(Seq.empty[Double])(nums),
-        Option(m.group(10)).fold(Seq.empty[Double])(nums))))
+        Option(m.group(10)).fold(Seq.empty[Double])(nums),
+        Option(m.group(11)).fold(Seq.empty[Double])(nums))))
       .nextOption()
   }
 }

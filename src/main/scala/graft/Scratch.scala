@@ -78,7 +78,8 @@ object Scratch {
   : org.apache.spark.sql.DataFrame = {
     val path = dir(prefix)
     df.write.mode("overwrite").parquet(path)
-    df.sparkSession.read.parquet(path)
+    // read back under the schema just written: no inference job
+    df.sparkSession.read.schema(df.schema).parquet(path)
   }
 
   private def delete(p: java.nio.file.Path): Unit = {

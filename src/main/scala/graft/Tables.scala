@@ -1,18 +1,28 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Harness-table readers (TESTDATA.md). One parquet file per table under the
-  * sf directory. All reads go through here so scan options stay uniform.
+  * sf directory. All reads go through here so scan options stay uniform,
+  * and this is the one module that decides how a table's schema is
+  * learned: from the file's footer, read on the driver
+  * ([[Bridge.parquetSchema]]), and handed to the read. A plain
+  * `spark.read.parquet(path)` would derive the same schema in a one-task
+  * Spark job before the query is even planned; a read under a given schema
+  * runs none.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    spark.read.schema(Bridge.parquetSchema(spark, path, nanosAsLong = false))
+      .parquet(path)
+  }
 
   /** Decouple downstream parallelism from input split count for
     * compute-bound stages: the harness tables are single-row-group parquet
@@ -37,14 +47,13 @@ object Tables {
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
   /** The schema of the parquet at `path` as derived with
-    * `spark.sql.legacy.parquet.nanosAsLong` on, in an [[OwnedSession]]: a
-    * TIMESTAMP(NANOS) column, which the plain derivation rejects
-    * ([PARQUET_TYPE_ILLEGAL]), comes out as epoch-nanos LONG. The flag only
-    * derives the schema: a read under it in any session returns LONG.
+    * `spark.sql.legacy.parquet.nanosAsLong` on: a TIMESTAMP(NANOS) column,
+    * which the plain derivation rejects ([PARQUET_TYPE_ILLEGAL]), comes out
+    * as epoch-nanos LONG. The flag only derives the schema, and is never set
+    * on `s`: a read under this schema in any session returns LONG.
     */
   def parquetSchema(s: SparkSession, path: String): StructType =
-    OwnedSession(s, Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))(
-      _.read.parquet(path).schema)
+    Bridge.parquetSchema(s, path, nanosAsLong = true)
 
   /** The parquet at `path`, read in `s` under [[parquetSchema]]. */
   def parquet(s: SparkSession, path: String): DataFrame =

@@ -112,10 +112,10 @@ object Dedup {
   /** Word k-grams of a token array — since r16 the fused
     * [[graft.functions.GramStrings]] expression (one compiled pass per
     * row). The builtin formulation it replays bit-exact is
-    * [[wordGramsChain]] (kept as the semantic reference, and what the
-    * DuckDB oracle re-derives): zip_with-ing k shifted slices, docs
-    * shorter than k yielding their whole text as the single gram. The
-    * chain's `zip_with`s (+ per-element lambda `concat`) are
+    * `BuiltinReferences.wordGramsChain` in test scope (the semantic
+    * reference, and what the DuckDB oracle re-derives): zip_with-ing k
+    * shifted slices, docs shorter than k yielding their whole text as the
+    * single gram. The chain's `zip_with`s (+ per-element lambda `concat`) are
     * CodegenFallback — interpreted per element — and each of its k
     * `slice` steps rewalks the array; the fused pass measured 1.6–3.5×
     * cheaper per evaluation at sf0.1 (numbers in GramStrings' scaladoc),
@@ -123,19 +123,6 @@ object Dedup {
     */
   def wordGrams(toks: Column, k: Int): Column =
     graft.functions.GramStrings(toks, k)
-
-  /** The builtin-only formulation of [[wordGrams]] (k slices zip_with'd,
-    * one O(n) pass — itself ~7× over the naive O(n·k) transform+slice
-    * form that also re-evaluates inside Generate nodes). Bit-identical —
-    * the semantic reference GramStrings' parity tests replay against.
-    */
-  private[ops] def wordGramsChain(toks: Column, k: Int): Column = {
-    val len = greatest(size(toks) - (k - 1), lit(1))
-    val joined = (0 until k)
-      .map(i => slice(toks, lit(i + 1), len))
-      .reduce((a, b) => zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
-    when(size(toks) < k, array(concat_ws(" ", toks))).otherwise(joined)
-  }
 
   /** Distinct word k-shingles per doc as an ARRAY column — stays row-local
     * (no explode), so everything built on it is shuffle-free. The
@@ -201,25 +188,6 @@ object Dedup {
     // is re-evaluated per reference.
     sh.select(col(idCol) +: (0 until numHashes).map(i =>
       element_at(col("sig"), i + 1).as(s"h$i")): _*)
-  }
-
-  /** The portable builtin-only formulation of [[minhashSignatures]]
-    * (numHashes× transform + array_min). Bit-identical — the semantic
-    * reference for the native expression.
-    */
-  private[ops] def minhashSignaturesChain(df: DataFrame, idCol: String,
-      textCol: String, k: Int, numHashes: Int): DataFrame = {
-    // builtin-only all the way down (wordGramsChain, not the fused
-    // GramStrings) — this IS the semantic reference the native
-    // expressions are parity-tested against
-    val sh = df.select(col(idCol), tokens(col(textCol)).as("toks"))
-      .select(col(idCol),
-        array_distinct(wordGramsChain(col("toks"), k)).as("shingles"))
-      .withColumn("bh", transform(col("shingles"), s => xxhash64(s)))
-    val sigCols = (0 until numHashes).map { i =>
-      array_min(transform(col("bh"), h => xxhash64(h, lit(i)))).as(s"h$i")
-    }
-    sh.select(col(idCol) +: sigCols: _*)
   }
 
   /** LSH band hashes: numHashes = bands × rowsPerBand; band j hashes
@@ -291,7 +259,8 @@ object Dedup {
     * (64 counters in a single codegen'd loop) — zero shuffles vs the
     * classic explode + 64-agg groupBy, and none of the 64-fold builtin
     * chain's repeated array passes / codegen blow-up (see
-    * [[simhash64Chain]], kept as the equivalence reference).
+    * `BuiltinReferences.simhash64Chain` in test scope, kept as the
+    * equivalence reference).
     */
   def simhash64(df: DataFrame, idCol: String, textCol: String): DataFrame =
     // GramHashes at k=1 IS transform(toks, t => xxhash64(t)) — the token
@@ -300,25 +269,6 @@ object Dedup {
     df.select(col(idCol),
       graft.functions.SimHash64(
         graft.functions.GramHashes(tokens(col(textCol)), 1)).as("simhash"))
-
-  /** The portable builtin-only formulation of [[simhash64]] (64 aggregate
-    * folds OR-ed together). Bit-identical on non-null input — DedupSpec
-    * asserts it against the native expression — but re-reads the hash
-    * array 64×; kept as the semantic reference and for engines without
-    * the extension registered.
-    */
-  private[ops] def simhash64Chain(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val withHashes = df.select(col(idCol),
-      transform(tokens(col(textCol)), t => xxhash64(t)).as("thashes"))
-    val fp = (0 until 64).map { i =>
-      val bitSum = aggregate(col("thashes"), lit(0),
-        (acc, h) => acc +
-          when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      when(bitSum > 0, shiftleft(lit(1L), i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-    withHashes.select(col(idCol), fp.as("simhash"))
-  }
 
   /** Exact n-gram Jaccard similarity for doc pairs within the same blocking
     * group, via inverted-index buckets (gram → docs), never a cross join.

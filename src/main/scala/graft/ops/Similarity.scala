@@ -236,21 +236,6 @@ object Similarity {
       .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
   }
 
-  /** Exact all-pairs scan (upper-triangle cross join) — O(n²); small-n
-    * fallback ONLY (e.g. a bounded id block that fits one executor). The
-    * default [[thresholdPairs]] is the scale path.
-    */
-  def thresholdPairsExact(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val a = df.select(col(idCol).as("id_a"), col(vecCol).as("vec_a"))
-    val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vec_b"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("sim", cosine(col("vec_a"), col("vec_b")))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 4).as("sim"))
-  }
-
   /** IVF-style ANN: centroids per cluster (elementwise mean via posexplode —
     * one shuffle keyed by (cluster, position)), queries probe their nearest
     * `nprobe` centroids, search restricted to those clusters' members.

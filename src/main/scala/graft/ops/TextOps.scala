@@ -86,18 +86,6 @@ object TextOps {
     round((lengthTerm + stopTerm + punctTerm) / 3.0, 4)
   }
 
-  /** Single-expression convenience form (recomputes the counts — fine
-    * standalone; multi-feature pipelines should select [[rawCounts]]
-    * first and use the `FromCounts` variants).
-    */
-  def qualityFeatures(text: Column): Seq[(String, Column)] = {
-    val chars = length(text)
-    Seq("n_chars_q" -> chars.cast("long"),
-      "n_words" -> wordCount(text).cast("long")) ++
-      qualityFeaturesFromCounts(chars, wordCount(text), punctCount(text),
-        markerCount(text, stopwords))
-  }
-
   /** Exact corpus TF-IDF: per-(doc, term) score = tf × ln(N/df).
     * SINGLE tokenize pass: term frequency aggregates the exploded token
     * relation by (doc, term); document frequency is derived FROM tf

@@ -1,8 +1,18 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
+import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made the classic converters
   * `private[sql]`; custom native expressions need them to surface as
@@ -42,6 +52,39 @@ object Bridge {
       case Some(p) => classic.setActiveSession(p)
       case None => classic.clearActiveSession()
     }
+  }
+
+  /** The schema `spark.read.parquet(path)` infers (schema merging off, the
+    * default), derived on the driver: Spark's inference opens one footer,
+    * `_common_metadata`, else `_metadata`, else the first data file by
+    * path, in a one-task job; this opens the same footer here and converts
+    * it with Spark's own converter under the session's SQL conf, with
+    * `nanosAsLong` also on when asked (in a copy of that conf: the
+    * session's own is never set).
+    */
+  def parquetSchema(spark: SparkSession, path: String,
+      nanosAsLong: Boolean): StructType = {
+    val session =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val state = session.sessionState
+    val rank = Map("_common_metadata" -> 0, "_metadata" -> 1)
+    val file = new InMemoryFileIndex(session, Seq(new Path(path)), Map.empty,
+        None).allFiles()
+      .minByOption(f =>
+        (rank.getOrElse(f.getPath.getName, 2), f.getPath.toString))
+      .getOrElse(
+        throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
+    val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, state.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    val conf = if (!nanosAsLong) state.conf else {
+      val c = state.conf.clone()
+      c.setConf(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, true)
+      c
+    }
+    // a file read's schema is all-nullable, whatever the footer declares
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(conf)).asNullable
   }
 
   /** Execute a (possibly hand-rewritten) LogicalPlan as a DataFrame —

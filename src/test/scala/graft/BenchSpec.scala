@@ -17,7 +17,7 @@ class BenchSpec extends AnyFunSuite {
 
   test("round-trips a detail line with task metrics") {
     val d = Bench.Detail(11.428, Seq(4.765, 4.082, 2.285),
-      Some(Bench.RunMetrics(123.4, 56.7, 0.0, 17.3)))
+      Some(Bench.RunMetrics(123.4, 56.7, 0.0, 17.3, jobs = 19)))
     val parsed = Bench.parseDetailLine("a2_pivot",
       List("some spark log line", emit("a2_pivot", d), "trailing noise"))
     assert(parsed.contains(d))

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[OwnedSession]] is the only code in `src/main` that sets conf or makes
   * a session; the one other conf set is [[etl.Extract.readWikiJson]]'s
-  * `caseSensitive` (its scaladoc says why).
+  * `caseSensitive` (its scaladoc says why). Three override sets use it:
+  * the movie ETL's, j11's and `streamPerKeyQuota`'s. [[Tables]] derives
+  * its `nanosAsLong` schema on the driver and needs no session.
   */
 class OwnedSessionSpec extends AnyFunSuite {
 

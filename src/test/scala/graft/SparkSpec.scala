@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,4 +23,27 @@ trait SparkSpec extends AnyFunSuite {
 
   /** The generated sf0.01 tables (TESTDATA.md). */
   val sf01: String = "/root/testdata/sf0.01"
+  /** The sf0.001 tables, beside [[sf01]]. */
+  val sf001: String = s"${new java.io.File(sf01).getParent}/sf0.001"
+
+  /** Runs `body` with `listener` on the bus, every event of it delivered. */
+  def listening(listener: SparkListener)(body: => Any): Unit = {
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The job-start events of `body`, in start order. */
+  def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      SparkListenerJobStart]
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+    })(body)
+    seen.asScala.toSeq
+  }
 }

@@ -1,14 +1,21 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import graft.streaming.StreamingOps
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
-/** The events `ts` column has shipped as TIMESTAMP(NANOS) (read as
-  * epoch-nanos LONG under the legacy flag) and as TIMESTAMP(MICROS, NTZ)
-  * across testdata drops; [[Tables.normalizeTs]] must map either to the
-  * same session-zone TimestampType instant.
+/** [[Tables]] learns each table's schema from its parquet footer on the
+  * driver: the schema must be the one Spark's inference derives, and
+  * learning it must start no Spark job. The events `ts` column has shipped
+  * as TIMESTAMP(NANOS) (read as epoch-nanos LONG under the legacy flag)
+  * and as TIMESTAMP(MICROS, NTZ) across testdata drops;
+  * [[Tables.normalizeTs]] must map either to the same session-zone
+  * TimestampType instant.
   */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -53,6 +60,71 @@ class TablesSpec extends SparkSpec {
     val before = caller.conf.getAll
     body(caller)
     assert(caller.conf.getAll == before)
+  }
+
+  test("t reads every harness table under the schema parquet inference " +
+      "derives") {
+    Tables.names.foreach { n =>
+      val path = s"$sf001/$n.parquet"
+      val inferred = spark.read.parquet(path).schema
+      assert(Tables.t(spark, sf001, n).schema == inferred, n)
+      assert(Tables.parquetSchema(spark, path) == inferred, n)
+    }
+  }
+
+  test("a harness-table frame, its schema and its input files start no " +
+      "Spark job") {
+    val frames: Seq[(String, () => DataFrame)] =
+      Tables.names.map(n => n -> (() => Tables.t(spark, sf001, n))) :+
+        ("Tables.events" -> (() => Tables.events(spark, sf001)))
+    frames.foreach { case (n, build) =>
+      val jobs = jobsDuring {
+        val df = build()
+        df.schema
+        df.inputFiles
+      }
+      assert(jobs.isEmpty, s"$n started ${jobs.size} job(s)")
+    }
+  }
+
+  /** The derivation [[Tables.parquetSchema]] replaced: parquet inference
+    * in an owned session with the nanos flag on.
+    */
+  private def ownedSessionSchema(s: SparkSession, path: String)
+  : StructType =
+    OwnedSession(s, Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))(
+      _.read.parquet(path).schema)
+
+  test("parquetSchema derives a TIMESTAMP(NANOS) schema as the owned-" +
+      "session inference did, in no Spark job, leaving the caller's conf " +
+      "as it was") {
+    withFreshCaller { caller =>
+      Seq(nanosDir, s"$nanosDir/events.parquet").foreach { path =>
+        val reference = ownedSessionSchema(caller, path)
+        var got: StructType = null
+        val jobs = jobsDuring { got = Tables.parquetSchema(caller, path) }
+        assert(got == reference, path)
+        assert(got("ts").dataType == LongType, path)
+        assert(jobs.isEmpty, s"$path started ${jobs.size} job(s)")
+      }
+    }
+  }
+
+  test("parquetSchema on a directory reads the footer inference picks: " +
+      "the first data file by path") {
+    val mixed = Paths.get(Scratch.dir("mixed"))
+    def single(df: DataFrame, name: String): Unit = {
+      val out = Scratch.dir("single")
+      df.coalesce(1).write.mode("overwrite").parquet(out)
+      val part = Files.list(Paths.get(out)).filter(
+        _.getFileName.toString.endsWith(".parquet")).findFirst().get
+      Files.move(part, mixed.resolve(name))
+    }
+    single(Seq((1L, "x")).toDF("id", "s"), "b.parquet")
+    single(Seq((2L, 1.5)).toDF("id", "d"), "a.parquet")
+    val got = Tables.parquetSchema(spark, mixed.toString)
+    assert(got == spark.read.parquet(mixed.toString).schema)
+    assert(got.fieldNames.toSeq == Seq("id", "d"))
   }
 
   test("events reads a TIMESTAMP(NANOS) ts as its micros truncation, " +

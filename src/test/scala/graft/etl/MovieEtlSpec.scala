@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+import org.apache.spark.scheduler.{SparkListener,
   SparkListenerStageCompleted}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -91,27 +91,6 @@ class MovieEtlSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val emptyParts = spark.range(0).selectExpr("id", "cast(null as string) s")
       .repartition(3)
     assert(WikiClean.pruneMostlyNull(emptyParts).columns.isEmpty)
-  }
-
-  /** Runs `body` with `listener` on the bus, every event of it delivered. */
-  private def listening(listener: SparkListener)(body: => Any): Unit = {
-    val sc = spark.sparkContext
-    ListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      ListenerBus.drain(sc)
-    } finally sc.removeSparkListener(listener)
-  }
-
-  /** The job-start events of `body`, in start order. */
-  private def jobsDuring(body: => Any): Seq[SparkListenerJobStart] = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
-      SparkListenerJobStart]
-    listening(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
-    })(body)
-    seen.asScala.toSeq
   }
 
   test("clean profiles nulls in the job that materialises the wiki frame") {

@@ -164,7 +164,7 @@ class DedupSpec extends SparkSpec {
     val df = texts.toDF("doc_id", "text")
     val native = Dedup.simhash64(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val chain = Dedup.simhash64Chain(df, "doc_id", "text")
+    val chain = BuiltinReferences.simhash64Chain(df, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == chain)
   }
@@ -182,8 +182,8 @@ class DedupSpec extends SparkSpec {
         .map(r => (0 until r.length).map(i =>
           if (r.isNullAt(i)) null else r.get(i)).toSeq).toSeq
     val native = rows(Dedup.minhashSignatures(df, "doc_id", "text", 3, 16))
-    val chain = rows(Dedup.minhashSignaturesChain(df, "doc_id", "text", 3,
-      16))
+    val chain = rows(BuiltinReferences.minhashSignaturesChain(df, "doc_id",
+      "text", 3, 16))
     assert(native == chain)
   }
 
@@ -222,7 +222,8 @@ class DedupSpec extends SparkSpec {
           (if (r.isNullAt(1)) null else r.getSeq[Long](1).toList)).toMap
       val chainElCol =
         if (k == 1) transform(toks, t => xxhash64(t))
-        else transform(Dedup.wordGramsChain(toks, k), g => xxhash64(g))
+        else transform(BuiltinReferences.wordGramsChain(toks, k),
+          g => xxhash64(g))
       val chainEl = df.select(col("doc_id"), chainElCol.as("h"))
         .collect().map(r => r.getLong(0) ->
           (if (r.isNullAt(1)) null else r.getSeq[Long](1).toList)).toMap
@@ -268,7 +269,7 @@ class DedupSpec extends SparkSpec {
         (if (r.isNullAt(1)) null else r.getSeq[String](1).toList)).toMap
     for (k <- Seq(1, 2, 3, 9)) {
       val toks = Dedup.tokens(col("text"))
-      val chain = Dedup.wordGramsChain(toks, k)
+      val chain = BuiltinReferences.wordGramsChain(toks, k)
       assert(rows(df.select(col("doc_id"),
           graft.functions.GramStrings(toks, k).as("g"))) ==
         rows(df.select(col("doc_id"), chain.as("g"))), s"plain k=$k")
@@ -295,7 +296,7 @@ class DedupSpec extends SparkSpec {
       (2L, Seq(null, "x")),
       (3L, Seq[String](null, null))).toDF("doc_id", "toks")
     for (k <- Seq(1, 2, 3, 5)) {
-      val chain = Dedup.wordGramsChain(col("toks"), k)
+      val chain = BuiltinReferences.wordGramsChain(col("toks"), k)
       assert(rows(withNulls.select(col("doc_id"),
           graft.functions.GramStrings(col("toks"), k).as("g"))) ==
         rows(withNulls.select(col("doc_id"), chain.as("g"))),

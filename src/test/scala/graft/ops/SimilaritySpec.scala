@@ -58,7 +58,7 @@ class SimilaritySpec extends SparkSpec {
   test("bucketed thresholdPairs equals the exact all-pairs scan") {
     // 0.3/0.6 exercise the grid branch, 0.9 the LSH branch (see dispatch)
     for (t <- Seq(0.3, 0.6, 0.9)) {
-      val exact = Similarity.thresholdPairsExact(
+      val exact = BuiltinReferences.thresholdPairsExact(
           many, "vec_id", "embedding", t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
@@ -72,7 +72,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("both named strategies equal exact regardless of dispatch") {
     for (t <- Seq(0.5, 0.9)) {
-      val exact = Similarity.thresholdPairsExact(
+      val exact = BuiltinReferences.thresholdPairsExact(
           many, "vec_id", "embedding", t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSet
@@ -144,7 +144,7 @@ class SimilaritySpec extends SparkSpec {
       def mine(f: => org.apache.spark.sql.DataFrame) =
         f.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
           .toSet
-      val exact = mine(Similarity.thresholdPairsExact(
+      val exact = mine(BuiltinReferences.thresholdPairsExact(
         df, "vec_id", "embedding", t))
       val grid = mine(Similarity.gridThresholdPairs(
         df, "vec_id", "embedding", t, blocks = 5))

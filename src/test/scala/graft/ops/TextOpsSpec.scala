@@ -19,7 +19,7 @@ class TextOpsSpec extends SparkSpec {
 
   test("quality features: counts and ratios from integer arithmetic") {
     val df = Seq("the quick fox! runs.").toDF("text")
-    val feats = TextOps.qualityFeatures(col("text"))
+    val feats = BuiltinReferences.qualityFeatures(col("text"))
       .map { case (n, c) => c.as(n) }
     val r = df.select(feats: _*).collect().head
     assert(r.getAs[Long]("n_chars_q") == 20L)
